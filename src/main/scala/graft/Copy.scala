@@ -24,6 +24,13 @@ import graft.plan.{Analyzer, PlanConfig}
   * Phase order mirrors the orchestrator: expand table list → analyze ALL
   * tables (fail fast before any copy, `SmartBulkCopy.cs:155-161`) → copy
   * each → reconcile each (`CheckResults`, `SmartBulkCopy.cs:216-245`).
+  * Like the reference's `tasks` workers draining one `ConcurrentQueue`
+  * (`SmartBulkCopy.cs:165-194`), every phase runs its tables concurrently
+  * on `tasks` driver threads ([[inOrder]]), so Spark's scheduler fills
+  * the cores one table's job leaves idle with another table's tasks; the
+  * phases themselves stay barriers, and every decision is taken over the
+  * per-table results in list order, so exit codes do not depend on which
+  * table finishes first.
   */
 object Copy {
 
@@ -138,33 +145,51 @@ object Copy {
       return analysisExitCode(AnalysisOutcome.TableNotFound)
     }
 
-    // Analysis phase: collect + analyze every table BEFORE any copy —
-    // the first non-success outcome aborts the whole run with its code.
-    val analyzed: Seq[(TableMeta, TableMeta)] = tables.map { t =>
-      if (!Catalog.declared.contains(t) || !Pipeline.safetyCheck(spark, sfDir, t))
-        return analysisExitCode(AnalysisOutcome.TableNotFound)
-      val src = Catalog.collect(spark, sfDir, t)
-      val dst = destMeta.getOrElse(t, Pipeline.cleanDest(src))
-      Analyzer.analyze(src, dst, conf) match {
-        case _: AnalysisOutcome.Success => (src, dst)
-        case failure                    => return analysisExitCode(failure)
+    // every phase below drains all its tables on `tasks` driver threads,
+    // and ends for every table before the next phase begins
+    val width = conf.tasks
+
+    // Analysis phase: collect + analyze every table BEFORE any copy. The
+    // first non-success in LIST order aborts the whole run with its code
+    // (or its exception), exactly as the serial loop decided — never
+    // whichever table happened to finish first.
+    val analysis = inOrder(tables, width) { t =>
+      scala.util.Try {
+        if (!Catalog.declared.contains(t) || !Pipeline.safetyCheck(spark, sfDir, t))
+          Left(analysisExitCode(AnalysisOutcome.TableNotFound))
+        else {
+          val src = Catalog.collect(spark, sfDir, t)
+          val dst = destMeta.getOrElse(t, Pipeline.cleanDest(src))
+          Analyzer.analyze(src, dst, conf) match {
+            case _: AnalysisOutcome.Success => Right((src, dst))
+            case failure                    => Left(analysisExitCode(failure))
+          }
+        }
       }
     }
+    val analyzed: Seq[(TableMeta, TableMeta)] = analysis.map {
+      case scala.util.Success(Right(pair)) => pair
+      case scala.util.Success(Left(code))  => return code
+      case scala.util.Failure(e)           => throw e
+    }
+    // loads that share a destination run one after another, as one queue
+    // item: two concurrent writers would race on the same table
+    val byDest: Seq[Seq[(TableMeta, TableMeta)]] =
+      analyzed.map(_._2.name).distinct.map(d => analyzed.filter(_._2.name == d))
 
     // safe-check "readonly": footprint snapshot BEFORE the first slice
     // reads — stability is re-verified after the copy phase.
-    val preFootprint: Map[String, Map[String, (Long, Long)]] =
+    val preFootprint: Seq[(String, Map[String, (Long, Long)])] =
       if (safeCheckMode == "readonly")
-        analyzed.map { case (src, _) =>
+        inOrder(analyzed, width) { case (src, _) =>
           src.name -> Pipeline.sourceFootprint(spark, sfDir, src.name)
-        }.toMap
-      else Map.empty
+        }
+      else Nil
 
     // Copy phase: per-table errors don't stop the other tables (the
     // reference's worker pool drains the whole queue; errored items are
     // counted, `SmartBulkCopy.cs:246-250`).
-    var erroredTasks = 0
-    analyzed.foreach { case (src, dst) =>
+    val erroredTasks = inOrder(byDest, width)(_.count { case (src, dst) =>
       try {
         withCommandTimeout(spark, src.name, commandTimeoutSec) {
           if (jdbcDest)
@@ -185,23 +210,24 @@ object Copy {
               reconcile = false)
           postCopyHook(src.name)
         }
+        false
       } catch { case e: Exception =>
         // the reference's worker pool logs errored items as it counts
         // them — an exit 3 with no line naming the failed table(s) gives
         // the operator nothing to act on
         System.err.println(s"[copy] ${src.name} failed: $e")
-        erroredTasks += 1
+        true
       }
-    }
+    }).sum
     if (erroredTasks > 0) return 3
 
     // safe-check "readonly" re-stat: a source whose committed footprint
     // changed under the running slices may have fed different slices
     // different data — fail hard even if rowcounts happen to agree.
-    val mutatedSources = preFootprint.exists { case (name, before) =>
+    val mutatedSources = inOrder(preFootprint, width) { case (name, before) =>
       Pipeline.sourceFootprint(spark, sfDir, name) != before
     }
-    if (mutatedSources) return 2
+    if (mutatedSources.contains(true)) return 2
 
     // CheckResults phase (`SmartBulkCopy.cs:216-245`): recount both ends
     // after ALL copies are done. Source side reuses the analysis-phase
@@ -221,7 +247,7 @@ object Copy {
     //     stale analysis-phase number (and the per-process
     //     Catalog.collect cache would keep feeding that stale count to
     //     every later phase).
-    val allMatch = analyzed.forall { case (src, dst) =>
+    val reconciled = inOrder(analyzed, width) { case (src, dst) =>
       val destRows =
         // one-scalar COUNT(*) (Sinks.jdbcRowCount): spark.read.jdbc's
         // V1 relation has no aggregate pushdown, so counting through it
@@ -233,14 +259,14 @@ object Copy {
         else Scans.table(spark, sfDir, src.name).count()
       srcRows == destRows
     }
-    if (!allMatch) return 2
+    if (reconciled.contains(false)) return 2
 
     // SyncIdentity (`SmartBulkCopy.cs:227-244`): only after ALL rowcounts
     // check out; tables without an identity column are skipped (the
     // reference CTE's TableHasIdentity filter). Reseed to the source's
     // current value, then verify by reading the destination back.
     if (syncIdentity) {
-      val synced = analyzed.forall { case (src, dst) =>
+      val synced = inOrder(byDest, width)(_.forall { case (src, dst) =>
         Catalog.identityColumns.get(src.name).forall { idCol =>
           val ic = Sinks.identityCurrent(
             Scans.table(spark, sfDir, src.name), idCol)
@@ -260,8 +286,8 @@ object Copy {
             Sinks.identitySeed(spark, dest).contains((idCol, ic))
           }
         }
-      }
-      if (!synced) return 2
+      })
+      if (synced.contains(false)) return 2
     }
     0
   }
@@ -280,17 +306,8 @@ object Copy {
     if (timeoutSec <= 0) return body
     val sc = spark.sparkContext
     val groupId = s"graft-copy-$table"
-    // named + daemon: the worker is identifiable in thread dumps (the
-    // cleanup spec counts survivors by this prefix) and can never pin a
-    // JVM exit if an interrupt is swallowed mid-shutdown
     val exec = java.util.concurrent.Executors.newSingleThreadExecutor(
-      new java.util.concurrent.ThreadFactory {
-        def newThread(r: Runnable): Thread = {
-          val t = new Thread(r, s"graft-copy-timeout-$table")
-          t.setDaemon(true)
-          t
-        }
-      })
+      daemonThreads(_ => s"graft-copy-timeout-$table"))
     val fut = exec.submit(new java.util.concurrent.Callable[T] {
       def call(): T = {
         sc.setJobGroup(groupId, s"graft copy $table", interruptOnCancel = true)
@@ -315,6 +332,46 @@ object Copy {
         throw Option[Throwable](e.getCause).getOrElse(e)
     } finally exec.shutdownNow()
   }
+
+  /** The orchestrator's work queue — the reference's `tasks` workers
+    * draining one `ConcurrentQueue` (`SmartBulkCopy.cs:165-194`): `f`
+    * runs over every element of `xs` on at most `width` driver threads,
+    * and the results come back in INPUT order, so a caller folding them
+    * decides exactly as a serial loop over `xs` would. A failed call
+    * rethrows its cause, never the `ExecutionException` wrapper (the
+    * [[withCommandTimeout]] rule: an Error must stay an Error). The pool
+    * is shut down on every exit, interrupting calls still running behind
+    * a failure. Width 1 is the serial loop.
+    */
+  private[graft] def inOrder[A, B](xs: Seq[A], width: Int)(f: A => B): Seq[B] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(width, xs.size)),
+      daemonThreads(n => s"graft-copy-worker-$n"))
+    try {
+      val futures = xs.toVector.map(x =>
+        pool.submit(new java.util.concurrent.Callable[B] { def call(): B = f(x) }))
+      futures.map { fut =>
+        try fut.get()
+        catch { case e: java.util.concurrent.ExecutionException =>
+          throw Option[Throwable](e.getCause).getOrElse(e)
+        }
+      }
+    } finally pool.shutdownNow()
+  }
+
+  /** Named daemon threads (`name` gets a 1-based thread ordinal): the
+    * copy's workers are identifiable in thread dumps (the cleanup specs
+    * count survivors by prefix) and can never pin a JVM exit if an
+    * interrupt is swallowed mid-shutdown. */
+  private def daemonThreads(name: Int => String): java.util.concurrent.ThreadFactory =
+    new java.util.concurrent.ThreadFactory {
+      private val made = new java.util.concurrent.atomic.AtomicInteger
+      def newThread(r: Runnable): Thread = {
+        val t = new Thread(r, name(made.incrementAndGet()))
+        t.setDaemon(true)
+        t
+      }
+    }
 
   /** Config-file entry (testable seam): load the reference-schema JSON at
     * `path` and run the copy it describes. Any config-load failure exits

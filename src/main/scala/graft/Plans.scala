@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Plan auditor — dumps the formatted physical plan of selected declared
   * queries so scan pushdown (`PushedFilters`, `ReadSchema`), join

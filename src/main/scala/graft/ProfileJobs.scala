@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement-only lab harness (never run by the driver): per-query
   * Spark-job census under the EXACT bench session and noop-sink
@@ -45,7 +44,7 @@ object ProfileJobs {
     println(f"${"key"}%-34s ${"wall_s"}%8s ${"jobs"}%5s ${"job_s"}%8s ${"driver_s"}%9s")
     keys.foreach { case (name, fn) =>
       var line = ""
-      (1 to runs).foreach { i =>
+      (1 to runs).foreach { _ =>
         spark.catalog.clearCache()
         graft.ops.TextQueries.releaseCaches()
         jobs = 0; jobNanos = 0L

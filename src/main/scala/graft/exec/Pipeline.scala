@@ -13,10 +13,12 @@ import graft.meta.Catalog
   *   analyze → truncate → parallel copy → verify rowcounts → sync identity
   *
   * The reference drains a `ConcurrentQueue&lt;CopyInfo&gt;` with K worker
-  * threads (`SmartBulkCopy.cs:165-194`); here each table's slice fan-out is
-  * a union of slice DataFrames written in ONE job, so Spark's scheduler
-  * replaces the queue: every slice is at least one task, tasks run K-wide
-  * across the cluster, and task retries replace the per-item retry loop.
+  * threads (`SmartBulkCopy.cs:165-194`); here each table's slice fan-out
+  * is written in ONE job, so Spark's scheduler replaces the queue: every
+  * slice is at least one task, tasks run K-wide across the cluster, and
+  * task retries replace the per-item retry loop. Across tables the same
+  * holds: [[graft.Copy.run]] submits every table's job at once from
+  * `tasks` driver threads, and the scheduler interleaves their tasks.
   */
 object Pipeline {
 
@@ -160,10 +162,12 @@ object Pipeline {
 
   /** Build one table's copy DataFrame from its planned work items.
     *
-    * Physical slices stay a union of per-slice scans: each range
-    * predicate prunes its own row groups / partition dirs, so N scans
-    * read disjoint bytes — same total IO as one scan, and the reference
-    * shape (`TableAnalyzer.cs:288-352`).
+    * Physical slices over a source partitioned into `<pcol>=`
+    * directories stay a union of per-slice scans: each range predicate
+    * prunes its own partition dirs, so N scans read disjoint bytes —
+    * same total IO as one scan, and the reference shape
+    * (`TableAnalyzer.cs:288-352`). Over any other layout they take the
+    * one-scan fan-out below, like logical slices.
     *
     * Logical (hash-mod) slices get ONE scan + a shuffle fan-out instead:
     * a `pmod(key, N)` predicate cannot push down, so N slice scans would
@@ -187,33 +191,37 @@ object Pipeline {
         specs.size == n && specs.sorted == (0 until n)
       case _ => false
     }
-    // A complete physical set over a FLAT single-file source gets the
-    // same treatment: with no partition layout on disk there is nothing
-    // for the per-slice range predicates to prune, so N slice scans
-    // decode the same bytes N times. One scan + a shuffle on the
-    // partition ordinal reads once and lands whole partitions per task.
-    // (A directory-partitioned source keeps the per-slice union below —
-    // there the predicates prune disjoint directories, which is strictly
-    // better than shuffling 100 TB.) The ordinal function is total —
-    // every row lands in some partition — matching a real RANGE
-    // partition function; coverage is still enforced by the rowcount
-    // reconciliation.
-    val completePhysicalSet = items.head.slice match {
+    // A complete physical set over a source with no directory partitions
+    // on the partition column — one flat file, or the unpartitioned part
+    // files a Spark writer leaves — gets the same treatment: there is no
+    // partition directory for the per-slice range predicates to prune, so
+    // N slice scans decode every file N times. One scan + a shuffle on
+    // the partition ordinal reads once and lands whole partitions per
+    // task. (A source partitioned into `<pcol>=` directories keeps the
+    // per-slice union below — there the predicates prune disjoint
+    // directories, which is strictly better than shuffling 100 TB.) The
+    // ordinal function is total — every row lands in some partition —
+    // matching a real RANGE partition function; coverage is still
+    // enforced by the rowcount reconciliation.
+    val completePhysicalCol: Option[String] = items.head.slice match {
       case SliceSpec.Physical(pcol, _) if items.size > 1 =>
         val ns = items.map(_.slice).collect {
           case SliceSpec.Physical(c, n) if c == pcol => n
         }
-        ns.size == items.size && ns.sorted == (1 to items.size)
-      case _ => false
+        Some(pcol).filter(_ => ns.size == items.size && ns.sorted == (1 to items.size))
+      case _ => None
     }
-    def flatFileSource: Boolean = try {
-      // Hadoop FS, not java.io.File: the layout probe must see object
-      // stores too, or the one-scan fan-out would never engage exactly
-      // where re-decoding the source N times hurts most
-      val p = new org.apache.hadoop.fs.Path(
+    def unpartitionedOn(pcol: String): Boolean = try {
+      // the committed listing through the Hadoop FS, not java.io.File:
+      // the layout probe must see object stores too, or the one-scan
+      // fan-out would never engage exactly where re-decoding the source
+      // N times hurts most
+      val root = new org.apache.hadoop.fs.Path(
         s"$sfDir/${items.head.table.name}.parquet")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getFileStatus(p).isFile
+      val segments = Sinks.segmentsBelow(
+        root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+      Sinks.committedFiles(spark, root.toString)
+        .forall(f => !segments(f.getPath).exists(_.startsWith(s"$pcol=")))
     } catch { case _: Exception => false }
 
     if (completeLogicalSet) {
@@ -244,7 +252,7 @@ object Pipeline {
       val fanned = base
         .repartition(n, element_at(lit(ordinalHashReps(n)), (ord + 1).cast("int")))
       Scans.orderedWithinPartitions(fanned, item.orderHint)
-    } else if (completePhysicalSet && flatFileSource) {
+    } else if (completePhysicalCol.exists(unpartitionedOn)) {
       val item = items.head
       val SliceSpec.Physical(pcol, _) = item.slice: @unchecked
       val base = Scans.project(

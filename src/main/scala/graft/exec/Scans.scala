@@ -69,23 +69,18 @@ object Scans {
     * row groups by split midpoint), so every expression in the scan
     * stage runs on one core while the rest idle; the guide's unsplittable-
     * input remedy is a round-robin repartition immediately after the
-    * read (§2.5). Scale-adaptive, not a local constant: when the scan
-    * already carries at least the session's parallelism (any real multi-
-    * file corpus), this is the identity — no exchange is added at scale,
-    * and the local exchange only moves the pruned columns the caller
-    * selected. Apply AFTER projecting to the columns the kernel needs,
-    * so the exchange ships a proxy-sized row, never an unpruned payload.
-    */
-  def spread(spark: SparkSession, df: DataFrame): DataFrame =
-    spreadBytes(spark, df, -1L)
-
-  /** [[spread]] with the source's on-disk byte size known to the caller
-    * (pass -1 when unknown): the scan's split count is estimated as
-    * ceil(bytes / maxPartitionBytes) — the planner's own split rule —
-    * so the at-scale identity check costs a stat, not a physical-plan
-    * build per invocation. Unknown size falls back to spreading (the
-    * local corpora are all single-file; a mis-fired repartition of an
-    * already-wide scan costs one balanced exchange, never correctness).
+    * read (§2.5). Scale-adaptive, not a local constant: `bytes` is the
+    * source's on-disk size ([[tableBytes]]; -1 when unknown), the scan's
+    * split count is estimated as ceil(bytes / maxPartitionBytes) — the
+    * planner's own split rule, so the check costs a stat, not a
+    * physical-plan build — and when that already reaches the session's
+    * parallelism (any real multi-file corpus) this is the identity: no
+    * exchange is added at scale, and the local exchange only moves the
+    * pruned columns the caller selected. Unknown size falls back to
+    * spreading (a mis-fired repartition of an already-wide scan costs one
+    * balanced exchange, never correctness). Apply AFTER projecting to the
+    * columns the kernel needs, so the exchange ships a proxy-sized row,
+    * never an unpruned payload.
     */
   def spreadBytes(spark: SparkSession, df: DataFrame, bytes: Long): DataFrame = {
     val cores = spark.sparkContext.defaultParallelism
@@ -103,13 +98,19 @@ object Scans {
     * files below partition subdirectories, so a top-level-only sum read
     * ~0 bytes and mis-fired the spread exchange on an already-wide
     * corpus — the exact at-scale-identity guarantee spreadBytes exists
-    * to keep. */
+    * to keep. The walk never descends through a directory link below
+    * the table root, so a link cycle cannot recurse forever (a link to
+    * a FILE still counts its target's bytes; the root itself may be a
+    * link). */
   def tableBytes(sfDir: String, name: String): Long = {
-    def sizeOf(f: java.io.File): Long =
-      if (f.isFile) f.length()
-      else Option(f.listFiles()).map(_.iterator.map(sizeOf).sum).getOrElse(0L)
-    val f = new java.io.File(s"$sfDir/$name.parquet")
-    if (f.isFile || f.isDirectory) sizeOf(f) else -1L
+    import java.nio.file.{Files, Paths}
+    val root = Paths.get(s"$sfDir/$name.parquet")
+    if (!Files.exists(root)) -1L
+    else {
+      val walk = Files.walk(root.toRealPath())
+      try walk.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum()
+      finally walk.close()
+    }
   }
 
   /** Explicit-column-list projection, excluding computed / column-set /

@@ -63,11 +63,18 @@ object Sinks {
     */
   def committedRowCount(spark: SparkSession, path: String): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val files = committedFiles(spark, path)
-    // Footer reads are independent metadata GETs — fan them out on a
-    // bounded pool so reconciliation latency stays ~constant in file
-    // count against an object store (a serial loop would tail every
-    // copy with files × RTT on the driver).
+    footerRowCount(committedFiles(spark, path))(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(_, conf))
+  }
+
+  /** Sum of the parquet footer row counts of `files` (`open` turns one
+    * into a readable file). Footer reads are independent metadata GETs —
+    * fanned out on a bounded pool so the latency stays ~constant in file
+    * count against an object store (a serial loop would cost files × RTT
+    * on the driver). Shared by [[committedRowCount]] and the catalog's
+    * source count (`Catalog.collect`). */
+  def footerRowCount[F](files: Seq[F])(
+      open: F => org.apache.parquet.io.InputFile): Long =
     if (files.isEmpty) 0L
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -76,9 +83,7 @@ object Sinks {
         val futures = files.map { f =>
           pool.submit(new java.util.concurrent.Callable[Long] {
             def call(): Long = {
-              val in = org.apache.parquet.hadoop.util.HadoopInputFile
-                .fromStatus(f, conf)
-              val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+              val reader = org.apache.parquet.hadoop.ParquetFileReader.open(open(f))
               try reader.getRecordCount finally reader.close()
             }
           })
@@ -86,7 +91,6 @@ object Sinks {
         futures.map(_.get()).sum
       } finally pool.shutdown()
     }
-  }
 
   /** The COMMITTED parquet data files under a destination root, via the
     * Hadoop `FileSystem` of the path (works identically on local disk,
@@ -111,9 +115,18 @@ object Sinks {
   def hiddenBelow(
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path => Boolean = {
+    val segments = segmentsBelow(fs, root)
+    p => segments(p).exists(seg => seg.startsWith("_") || seg.startsWith("."))
+  }
+
+  /** The path segments of a file below `root` (directories, then the
+    * file name) — what the layout tests read: hidden-ness here, and
+    * `<col>=` partition directories in `Pipeline.copyFrame`. */
+  private[exec] def segmentsBelow(
+      fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path => Seq[String] = {
     val rootPath = fs.makeQualified(root).toUri.getPath
-    p => fs.makeQualified(p).toUri.getPath.stripPrefix(rootPath)
-      .split('/').exists(seg => seg.startsWith("_") || seg.startsWith("."))
+    p => fs.makeQualified(p).toUri.getPath.stripPrefix(rootPath).split('/').toSeq
   }
 
   /** The WHOLE committed-data-file predicate (regular file, `.parquet`

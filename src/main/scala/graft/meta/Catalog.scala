@@ -1,9 +1,8 @@
 package graft.meta
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.model._
-import graft.exec.Scans
+import graft.exec.{Scans, Sinks}
 
 /** Catalog collector — the Spark-native analog of the reference's
   * `client/TableInfoCollector.cs`: per-table metadata discovered at run
@@ -82,7 +81,11 @@ object Catalog {
     * `TableInfoCollector.cs:170-188` (`CollectAsync`: existence → index
     * topology → counts → size → columns). Row count and byte size come
     * from the parquet footprint (`sys.dm_db_partition_stats` analog,
-    * `TableInfoCollector.cs:370-389`).
+    * `TableInfoCollector.cs:370-389`): the row count sums the footers of
+    * exactly the files the copy's scan reads (`inputFiles` of
+    * [[Scans.table]]), so no data page is read and no job runs — the
+    * same metadata count reconciliation takes on the destination
+    * ([[graft.exec.Sinks.committedRowCount]]).
     */
   // collected (rowCount, sizeBytes) per (sfDir, table): the safety gate
   // guarantees immutable sources, so physical facts cannot change within
@@ -93,7 +96,10 @@ object Catalog {
   def collect(spark: SparkSession, sfDir: String, name: String): TableMeta = {
     val base = declared(name)
     val (rows, bytes) = collected.getOrElseUpdate((sfDir, name), {
-      (Scans.table(spark, sfDir, name).count(),
+      val conf = spark.sparkContext.hadoopConfiguration
+      val files = Scans.table(spark, sfDir, name).inputFiles.toSeq
+      (Sinks.footerRowCount(files)(f => org.apache.parquet.hadoop.util.HadoopInputFile
+          .fromPath(new org.apache.hadoop.fs.Path(new java.net.URI(f)), conf)),
         dirSize(spark, s"$sfDir/$name.parquet"))
     })
     base.copy(rowCount = rows, sizeBytes = bytes)
@@ -122,8 +128,7 @@ object Catalog {
     // must not inflate the size the planner's partition-count and
     // small-table decisions read while the readonly immutability gate
     // stays blind to it
-    val keep = graft.exec.Sinks.committedDataFile(
-      graft.exec.Sinks.hiddenBelow(fs, p)) _
+    val keep = Sinks.committedDataFile(Sinks.hiddenBelow(fs, p)) _
     var total = 0L
     val it = fs.listFiles(p, true)
     while (it.hasNext) {

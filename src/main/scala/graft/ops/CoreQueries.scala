@@ -144,7 +144,7 @@ object CoreQueries {
          |SELECT DISTINCT table_name FROM sys_tables
          |WHERE NOT regexp_matches(table_name, '^e.*$$')
          |   OR table_name = 'events'
-         |ORDER BY table_name""".stripMargin) { (s, dir) =>
+         |ORDER BY table_name""".stripMargin) { (s, _) =>
       import s.implicits._
       // catalog scan first (the reference's sys.tables ⋈ sys.schemas
       // query, SmartBulkCopy.cs:832-863), then the client-side ordered

@@ -733,7 +733,7 @@ object EventQueries {
       val k = get_json_object(col("props"), "$.k").cast("long")
       // spread before the per-row JSON parse — the query's dominant
       // cost, serialized by the local single-row-group scan otherwise
-      // (identity on an already-split corpus; see Scans.spread)
+      // (identity on an already-split corpus; see Scans.spreadBytes)
       Scans.spreadBytes(s, Scans.table(s, dir, "events")
           .select(col("event_type"), col("props")),
           Scans.tableBytes(dir, "events"))
@@ -935,7 +935,6 @@ object EventQueries {
       // economics as the join/session replays; measured on the other
       // replays, the store count is the dominant replay cost)
       val s: SparkSession = cappedSession(s0, 8)
-      import s.implicits._
       import graft.streaming.EventStreams
       val scratch = graft.exec.Fs.scratchDir("graft_cdc_restart")
       try {
@@ -991,7 +990,6 @@ object EventQueries {
     QueryDef("events_cdc_stream_files", cdcMergeOracle) { (s0, dir) =>
       // same 8-partition child-session cap as events_cdc_stream_equiv
       val s: SparkSession = cappedSession(s0, 8)
-      import s.implicits._
       import graft.streaming.EventStreams
       val streamDir = stageEventsDir(dir)
       try {

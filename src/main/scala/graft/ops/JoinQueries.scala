@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.exec.Scans
@@ -391,7 +391,7 @@ object JoinQueries {
          |       (SELECT p.index_name FROM probe p
          |        WHERE p.object_id = t.object_id
          |        ORDER BY p.sort_key, p.index_name LIMIT 1) AS columnstore_index
-         |FROM sys_tables t ORDER BY t.table_name""".stripMargin) { (s, dir) =>
+         |FROM sys_tables t ORDER BY t.table_name""".stripMargin) { (s, _) =>
       columnstoreElect(Catalog.sysTables(s), Catalog.sysIndexes(s))
     })
 }

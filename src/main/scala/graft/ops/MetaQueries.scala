@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.exec.Scans
@@ -69,7 +68,7 @@ object MetaQueries {
          |  ON ic.object_id = c.object_id AND ic.column_id = c.column_id
          |JOIN sys_tables t ON i.object_id = t.object_id
          |WHERE i.index_type = 1 AND ic.key_ordinal > 0
-         |ORDER BY t.table_name, ic.key_ordinal""".stripMargin) { (s, dir) =>
+         |ORDER BY t.table_name, ic.key_ordinal""".stripMargin) { (s, _) =>
       val i  = Catalog.sysIndexes(s).filter(col("index_type") === 1)
       val ic = Catalog.sysIndexColumns(s).filter(col("key_ordinal") > 0)
       val c  = Catalog.sysColumns(s)
@@ -98,7 +97,7 @@ object MetaQueries {
          |       count(*) FILTER (WHERE c.is_computed = 1
          |                           OR c.system_type_id = 189) AS n_excluded
          |FROM sys_tables t JOIN sys_columns c ON c.object_id = t.object_id
-         |GROUP BY t.table_name ORDER BY t.table_name""".stripMargin) { (s, dir) =>
+         |GROUP BY t.table_name ORDER BY t.table_name""".stripMargin) { (s, _) =>
       val portable = col("is_computed") === 0 && col("system_type_id") =!= 189
       Catalog.sysTables(s).select(col("object_id"), col("table_name"))
         .join(Catalog.sysColumns(s), Seq("object_id"))
@@ -181,7 +180,7 @@ object MetaQueries {
          |  ON ic.object_id = c.object_id AND ic.column_id = c.column_id
          |JOIN sys_tables t ON i.object_id = t.object_id
          |WHERE i.index_type IN (0, 1)
-         |ORDER BY t.table_name""".stripMargin) { (s, dir) =>
+         |ORDER BY t.table_name""".stripMargin) { (s, _) =>
       val i  = Catalog.sysIndexes(s).filter(col("index_type").isin(0, 1))
       val pf = Catalog.sysPartitionFunctions(s)
       val ic = Catalog.sysIndexColumns(s).filter(col("partition_ordinal") === 1)
@@ -210,7 +209,7 @@ object MetaQueries {
          |LEFT JOIN sys_indexes i
          |  ON t.object_id = i.object_id AND i.index_type NOT IN (0, 1, 5)
          |GROUP BY t.table_name
-         |ORDER BY t.table_name""".stripMargin) { (s, dir) =>
+         |ORDER BY t.table_name""".stripMargin) { (s, _) =>
       val t = Catalog.sysTables(s)
       val i = Catalog.sysIndexes(s)
       t.join(i.filter(!col("index_type").isin(0, 1, 5)),
@@ -233,7 +232,7 @@ object MetaQueries {
          |  ON t.object_id = fk.parent_object_id
          |  OR t.object_id = fk.referenced_object_id
          |GROUP BY t.table_name
-         |ORDER BY t.table_name""".stripMargin) { (s, dir) =>
+         |ORDER BY t.table_name""".stripMargin) { (s, _) =>
       val t  = Catalog.sysTables(s)
       val fk = Catalog.sysForeignKeys(s)
       t.join(fk,
@@ -271,7 +270,7 @@ object MetaQueries {
          |       coalesce(nullif(t.history_retention_period, 0), -1) AS retention_days
          |FROM sys_tables t
          |LEFT JOIN sys_tables h ON t.history_table_id = h.object_id
-         |ORDER BY t.table_name""".stripMargin) { (s, dir) =>
+         |ORDER BY t.table_name""".stripMargin) { (s, _) =>
       val t = Catalog.sysTables(s).as("t")
       val h = Catalog.sysTables(s).as("h")
       val p = Catalog.sysPeriods(s)
@@ -321,7 +320,7 @@ object MetaQueries {
          | AND t.table_name = CASE WHEN strpos(p.probe_name, '.') > 0
          |       THEN string_split(p.probe_name, '.')[2] ELSE p.probe_name END
          |GROUP BY probe_name
-         |ORDER BY probe_name""".stripMargin) { (s, dir) =>
+         |ORDER BY probe_name""".stripMargin) { (s, _) =>
       import s.implicits._
       val probes = Seq("main.lineitem", "main.orders_history", "other.lineitem",
         "main.no_such_table", "region").toDF("probe_name")
@@ -372,7 +371,7 @@ object MetaQueries {
         |  ('tab_size', 11, 45000, 'size-gb', 8.0),
         |  ('zero_size', 12, 60000, 'reject', CAST(NULL AS DOUBLE)))
         |  AS t(config_name, tasks, batch_size, lp_mode, lp_value)
-        |ORDER BY config_name""".stripMargin) { (s, dir) =>
+        |ORDER BY config_name""".stripMargin) { (s, _) =>
       import s.implicits._
       val confs = Seq(
         ("auto",  """{"tasks": 7,  "batch-size": 100000, "logical-partitions": "auto"}"""),
@@ -460,7 +459,7 @@ object MetaQueries {
          |  ON (b.kind = 'secondary' AND c.stop_secondary_index)
          |  OR (b.kind = 'temporal'  AND c.stop_temporal_table)
          |GROUP BY 1, 2, 3, 4, 5
-         |ORDER BY config_name""".stripMargin) { (s, dir) =>
+         |ORDER BY config_name""".stripMargin) { (s, _) =>
       import s.implicits._
       val confs = Seq(
         ("both_default",
@@ -536,7 +535,7 @@ object MetaQueries {
         |  ('runtime:CopyErrors', 3),
         |  ('runtime:RowcountMismatch', 2))
         |  AS t(outcome, exit_code)
-        |ORDER BY outcome""".stripMargin) { (s, dir) =>
+        |ORDER BY outcome""".stripMargin) { (s, _) =>
       import s.implicits._
       import graft.model.AnalysisOutcome
       val analysis: Seq[(String, graft.model.AnalysisOutcome)] = Seq(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.exec.{CopyMonitor, Pipeline, Retry, Scans, Sinks}
 import graft.meta.Catalog
 import graft.model._
-import graft.plan.{Analyzer, PartitionStrategy, PlanConfig}
+import graft.plan.{PartitionStrategy, PlanConfig}
 
 /** Dataflow-side operators of the reference — truncate-and-load, ordered
   * load, work-queue fan-out, retry, monitoring, safety gate, temporal DDL
@@ -498,7 +498,7 @@ object PipelineQueries {
         |  ('orders', 3, 'post', 'ALTER TABLE [main].[orders] ADD PERIOD FOR SYSTEM_TIME ([valid_from], [valid_to])'),
         |  ('orders', 4, 'post', 'ALTER TABLE [main].[orders] SET (SYSTEM_VERSIONING = ON (HISTORY_TABLE = [main].[orders_history], HISTORY_RETENTION_PERIOD = 90 DAYS))'))
         |  AS t(table_name, seq, phase, ddl)
-        |ORDER BY table_name, seq""".stripMargin) { (s, dir) =>
+        |ORDER BY table_name, seq""".stripMargin) { (s, _) =>
       import s.implicits._
       val rows = Catalog.declared.toSeq.sortBy(_._1).flatMap { case (n, m) =>
         m.history.toSeq.flatMap { h =>

@@ -185,7 +185,7 @@ object TextQueries {
   private val toksSpark = "filter(split(lower(text), '[^a-z0-9]+'), t -> t != '')"
   private val toksDuck  = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t != '')"
 
-  /** The documents scan spread to session width (Scans.spread) — used
+  /** The documents scan spread to session width (Scans.spreadBytes) — used
     * by every key whose first stage runs a per-document kernel
     * (tokenize / shingle-digest / regex) heavy enough that the local
     * single-row-group scan's one task would serialize it on one core.
@@ -892,7 +892,7 @@ object TextQueries {
       // spread BEFORE the digest kernel: both passes run the fused
       // tokenize→shingle→md5 kernel over every document, and the local
       // single-row-group scan would serialize that on one core
-      // (Scans.spread is the identity on an already-split corpus)
+      // (Scans.spreadBytes is the identity on an already-split corpus)
       def docsHs = Scans.spreadBytes(s, Scans.table(s, dir, "documents")
           .select(col("doc_id"), col("text")), Scans.tableBytes(dir, "documents"))
         .select(col("doc_id"), col("text"), hsCol.as("hs"))
@@ -1987,7 +1987,7 @@ object TextQueries {
          |    '$emailRx', '[EMAIL]', 'g'),
          |    '$ssnRx', '[SSN]', 'g'),
          |    '$phoneRx', '[PHONE]', 'g') AS scrubbed
-         |FROM docs ORDER BY doc_id""".stripMargin) { (s, dir) =>
+         |FROM docs ORDER BY doc_id""".stripMargin) { (s, _) =>
       import s.implicits._
       Seq(
         (1, "contact alice at alice@example.com or 555-867-5309"),

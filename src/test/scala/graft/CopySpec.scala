@@ -3,6 +3,7 @@ package graft
 import graft.exec.Scans
 import graft.meta.Catalog
 import graft.model._
+import graft.plan.PlanConfig
 
 /** Exit-code mapping of the `graft.Copy` entry point — the analog of the
   * reference's outcome tests (`tests/Misc.cs:14-38`) plus the runtime
@@ -625,5 +626,105 @@ class CopySpec extends SparkSpecBase {
       destMeta = Map("nation" -> dst)) == 5)
     assert(!new java.io.File(s"$d/region.parquet").exists(),
       "analysis failure must fail fast before the copy phase")
+  }
+
+  /** `t` committed under `d` with exactly its source's row count. */
+  private def landed(d: String, t: String): Boolean =
+    new java.io.File(s"$d/$t.parquet").exists() &&
+      exec.Sinks.committedRowCount(spark, s"$d/$t.parquet") ==
+        Scans.table(spark, sfDir, t).count()
+
+  test("a failing table does not stop the others: they land and reconcile, exit 3") {
+    val d = destDir
+    assert(Copy.run(spark, sfDir, d, Seq("region", "nation", "supplier"),
+      truncateTables = true,
+      postCopyHook = t =>
+        if (t == "nation") throw new RuntimeException("injected task failure")) == 3)
+    assert(landed(d, "region") && landed(d, "supplier"))
+  }
+
+  test("several analysis failures: the first in list order decides the exit code") {
+    // nation's destination carries an FK (5), supplier's a secondary
+    // index (4): whichever is listed first must win on every run, however
+    // the concurrent analyses happen to finish
+    val fk = Catalog.collect(spark, sfDir, "nation").copy(storage = Storage.Heap,
+      secondaryIndexCount = 0, history = None, foreignKeyCount = 1)
+    val ix = Catalog.collect(spark, sfDir, "supplier").copy(storage = Storage.Heap,
+      secondaryIndexCount = 1, history = None, foreignKeyCount = 0)
+    val metas = Map("nation" -> fk, "supplier" -> ix)
+    (1 to 5).foreach { i =>
+      assert(Copy.run(spark, sfDir, destDir, Seq("region", "nation", "supplier"),
+        destMeta = metas) == 5, s"repeat $i")
+      assert(Copy.run(spark, sfDir, destDir, Seq("region", "supplier", "nation"),
+        destMeta = metas) == 4, s"repeat $i")
+    }
+  }
+
+  test("a wedged table times out alone: the others commit and no worker survives") {
+    import scala.jdk.CollectionConverters._
+    val tables = Seq("region", "nation", "supplier")
+    // untimed warm-up: the fast tables' loads must sit well inside the
+    // 2 s deadline, so codegen and the committer are initialized first
+    assert(Copy.run(spark, sfDir, destDir, tables, truncateTables = true) == 0)
+    val d = destDir
+    val start = System.nanoTime()
+    val code = Copy.run(spark, sfDir, d, tables, truncateTables = true,
+      commandTimeoutSec = 2,
+      postCopyHook = t => if (t == "nation") Thread.sleep(120000))
+    val elapsedSec = (System.nanoTime() - start) / 1e9
+    assert(code == 3)
+    assert(elapsedSec < 60, s"timeout must cancel, not wait out the wedge ($elapsedSec s)")
+    assert(landed(d, "region") && landed(d, "supplier"))
+    def survivors(): Set[String] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && (t.getName.startsWith("graft-copy-worker-") ||
+        t.getName.startsWith("graft-copy-timeout-")))
+      .map(_.getName).toSet
+    val deadline = System.nanoTime() + 5e9.toLong
+    while (survivors().nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+    assert(survivors().isEmpty, s"copy threads leaked: ${survivors()}")
+  }
+
+  test("tasks = 1 lands the same destinations and exit code as the default width") {
+    // width 1 is the serial queue; a batch below the larger tables' row
+    // counts puts them on sliced plans, so the slice fan-outs run too
+    val tables = Seq("region", "nation", "supplier", "orders", "lineitem", "events")
+    def content(d: String, t: String): Seq[String] =
+      spark.read.parquet(s"$d/$t.parquet").collect().map(_.mkString("|")).sorted.toSeq
+    val runs = Seq(PlanConfig(tasks = 1, batchSize = 500), PlanConfig(batchSize = 500))
+      .map { conf =>
+        val d = destDir
+        d -> Copy.run(spark, sfDir, d, tables, conf, truncateTables = true,
+          syncIdentity = true)
+      }
+    assert(runs.map(_._2) == Seq(0, 0))
+    tables.foreach(t =>
+      assert(content(runs(0)._1, t) == content(runs(1)._1, t), s"$t differs by width"))
+  }
+
+  test("catalog row count from footers equals count() on every layout") {
+    import org.apache.spark.sql.functions.{col, date_trunc}
+    val root = java.nio.file.Files.createTempDirectory("graft_footer_count")
+    try {
+      val dir = root.toString
+      val li = Scans.table(spark, sfDir, "lineitem")
+      // unpartitioned multi-file directory, as a Spark writer leaves it
+      li.repartition(8).write.parquet(s"$dir/multi/lineitem.parquet")
+      // hive-partitioned into <pcol>= directories
+      li.withColumn("l_shipdate", date_trunc("year", col("l_shipdate")))
+        .write.partitionBy("l_shipdate").parquet(s"$dir/hive/lineitem.parquet")
+      // a committed table beside a crashed writer's `_temporary` attempt
+      li.write.parquet(s"$dir/tmp/lineitem.parquet")
+      val part = new java.io.File(s"$dir/tmp/lineitem.parquet").listFiles()
+        .find(_.getName.endsWith(".parquet")).get.toPath
+      val attempt = java.nio.file.Paths.get(
+        s"$dir/tmp/lineitem.parquet/_temporary/0/_temporary/attempt_0")
+      java.nio.file.Files.createDirectories(attempt)
+      java.nio.file.Files.copy(part, attempt.resolve(part.getFileName))
+      for (src <- Seq(sfDir, s"$dir/multi", s"$dir/hive", s"$dir/tmp"))
+        assert(Catalog.collect(spark, src, "lineitem").rowCount ==
+          Scans.table(spark, src, "lineitem").count(), src)
+      assert(Catalog.collect(spark, s"$dir/tmp", "lineitem").rowCount == li.count(),
+        "a _temporary attempt was counted")
+    } finally deleteTree(root)
   }
 }

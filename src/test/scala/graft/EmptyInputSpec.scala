@@ -328,7 +328,7 @@ class EmptyInputSpec extends SparkSpecBase {
     tables.foreach { t =>
       val src = spark.read.parquet(s"$sfDir/$t.parquet")
       src.limit(1)
-        .select(src.schema.fields.map(f =>
+        .select(src.schema.fields.toSeq.map(f =>
           org.apache.spark.sql.functions.lit(null).cast(f.dataType)
             .as(f.name)): _*)
         .write.mode("overwrite").parquet(s"$dir/$t.parquet")

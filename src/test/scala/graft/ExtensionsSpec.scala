@@ -765,7 +765,6 @@ class ExtensionsSpec extends SparkSpecBase {
   }
 
   test("typed VectorMean aggregator agrees with the posexplode centroid") {
-    import spark.implicits._
     import org.apache.spark.sql.functions.udaf
     val vmean = udaf(graft.functions.VectorMean)
     val viaAgg = Scans.table(spark, sfDir, "embeddings")
@@ -805,7 +804,6 @@ class ExtensionsSpec extends SparkSpecBase {
   }
 
   test("streaming windowed agg matches batch on the same data") {
-    import spark.implicits._
     val events = Scans.table(spark, sfDir, "events")
       .select(col("ts"), col("event_type"), col("user_id"), col("value"))
     val streamed = graft.streaming.EventStreams.windowedAgg(events)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.ops.JoinQueries
 
 /** Edge-case semantics the testdata cannot exercise (no equal-timestamp

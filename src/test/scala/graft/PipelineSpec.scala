@@ -624,6 +624,18 @@ class PipelineSpec extends SparkSpecBase {
     val fp = flat.queryExecution.executedPlan.toString
     assert(fp.linesIterator.count(_.contains("Scan parquet")) == 1, fp.take(2000))
     assert(fp.contains("Exchange"), fp.take(2000))
+    // an unpartitioned multi-file directory (what a Spark writer leaves):
+    // no partition directory to prune either, so the same one scan — the
+    // per-slice union would read all 8 files in each of the 7 scans
+    val multi = java.nio.file.Files.createTempDirectory("graft_multi").toString
+    Scans.table(spark, sfDir, "lineitem").repartition(8)
+      .write.parquet(s"$multi/lineitem.parquet")
+    assert(graft.exec.Sinks.committedFiles(spark, s"$multi/lineitem.parquet").size == 8)
+    val multiFrame = Pipeline.copyFrame(spark, multi, items)
+    val mp = multiFrame.queryExecution.executedPlan.toString
+    assert(mp.linesIterator.count(_.contains("Scan parquet")) == 1, mp.take(2000))
+    assert(mp.contains("Exchange"), mp.take(2000))
+    assert(multiFrame.count() == flat.count())
     // directory-partitioned copy of the same table (month-truncated ship
     // dates bound the dir count): per-slice union, every scan pruning
     // directories via PartitionFilters, and NO shuffle anywhere
@@ -641,12 +653,14 @@ class PipelineSpec extends SparkSpecBase {
     assert(parted.count() == flat.count())
   }
 
-  /** Stage a FLAT single-file lineitem with 100 clean rows plus one row
-    * OUTSIDE the declared 1..7 year ranges and one with a NULL partition
-    * column — the dirty-data fixture for the fan-out parity and
-    * reconciliation tests. Returns the staged source dir.
+  /** Stage a lineitem with 100 clean rows plus one row OUTSIDE the
+    * declared 1..7 year ranges and one with a NULL partition column — the
+    * dirty-data fixture for the fan-out parity and reconciliation tests.
+    * `partFiles` = 1 stages a FLAT single file; more stages an
+    * unpartitioned directory of that many part files. Returns the staged
+    * source dir.
     */
-  private def stageDirtyFlatLineitem(): String = {
+  private def stageDirtyLineitem(partFiles: Int = 1): String = {
     import graft.exec.Scans
     val stage = java.nio.file.Files.createTempDirectory("graft_flat").toString
     val li = Scans.table(spark, sfDir, "lineitem").limit(100).cache()
@@ -654,29 +668,38 @@ class PipelineSpec extends SparkSpecBase {
       .withColumn("l_shipdate", lit("2010-06-01").cast("timestamp"))
     val nullPart = li.limit(1)
       .withColumn("l_shipdate", lit(null).cast("timestamp"))
-    li.union(outOfRange).union(nullPart)
-      .coalesce(1).write.parquet(s"$stage/staged")
+    val dirty = li.union(outOfRange).union(nullPart)
+    if (partFiles > 1)
+      dirty.repartition(partFiles).write.parquet(s"$stage/lineitem.parquet")
+    else {
+      dirty.coalesce(1).write.parquet(s"$stage/staged")
+      val part = new java.io.File(s"$stage/staged").listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.move(part.toPath,
+        java.nio.file.Paths.get(s"$stage/lineitem.parquet"))
+    }
     li.unpersist()
-    val part = new java.io.File(s"$stage/staged").listFiles()
-      .find(_.getName.endsWith(".parquet")).get
-    java.nio.file.Files.move(part.toPath,
-      java.nio.file.Paths.get(s"$stage/lineitem.parquet"))
     stage
   }
 
   test("flat fan-out drops out-of-range rows exactly as the slice union would") {
     import graft.exec.Scans
     // both code paths must agree on dirty data (the r2 flat path
-    // silently absorbed out-of-range rows into the copy)
-    val stage = stageDirtyFlatLineitem()
+    // silently absorbed out-of-range rows into the copy) — on a flat
+    // file and on a multi-file directory, which both take the fan-out
     val meta = Catalog.declared("lineitem")
     val items = (1 to 7).map(n =>
       WorkItem(meta, SliceSpec.Physical("l_shipdate", n), orderHint = Nil))
-    val viaFlat = Pipeline.copyFrame(spark, stage, items)
-    val viaUnion = items.map(Scans.forWorkItem(spark, stage, _))
-      .reduce(_ unionAll _)
-    assert(viaFlat.count() == 100, "flat path absorbed out-of-range rows")
-    assert(viaFlat.count() == viaUnion.count())
+    for (partFiles <- Seq(1, 8)) {
+      val stage = stageDirtyLineitem(partFiles)
+      val viaFlat = Pipeline.copyFrame(spark, stage, items)
+      assert(viaFlat.queryExecution.executedPlan.toString.contains("Exchange"),
+        s"$partFiles part file(s): fan-out not taken")
+      val viaUnion = items.map(Scans.forWorkItem(spark, stage, _))
+        .reduce(_ unionAll _)
+      assert(viaFlat.count() == 100, s"$partFiles part file(s): fan-out absorbed out-of-range rows")
+      assert(viaFlat.count() == viaUnion.count())
+    }
   }
 
   test("reconciliation catches the coverage hole a dirty flat source creates") {
@@ -685,7 +708,7 @@ class PipelineSpec extends SparkSpecBase {
     // above), and the rowcount reconciliation — the reference's
     // CheckResults contract — must surface the hole instead of
     // reporting a clean copy.
-    val stage = stageDirtyFlatLineitem()
+    val stage = stageDirtyLineitem()
     val src = Catalog.collect(spark, stage, "lineitem")
       .copy(partitionCol = Some("l_shipdate"), partitionCount = 7)
     val dst = src.copy(storage = Storage.Heap, foreignKeyCount = 0,

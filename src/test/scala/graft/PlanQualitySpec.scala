@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
 
 /** Physical-plan shape assertions — the properties the 100 TB scale
   * story depends on, checked at the plan level so a refactor that
@@ -849,6 +847,22 @@ class PlanQualitySpec extends SparkSpecBase {
       }
       rm(root)
     }
+  }
+
+  test("tableBytes stays finite on a directory-symlink cycle") {
+    // a link back to the table root below a partition directory: a walk
+    // that follows it re-enters the tree until the path length gives out
+    import graft.exec.Scans
+    val root = java.nio.file.Files.createTempDirectory("graft_tb_cycle")
+    try {
+      val part = root.resolve("looped.parquet/part=a")
+      java.nio.file.Files.createDirectories(part)
+      java.nio.file.Files.write(part.resolve("f1.parquet"), Array.fill[Byte](4096)(1))
+      java.nio.file.Files.createSymbolicLink(part.resolve("back"),
+        root.resolve("looped.parquet"))
+      assert(Scans.tableBytes(root.toString, "looped") == 4096L,
+        "the cycle was followed")
+    } finally deleteTree(root)
   }
 
   test("gated repartitions are the identity at scale (multimodal_decode, dedup_levenshtein)") {

@@ -419,7 +419,6 @@ class QueriesSpec extends SparkSpecBase {
   test("sim_ivf_incremental append touches only the new batch's cells") {
     import graft.ops.SimilarityQueries
     import graft.exec.Scans
-    import scala.jdk.CollectionConverters._
     // drive the two ingest steps into a throwaway root and snapshot the
     // file tree between them: the incremental contract is that the
     // append (a) never modifies or removes an existing file and (b) adds

@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
 class VerifySpec extends SparkSpecBase {
 
   test("a throwing query lands in errors.json and fails the run") {
-    import spark.implicits._
     val outDir = java.nio.file.Files.createTempDirectory("graft_verify_spec")
     try {
       val queries: Map[String, (org.apache.spark.sql.SparkSession, String) =>
@@ -39,7 +38,6 @@ class VerifySpec extends SparkSpecBase {
   }
 
   test("a clean run reports no errors and an empty errors.json object") {
-    import spark.implicits._
     val outDir = java.nio.file.Files.createTempDirectory("graft_verify_spec2")
     try {
       val queries: Map[String, (org.apache.spark.sql.SparkSession, String) =>
