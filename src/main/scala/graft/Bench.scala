@@ -938,14 +938,13 @@ object Bench {
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","materialize":"noop","queries":$qs,"n_queries":${candidate.size},"sf":"$sfDir","runs":${passes * runsPerPass},"passes":$passes}"""
     // The driver's bench parser needs this line UNDECORATED (an sbt
     // "[info] " prefix made every round's per-query PERF table come up
-    // empty since r13). Three delivery paths, same bytes: stdout (raw —
-    // build.sbt routes the forked JVM's output through verbatim), a
-    // stable file any consumer can read without parsing logs at all,
-    // and stderr as belt-and-braces for a harness that captures only
-    // one of the two streams.
+    // empty since r13). Two delivery paths, same bytes: stdout (raw —
+    // build.sbt routes the forked JVM's output through verbatim) and a
+    // stable file any consumer can read without parsing logs at all. It
+    // is not echoed to stderr: a consumer merging the streams would see
+    // the one record twice.
     writeTo("target/bench_line.json", stdoutLine)
     println(stdoutLine)
-    System.err.println(stdoutLine)
     spark.stop()
   }
 }

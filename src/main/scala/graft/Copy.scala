@@ -244,9 +244,8 @@ object Copy {
     //     recounts the source for real, reproducing the reference's
     //     unconditional recount — otherwise a source mutated during the
     //     copy would silently pass the final rowcount gate on the
-    //     stale analysis-phase number (and the per-process
-    //     Catalog.collect cache would keep feeding that stale count to
-    //     every later phase).
+    //     stale analysis-phase number. (Catalog.collect itself keeps no
+    //     memo: each run's analysis reads the footers as they are then.)
     val reconciled = inOrder(analyzed, width) { case (src, dst) =>
       val destRows =
         // one-scalar COUNT(*) (Sinks.jdbcRowCount): spark.read.jdbc's
@@ -264,12 +263,17 @@ object Copy {
     // SyncIdentity (`SmartBulkCopy.cs:227-244`): only after ALL rowcounts
     // check out; tables without an identity column are skipped (the
     // reference CTE's TableHasIdentity filter). Reseed to the source's
-    // current value, then verify by reading the destination back.
+    // current value, then verify by reading the destination back. The
+    // source's IDENT_CURRENT is the largest row-group max statistic in
+    // its committed footers (Sinks.footerIdentityCurrent — metadata, as
+    // the reference reads it); only an id the statistics cannot answer
+    // exactly for is scanned.
     if (syncIdentity) {
       val synced = inOrder(byDest, width)(_.forall { case (src, dst) =>
         Catalog.identityColumns.get(src.name).forall { idCol =>
-          val ic = Sinks.identityCurrent(
-            Scans.table(spark, sfDir, src.name), idCol)
+          val ic = Sinks.footerIdentityCurrent(
+            spark, s"$sfDir/${src.name}.parquet", idCol).getOrElse(
+            Sinks.identityCurrent(Scans.table(spark, sfDir, src.name), idCol))
           if (jdbcDest) {
             // live generator: RESTART WITH sets the NEXT value, so the
             // sequence continues after the source's IDENT_CURRENT; a

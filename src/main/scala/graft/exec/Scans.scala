@@ -1,7 +1,9 @@
 package graft.exec
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.model._
 
 /** Scan builders — the Spark realization of the reference's generated
@@ -16,9 +18,73 @@ object Scans {
     * pushed into this scan by Catalyst. Event time is normalized through
     * [[normalizeTs]] so no downstream operator ever sees the source's
     * physical encoding.
+    *
+    * The data schema comes from a parquet footer read on the driver
+    * ([[footerSchema]]) — the catalog read the reference takes from
+    * `sys.columns` (`TableInfoCollector.cs:391-414`) — and is handed to
+    * the reader, so building the DataFrame runs no schema-inference job.
+    * Partition columns are still inferred from `<col>=` directories by
+    * the reader. Where the footer cannot stand in for inference, the
+    * plain `spark.read.parquet` infers as before, errors included.
     */
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    normalizeTs(spark.read.parquet(s"$sfDir/$name.parquet"))
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val reader = footerSchema(spark, path).fold(spark.read)(spark.read.schema(_))
+    normalizeTs(reader.parquet(path))
+  }
+
+  /** The data schema Spark's parquet inference settles on for `path`,
+    * from the footer that inference itself reads: the first visible data
+    * file in path order (`ParquetUtils.inferSchema`, schema merging off),
+    * converted under the session's flags (`nanosAsLong`, INT96, NTZ)
+    * exactly as inference converts it. `None` — the caller infers — when
+    * the path is missing, merging is on, no committed data file comes
+    * first, a `_metadata`/`_common_metadata` summary or a streaming
+    * sink's `_spark_metadata` log exists (inference or the reader would
+    * prefer them), a data column is also a `<col>=` directory (a given
+    * schema would move it), or the footer does not read. */
+  private[graft] def footerSchema(
+      spark: SparkSession, path: String): Option[StructType] = {
+    val sqlConf = spark.sessionState.conf
+    if (sqlConf.isParquetSchemaMergingEnabled) None
+    else try {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val root = new org.apache.hadoop.fs.Path(path)
+      val fs = root.getFileSystem(conf)
+      if (!fs.exists(root)) None
+      else {
+        val segments = Sinks.segmentsBelow(fs, root)
+        val all = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
+        val it = fs.listFiles(root, true)
+        while (it.hasNext) all += it.next()
+        // InMemoryFileIndex's listing rule: `_`/`.` names are skipped
+        // unless a `_` name is a partition directory (`_c=v`) or a summary
+        def visible(seg: String): Boolean =
+          seg.startsWith("_metadata") || seg.startsWith("_common_metadata") ||
+            !((seg.startsWith("_") && !seg.contains("=")) ||
+              seg.startsWith(".") || seg.endsWith("._COPYING_"))
+        val summaries = all.exists(f => segments(f.getPath).exists(s =>
+          s.startsWith("_metadata") || s.startsWith("_common_metadata") ||
+            s == "_spark_metadata"))
+        val listed = all.filter(f => segments(f.getPath).forall(visible)).toSeq
+        val committed = Sinks.committedDataFile(Sinks.hiddenBelow(fs, root)) _
+        val first =
+          if (summaries) None
+          else listed.sortBy(_.getPath.toString).headOption.filter(committed)
+        val partitionCols = listed.flatMap(f => segments(f.getPath).dropRight(1))
+          .filter(_.contains("=")).map(_.takeWhile(_ != '=').toLowerCase(java.util.Locale.ROOT))
+          .toSet
+        first.map { f =>
+          Sinks.footerFold(Seq(f))(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(_, conf))(footer =>
+            ParquetFileFormat.readSchemaFromFooter(
+              new org.apache.parquet.hadoop.Footer(f.getPath, footer),
+              new ParquetToSparkSchemaConverter(sqlConf))).head
+        }.filterNot(_.fieldNames.exists(n =>
+          partitionCols.contains(n.toLowerCase(java.util.Locale.ROOT))))
+      }
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
 
   /** Normalize the event-time column to Spark's native `TimestampType`
     * whatever physical representation the source carries — the

@@ -2,6 +2,7 @@ package graft.exec
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.model.SortKey
 
 /** Sink builders — the Spark realization of the reference's destination
@@ -68,27 +69,41 @@ object Sinks {
   }
 
   /** Sum of the parquet footer row counts of `files` (`open` turns one
-    * into a readable file). Footer reads are independent metadata GETs —
-    * fanned out on a bounded pool so the latency stays ~constant in file
-    * count against an object store (a serial loop would cost files × RTT
-    * on the driver). Shared by [[committedRowCount]] and the catalog's
-    * source count (`Catalog.collect`). */
+    * into a readable file). Shared by [[committedRowCount]] and the
+    * catalog's source count (`Catalog.collect`). */
   def footerRowCount[F](files: Seq[F])(
       open: F => org.apache.parquet.io.InputFile): Long =
-    if (files.isEmpty) 0L
+    footerFold(files)(open)(_.getBlocks.asScala.map(_.getRowCount).sum).sum
+
+  /** Map `f` over the parquet footers of `files` on the driver, results
+    * in file order — the ONE footer reader behind every metadata answer
+    * of the copy path: row counts, the source schema (`Scans.table`) and
+    * the identity max ([[footerIdentityCurrent]]). No data page is read
+    * and no Spark job runs. Footer reads are independent metadata GETs,
+    * fanned out on a bounded pool so the latency stays ~constant in file
+    * count against an object store (a serial loop would cost files × RTT
+    * on the driver). */
+  def footerFold[F, A](files: Seq[F])(
+      open: F => org.apache.parquet.io.InputFile)(
+      f: org.apache.parquet.hadoop.metadata.ParquetMetadata => A): Seq[A] =
+    if (files.isEmpty) Nil
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(16, files.size))
       try {
-        val futures = files.map { f =>
-          pool.submit(new java.util.concurrent.Callable[Long] {
-            def call(): Long = {
-              val reader = org.apache.parquet.hadoop.ParquetFileReader.open(open(f))
-              try reader.getRecordCount finally reader.close()
+        val futures = files.map(file =>
+          pool.submit(new java.util.concurrent.Callable[A] {
+            def call(): A = {
+              val reader = org.apache.parquet.hadoop.ParquetFileReader.open(open(file))
+              try f(reader.getFooter) finally reader.close()
             }
-          })
+          }))
+        futures.map { fut =>
+          try fut.get()
+          catch { case e: java.util.concurrent.ExecutionException =>
+            throw Option[Throwable](e.getCause).getOrElse(e)
+          }
         }
-        futures.map(_.get()).sum
       } finally pool.shutdown()
     }
 
@@ -170,6 +185,70 @@ object Sinks {
     // instead of an NPE aborting the run
     df.agg(coalesce(max(col(idCol)).cast("long"), lit(0L)))
       .collect()(0).getLong(0)
+
+  /** The source's `IDENT_CURRENT` from catalog metadata, as the reference
+    * reads it (`SmartBulkCopy.cs:341-389`), never from a table scan: the
+    * largest row-group `max` statistic of `idCol` over the committed
+    * footers of the table at `path` ([[footerFold]]), 0 when there is no
+    * value (the [[identityCurrent]] convention). `None` when the
+    * statistics cannot answer exactly — the caller then scans with
+    * [[identityCurrent]]:
+    *   - no committed file, or a footer that does not read;
+    *   - a file whose `idCol` is not a top-level INT32/INT64 with no
+    *     logical annotation or a signed-integer one (a DECIMAL, DATE or
+    *     unsigned id orders differently from its `max()`);
+    *   - a non-empty row group whose chunk has neither a max nor a null
+    *     count covering every row (a writer that skipped statistics).
+    */
+  def footerIdentityCurrent(
+      spark: SparkSession, path: String, idCol: String): Option[Long] =
+    try {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val files = committedFiles(spark, path)
+      if (files.isEmpty) None
+      else {
+        val perFile = footerFold(files)(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(_, conf))(
+          footerMax(_, idCol))
+        if (perFile.contains(None)) None
+        else Some(perFile.flatten.flatten.maxOption.getOrElse(0L))
+      }
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** The largest row-group `max` statistic of top-level integer column
+    * `idCol` in one footer (`Some(None)`: no non-null value); `None` when
+    * this footer cannot answer (see [[footerIdentityCurrent]]). */
+  private def footerMax(
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
+      idCol: String): Option[Option[Long]] = {
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType, Type}
+    val signedInt = footer.getFileMetaData.getSchema.getFields.asScala.exists { t =>
+      t.getName == idCol && t.isPrimitive && !t.isRepetition(Type.Repetition.REPEATED) && {
+        val p = t.asPrimitiveType
+        Set(PrimitiveType.PrimitiveTypeName.INT32, PrimitiveType.PrimitiveTypeName.INT64)
+          .contains(p.getPrimitiveTypeName) &&
+          (p.getLogicalTypeAnnotation match {
+            case null => true
+            case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
+            case _ => false
+          })
+      }
+    }
+    if (!signedInt) None
+    else {
+      val column = org.apache.parquet.hadoop.metadata.ColumnPath.get(idCol)
+      val groups = footer.getBlocks.asScala.toSeq.filter(_.getRowCount > 0).map { b =>
+        b.getColumns.asScala.find(_.getPath == column).map(_.getStatistics).flatMap {
+          case s if s != null && s.hasNonNullValue =>
+            Some(Some(s.genericGetMax.asInstanceOf[Number].longValue))
+          case s if s != null && s.isNumNullsSet && s.getNumNulls == b.getRowCount =>
+            Some(None)
+          case _ => None
+        }
+      }
+      if (groups.contains(None)) None else Some(groups.flatten.flatten.maxOption)
+    }
+  }
 
   /** Reseed the destination's identity generator — the file-sink analog of
     * `dbcc checkident('t', reseed, ic)` (reference `SmartBulkCopy.cs:

@@ -2,7 +2,7 @@ package graft.meta
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.model._
-import graft.exec.{Scans, Sinks}
+import graft.exec.Sinks
 
 /** Catalog collector — the Spark-native analog of the reference's
   * `client/TableInfoCollector.cs`: per-table metadata discovered at run
@@ -81,62 +81,24 @@ object Catalog {
     * `TableInfoCollector.cs:170-188` (`CollectAsync`: existence → index
     * topology → counts → size → columns). Row count and byte size come
     * from the parquet footprint (`sys.dm_db_partition_stats` analog,
-    * `TableInfoCollector.cs:370-389`): the row count sums the footers of
-    * exactly the files the copy's scan reads (`inputFiles` of
-    * [[Scans.table]]), so no data page is read and no job runs — the
-    * same metadata count reconciliation takes on the destination
-    * ([[graft.exec.Sinks.committedRowCount]]).
+    * `TableInfoCollector.cs:370-389`) of the COMMITTED data files
+    * ([[Sinks.committedFiles]], the predicate reconciliation and the
+    * safe-check footprints read): the byte size sums their lengths and
+    * the row count their footers, read on the driver — no data page is
+    * read and no job runs, so every call answers for the files as they
+    * are now.
     */
-  // collected (rowCount, sizeBytes) per (sfDir, table): the safety gate
-  // guarantees immutable sources, so physical facts cannot change within
-  // a process — recounting on every copy would re-scan for a constant
-  private val collected =
-    scala.collection.concurrent.TrieMap.empty[(String, String), (Long, Long)]
-
   def collect(spark: SparkSession, sfDir: String, name: String): TableMeta = {
-    val base = declared(name)
-    val (rows, bytes) = collected.getOrElseUpdate((sfDir, name), {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val files = Scans.table(spark, sfDir, name).inputFiles.toSeq
-      (Sinks.footerRowCount(files)(f => org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new org.apache.hadoop.fs.Path(new java.net.URI(f)), conf)),
-        dirSize(spark, s"$sfDir/$name.parquet"))
-    })
-    base.copy(rowCount = rows, sizeBytes = bytes)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = Sinks.committedFiles(spark, s"$sfDir/$name.parquet")
+    declared(name).copy(
+      rowCount = Sinks.footerRowCount(files)(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(_, conf)),
+      sizeBytes = files.map(_.getLen).sum)
   }
 
   def collectAll(spark: SparkSession, sfDir: String): Map[String, TableMeta] =
     tableNames.map(n => n -> collect(spark, sfDir, n)).toMap
-
-  /** Byte size of the COMMITTED table footprint via Hadoop `FileSystem`
-    * (object-store ready, flat file or partition-directory tree alike).
-    * Hidden path segments (`_temporary` attempt files, commit markers,
-    * dot-strays) are excluded — junk bytes from a crashed writer must
-    * not inflate the size the planner's partition-count and small-table
-    * decisions read.
-    */
-  private def dirSize(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return 0L
-    val st = fs.getFileStatus(p)
-    if (st.isFile) return st.getLen
-    // committed-ness is Sinks.committedDataFile — the WHOLE predicate
-    // (hidden segments AND the .parquet-data-file test) the safety gate
-    // and reconciliation read, not just its hidden half: a stray
-    // non-parquet file (an orphaned .tmp from a foreign writer, say)
-    // must not inflate the size the planner's partition-count and
-    // small-table decisions read while the readonly immutability gate
-    // stays blind to it
-    val keep = Sinks.committedDataFile(Sinks.hiddenBelow(fs, p)) _
-    var total = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (keep(f)) total += f.getLen
-    }
-    total
-  }
 
   // ---------------------------------------------------------------------
   // Synthesized sys.* catalog DataFrames. Index type codes follow SQL

@@ -727,4 +727,79 @@ class CopySpec extends SparkSpecBase {
         "a _temporary attempt was counted")
     } finally deleteTree(root)
   }
+
+  test("a source rewritten at the same path between runs is collected afresh") {
+    // Catalog.collect reads the footers on every call: a second run in
+    // the same JVM must plan and reconcile on the NEW files, not a count
+    // remembered from the first run
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft_rewrite")
+    try {
+      val src = s"$root/src"
+      val d = destDir
+      Scans.table(spark, sfDir, "orders").write.parquet(s"$src/orders.parquet")
+      assert(Copy.run(spark, src, d, Seq("orders"), truncateTables = true) == 0)
+      Scans.table(spark, src, "orders").limit(100).write.parquet(s"$root/next")
+      deleteTree(Paths.get(s"$src/orders.parquet"))
+      Files.move(Paths.get(s"$root/next"), Paths.get(s"$src/orders.parquet"))
+      assert(Copy.run(spark, src, d, Seq("orders"), truncateTables = true) == 0)
+      val (copied, source) =
+        (spark.read.parquet(s"$d/orders.parquet"), spark.read.parquet(s"$src/orders.parquet"))
+      assert(copied.count() == 100)
+      assert(copied.exceptAll(source).isEmpty && source.exceptAll(copied).isEmpty)
+    } finally deleteTree(root)
+  }
+
+  test("footer identity max equals the max() scan on every layout") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_footer_ident")
+    try {
+      val dir = root.toString
+      def agree(d: String, t: String, c: String): Unit = {
+        val scanned = exec.Sinks.identityCurrent(Scans.table(spark, d, t), c)
+        assert(exec.Sinks.footerIdentityCurrent(spark, s"$d/$t.parquet", c)
+          .contains(scanned), s"$d/$t.$c")
+      }
+      Catalog.identityColumns.foreach { case (t, c) => agree(sfDir, t, c) }
+      Scans.table(spark, sfDir, "orders").repartition(8)
+        .write.parquet(s"$dir/multi/orders.parquet")
+      agree(s"$dir/multi", "orders", "o_orderkey")
+      Seq.empty[Long].toDF("id").write.parquet(s"$dir/empty/t.parquet")
+      agree(s"$dir/empty", "t", "id")
+      Seq[(Option[Long], String)]((None, "a"), (None, "b")).toDF("id", "v")
+        .write.parquet(s"$dir/nulls/t.parquet")
+      agree(s"$dir/nulls", "t", "id")
+      Seq(3, 9, -2).toDF("id").write.parquet(s"$dir/int32/t.parquet")
+      agree(s"$dir/int32", "t", "id")
+    } finally deleteTree(root)
+  }
+
+  test("an id the footer statistics cannot answer for takes the scan path") {
+    import spark.implicits._
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("graft_footer_ident_scan")
+    try {
+      val dir = root.toString
+      // a DECIMAL id stored as INT32: its max() is not an integer max
+      Seq(5, 7).toDF("id").selectExpr("CAST(id AS DECIMAL(9,0)) AS id")
+        .write.parquet(s"$dir/decimal/t.parquet")
+      assert(exec.Sinks.footerIdentityCurrent(spark, s"$dir/decimal/t.parquet", "id").isEmpty)
+      // the largest ids sit in a file written without statistics: every
+      // row group must answer, or the max would come from the others
+      val stats = s"$dir/src/supplier.parquet"
+      val supplier = Scans.table(spark, sfDir, "supplier")
+      supplier.write.parquet(stats)
+      supplier.withColumn("s_suppkey", $"s_suppkey" + 1000)
+        .write.mode("append").option("parquet.column.statistics.enabled", "false")
+        .parquet(stats)
+      assert(exec.Sinks.footerIdentityCurrent(spark, stats, "s_suppkey").isEmpty)
+      val expected = exec.Sinks.identityCurrent(Scans.table(spark, s"$dir/src", "supplier"),
+        "s_suppkey")
+      val d = destDir
+      assert(Copy.run(spark, s"$dir/src", d, Seq("supplier"), truncateTables = true,
+        syncIdentity = true) == 0)
+      assert(exec.Sinks.identitySeed(spark, s"$d/supplier.parquet")
+        .contains(("s_suppkey", expected)))
+    } finally deleteTree(root)
+  }
 }

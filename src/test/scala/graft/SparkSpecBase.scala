@@ -50,6 +50,18 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     finally walk.close()
   }
 
+  /** Spark jobs submitted while `body` runs. Counted via the MONOTONE
+    * max job id, not the tracked-job-list size: the status tracker
+    * evicts old jobs, so a length delta can go negative in a long-lived
+    * test session. */
+  def jobsDuring(body: => Unit): Int = {
+    def maxId = spark.sparkContext.statusTracker
+      .getJobIdsForGroup(null).foldLeft(-1)(math.max)
+    val before = maxId
+    body
+    maxId - before
+  }
+
   /** Recursive delete of a throwaway spec directory. */
   def deleteTree(root: java.nio.file.Path): Unit =
     graft.exec.Fs.deleteTree(root)

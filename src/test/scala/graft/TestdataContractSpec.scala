@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.types._
 import graft.exec.Scans
+import graft.meta.Catalog
 
 /** Canary for the TESTDATA CONTRACT: the driver regenerates
   * `/root/testdata` between rounds, and a physical-representation change
@@ -103,5 +104,76 @@ class TestdataContractSpec extends SparkSpecBase {
     assert(nonAscii == 0,
       s"$nonAscii documents contain non-ASCII text — the char-based " +
         "multimodal oracles no longer equal the byte-based engine")
+  }
+
+  // --- Scans.table's footer schema stands in for Spark's inference -----
+
+  /** What the reader infers for `path`, normalized as Scans.table is. */
+  private def inferred(path: String): StructType =
+    Scans.normalizeTs(spark.read.parquet(path)).schema
+
+  test("Scans.table's footer schema equals Spark's inferred schema on every table") {
+    Catalog.tableNames.foreach { n =>
+      val p = s"$sfDir/$n.parquet"
+      assert(Scans.footerSchema(spark, p).isDefined, s"$n: footer schema not read")
+      assert(Scans.table(spark, sfDir, n).schema == inferred(p), n)
+    }
+  }
+
+  test("building Scans.table submits no Spark job") {
+    Catalog.tableNames.foreach(n =>
+      assert(jobsDuring(Scans.table(spark, sfDir, n)) == 0, n))
+  }
+
+  test("footer schema matches inference on multi-file, hive, _temporary, summary and overlap layouts") {
+    import org.apache.spark.sql.functions.{col, date_trunc}
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft_footer_schema")
+    try {
+      val dir = root.toString
+      val li = Scans.table(spark, sfDir, "lineitem")
+      li.repartition(8).write.parquet(s"$dir/multi/lineitem.parquet")
+      li.withColumn("l_shipdate", date_trunc("year", col("l_shipdate")))
+        .write.partitionBy("l_shipdate").parquet(s"$dir/hive/lineitem.parquet")
+      // a crashed writer's attempt holding ANOTHER table's file: `_temporary`
+      // sorts before `part-`, so reading it would give region's schema
+      li.write.parquet(s"$dir/tmp/lineitem.parquet")
+      val attempt = Paths.get(s"$dir/tmp/lineitem.parquet/_temporary/0/_temporary/attempt_0")
+      Files.createDirectories(attempt)
+      Files.copy(Paths.get(s"$sfDir/region.parquet"), attempt.resolve("part-00000.parquet"))
+      // a summary file, which inference prefers over every data file, even
+      // one that sorts before it
+      val summary = Files.createDirectories(Paths.get(s"$dir/summary/lineitem.parquet"))
+      Files.copy(Paths.get(s"$sfDir/lineitem.parquet"), summary.resolve("0.parquet"))
+      Files.copy(Paths.get(s"$sfDir/region.parquet"), summary.resolve("_common_metadata"))
+      // files that still carry a column their directory also names: a
+      // given schema would move that column to the end
+      li.write.parquet(s"$dir/overlap/lineitem.parquet/l_linestatus=F")
+      for (layout <- Seq("multi", "hive", "tmp", "summary", "overlap")) {
+        val d = s"$dir/$layout"
+        assert(Scans.table(spark, d, "lineitem").schema == inferred(s"$d/lineitem.parquet"),
+          layout)
+        assert(Scans.footerSchema(spark, s"$d/lineitem.parquet").isDefined ==
+          Set("multi", "hive", "tmp").contains(layout),
+          s"$layout: footer taken only where it stands in for inference")
+      }
+      assert(Scans.table(spark, s"$dir/hive", "lineitem").schema("l_shipdate").dataType ==
+        TimestampType, "partition column keeps its inferred type")
+      assert(jobsDuring(Scans.table(spark, s"$dir/multi", "lineitem")) == 0)
+      assert(jobsDuring(Scans.table(spark, s"$dir/hive", "lineitem")) == 0)
+    } finally deleteTree(root)
+  }
+
+  test("a missing or empty source raises the same error as Spark's inference") {
+    val root = java.nio.file.Files.createTempDirectory("graft_footer_missing")
+    try {
+      java.nio.file.Files.createDirectories(root.resolve("empty.parquet"))
+      for (name <- Seq("missing", "empty")) {
+        val before = intercept[Exception](spark.read.parquet(s"$root/$name.parquet"))
+        val now = intercept[Exception](Scans.table(spark, root.toString, name))
+        assert(now.getClass == before.getClass, name)
+        assert(now.getMessage == before.getMessage, name)
+      }
+    } finally deleteTree(root)
   }
 }
