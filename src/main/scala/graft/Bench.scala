@@ -34,14 +34,10 @@ object Bench {
       }
   }
 
-  /** One key's committed-record entry — the exact per-key schema
-    * BenchArtifactSpec gates ({min, median, spread, corrob, windows}). */
+  /** One key's record entry — the exact per-key schema BenchArtifactSpec
+    * gates ({min, median, spread, corrob, windows}). */
   private[graft] final case class Rec(min: Double, median: Double,
-      spread: Double, corrob: Double, windows: Int) {
-    /** trusted = the min is corroborated by a second wall-clock-separated
-      * window (the artifact's own certification rule, corrob <= 1.5). */
-    def trusted: Boolean = windows >= 2 && corrob >= 0 && corrob <= 1.5
-  }
+      spread: Double, corrob: Double, windows: Int)
 
   /** The reference's headline ordering (BASELINE.md: partition-parallel
     * heap load beats partitioned+ordered): `_1.min < _2.min` must hold
@@ -49,252 +45,138 @@ object Bench {
   private[graft] val headlinePair: (String, String) =
     ("bulk_insert_partitioned", "bulk_insert_ordered")
 
-  /** Refuse-to-regress merge of a fresh candidate record over the
-    * previously committed one (r13 judge item 1): a contended DRIVER
-    * bench run used to overwrite the committed artifact with a record
-    * that inverted the partitioned-beats-ordered headline (r13: 1.279 >=
-    * 1.241) or carried an uncorroborated min, leaving the repo's own
-    * BenchArtifactSpec red until a human refreshed from a quiet window.
-    * Per-key rule — pollution only inflates, so a committed TRUSTED min
-    * is better evidence than a fresh UNTRUSTED one, and never the other
-    * way around:
-    *   - candidate trusted (two separated windows agree): candidate
-    *     wins, even when slower — a corroborated regression is REAL and
-    *     must ship, or a legitimate code slowdown would hide behind a
-    *     stale fast number forever;
-    *   - candidate untrusted (corrob > 1.5 after the heal cap) and the
-    *     committed entry is trusted and strictly faster: the committed
-    *     entry is retained (named in retained_from_committed);
-    *   - candidate failed outright: a trusted committed entry is
-    *     retained (retained_after_failure) — the correctness gates
-    *     (Verify/QueriesSpec), not the trend artifact, are where a
-    *     genuinely broken query stays loud, while a transient
-    *     contention failure must not erase a valid trend point;
-    *   - the whole run is a CONTENDED same-host rerun (`contended` —
-    *     decided by [[contendedRun]] from the host blocks: same
-    *     machine, a real load jump OR a calibration-probe slowdown,
-    *     slower on a supermajority of
-    *     shared keys): every trusted committed entry is retained
-    *     wholesale — corroboration alone cannot catch this case,
-    *     because sustained contention corroborates slow numbers just
-    *     fine (the r14 driver run shipped a fully corroborated 25%
-    *     trend regression with zero retentions);
-    *   - the headline PAIR merges as a unit (only when `enforcePair` —
-    *     the ordering is a CLAIM ABOUT SCALE, gated and healed at the
-    *     sf0.1 record only; at sf0.001 the partitioned insert's fixed
-    *     overhead legitimately dominates and the inversion is real): if
-    *     the per-key merge still leaves partitioned >= ordered and the
-    *     committed record holds the ordering on trusted entries, BOTH
-    *     committed entries are retained together — per-key best-of
-    *     could otherwise splice two windows into an inversion neither
-    *     record measured. Sustained contention CAN corroborate an
-    *     inversion (both windows equally hot), so candidate trust alone
-    *     cannot distinguish a real regression here — the STREAK bound
-    *     below is what does.
-    *
-    * Retention is bounded, never a permanent mask: every retained key
-    * carries a consecutive-retention STREAK (prior streak + 1, reset
-    * the moment the key ships fresh), persisted in the artifact and
-    * gated by BenchArtifactSpec at <= `maxRetentionStreak`. One noisy
-    * run cannot redden the tree; a key still retained after that many
-    * consecutive runs is a REAL persistent disagreement (a genuine
-    * regression the merge would otherwise hide forever — the failure
-    * mode of an unbounded refuse-to-regress) and goes loudly red.
-    * Returns (entries, retained, retainedAfterFailure, failures,
-    * streaks). */
-  private[graft] val maxRetentionStreak = 3
+  /** Two probes this far apart describe different environments, and a
+    * key this much slower counts as slower in the ratio summary. The
+    * quiet 32-way host's probe drifted 1.18× between days with no
+    * contention, so a tighter factor would reject day-to-day drift. */
+  private[graft] val tolerance = 1.25
 
-  private[graft] def mergeWithCommitted(
-      candidate: Seq[(String, Option[Rec])],
-      committed: Map[String, Rec],
-      enforcePair: Boolean = true,
-      priorStreaks: Map[String, Int] = Map.empty,
-      contended: Boolean = false)
-      : (Seq[(String, Rec)], Seq[String], Seq[String], Seq[String], Map[String, Int]) = {
-    val retained = scala.collection.mutable.LinkedHashSet.empty[String]
-    val retainedFail = scala.collection.mutable.LinkedHashSet.empty[String]
-    val failures = scala.collection.mutable.LinkedHashSet.empty[String]
-    val base: Seq[(String, Rec)] = candidate.flatMap {
-      case (k, None) =>
-        committed.get(k).filter(_.trusted) match {
-          case Some(o) => retainedFail += k; Some(k -> o)
-          case None    => failures += k; None
-        }
-      case (k, Some(c)) =>
-        committed.get(k) match {
-          // a CONTENDED same-host run (see contendedRun) retains every
-          // trusted committed entry WHOLESALE — even keys the hot run
-          // happened to measure faster, so the committed record stays
-          // the coherent product of ONE environment instead of a splice
-          // of a quiet suite with a hot run's lucky keys
-          case Some(o) if contended && o.trusted =>
-            retained += k; Some(k -> o)
-          case Some(o) if !c.trusted && o.trusted && o.min < c.min =>
-            retained += k; Some(k -> o)
-          case _ => Some(k -> c)
-        }
-    }
-    val m = base.toMap
-    val stillInverted = (for { p <- m.get(headlinePair._1)
-                               o <- m.get(headlinePair._2) }
-      yield p.min >= o.min).getOrElse(false)
-    val entries =
-      if (enforcePair && stillInverted &&
-          committed.get(headlinePair._1).exists(_.trusted) &&
-          committed.get(headlinePair._2).exists(_.trusted) &&
-          committed(headlinePair._1).min < committed(headlinePair._2).min) {
-        retained += headlinePair._1; retained += headlinePair._2
-        base.map { case (k, r) =>
-          if (k == headlinePair._1 || k == headlinePair._2) k -> committed(k)
-          else k -> r
-        }
-      } else base
-    val streaks = (retained ++ retainedFail).iterator
-      .map(k => k -> (priorStreaks.getOrElse(k, 0) + 1)).toMap
-    (entries, retained.toSeq, retainedFail.toSeq, failures.toSeq, streaks)
-  }
+  /** What [[compare]] reads of a record: its entries and host block. A
+    * probe is the QUIETEST (min positive) of its start/end samples: a run
+    * that started on a draining host probes slow at start, clean at end.
+    * A field the block lacks is None. */
+  private[graft] final case class Record(queries: Map[String, Rec],
+      nameHash: Option[String] = None, sessionCpus: Option[Int] = None,
+      probeMs: Option[Double] = None, probeMtMs: Option[Double] = None)
 
-  /** Parse a previously committed artifact's per-key map; empty on any
-    * miss or parse failure (the candidate then ships unmerged — a
-    * missing or corrupt prior record must never block a fresh one). */
-  private[graft] def readCommitted(path: String): Map[String, Rec] =
+  /** Read a record; a missing or unreadable file parses as empty. */
+  private[graft] def readCommitted(path: String): Record =
+    parseRecord(
+      try java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+      catch { case scala.util.control.NonFatal(_) => Array.emptyByteArray })
+
+  /** Parse a record; entries lacking any schema field are dropped, not
+    * defaulted, and unparseable bytes are an empty Record — which
+    * [[compare]] refuses, so garbage at the landing spot is never
+    * silently replaced. */
+  private[graft] def parseRecord(bytes: Array[Byte]): Record =
     try {
-      val root = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(path)))
+      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
+      val b = Map.newBuilder[String, Rec]
       val qs = root.path("queries")
-      if (!qs.isObject) Map.empty
-      else {
-        val b = Map.newBuilder[String, Rec]
-        qs.properties().forEach { e =>
-          val v = e.getValue
-          if (v.path("min").isNumber && v.path("median").isNumber &&
-              v.path("spread").isNumber && v.path("corrob").isNumber &&
-              v.path("windows").isNumber)
-            b += e.getKey -> Rec(v.path("min").asDouble(),
-              v.path("median").asDouble(), v.path("spread").asDouble(),
-              v.path("corrob").asDouble(), v.path("windows").asInt())
-        }
-        b.result()
-      }
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
-
-  /** The prior committed record's merge-relevant metadata, threaded
-    * forward by this run: retention streaks (so retention stays BOUNDED
-    * across runs), the record's own host block plus the parsed fields
-    * the contended-run rule reads (name hash, start load), and the
-    * PER-KEY host provenance of entries the prior record had itself
-    * retained — so an entry surviving several consecutive retentions
-    * keeps the host that actually measured it, however many hops back,
-    * instead of being attributed to whichever intermediate record
-    * carried it forward (the one-hop host-mixing of the r14 format).
-    * All fields empty/None on any miss or parse failure. */
-  private[graft] final case class CommittedMeta(
-      streaks: Map[String, Int] = Map.empty,
-      hostJson: Option[String] = None,
-      baselineJson: Option[String] = None,
-      baselineHash: Option[String] = None,
-      baselineLoad: Option[Double] = None,
-      baselineProbe: Option[Double] = None,
-      retainedHostByKey: Map[String, String] = Map.empty)
-
-  private[graft] def readCommittedMeta(path: String): CommittedMeta =
-    try {
-      val root = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(path)))
-      val b = Map.newBuilder[String, Int]
-      val st = root.path("retention_streaks")
-      if (st.isObject) st.properties().forEach { e =>
-        if (e.getValue.isNumber) b += e.getKey -> e.getValue.asInt()
+      if (qs.isObject) qs.properties().forEach { e =>
+        val v = e.getValue
+        if (v.path("min").isNumber && v.path("median").isNumber &&
+            v.path("spread").isNumber && v.path("corrob").isNumber &&
+            v.path("windows").isNumber)
+          b += e.getKey -> Rec(v.path("min").asDouble(),
+            v.path("median").asDouble(), v.path("spread").asDouble(),
+            v.path("corrob").asDouble(), v.path("windows").asInt())
       }
       val host = root.path("host")
-      // the contended-run comparison baseline: the host block of the run
-      // whose entries the record actually carries. A record whose
-      // entries were retained wholesale by a CONTENDED run names the
-      // quiet environment in trend_baseline_host — comparing against the
-      // hot carrier's own load (the `host` block, which honestly
-      // describes the run that WROTE the file) would let a second
-      // consecutive hot run sail past the load-jump test and overwrite
-      // the retained quiet entries after all.
-      val baseline = {
-        val t = root.path("trend_baseline_host")
-        if (t.isObject) t else host
+      def quietest(f: String): Option[Double] = {
+        val ps = Seq(s"${f}_start", s"${f}_end").map(host.path)
+          .filter(_.isNumber).map(_.asDouble()).filter(_ > 0)
+        if (ps.isEmpty) None else Some(ps.min)
       }
-      val byKey = Map.newBuilder[String, String]
-      root.path("retained_entry_hosts").forEach { g =>
-        val h = g.path("host")
-        // null hosts thread too: a key first retained from a
-        // pre-host-block record has UNKNOWN provenance, and unknown must
-        // stay unknown — re-attributing it to the intermediate carrier
-        // on the next hop is exactly the mixing this map exists to stop
-        if (h.isObject || h.isNull) g.path("keys").forEach { k =>
-          if (k.isTextual) byKey += k.asText() -> h.toString
-        }
+      Record(b.result(),
+        nameHash = Some(host.path("name_hash")).filter(_.isTextual).map(_.asText()),
+        sessionCpus = Some(host.path("session_cpus")).filter(_.isInt).map(_.asInt()),
+        probeMs = quietest("probe_ms"), probeMtMs = quietest("probe_mt_ms"))
+    } catch { case scala.util.control.NonFatal(_) => Record(Map.empty) }
+
+  /** Are `prev` and `now` measurements of the same environment? If so,
+    * the per-key `now.min / prev.min` ratios over the keys both carry;
+    * if not, the reason. Refused when the hosts differ, the session
+    * widths differ (or either record lacks one), or either probe pair
+    * differs by [[tolerance]] or more (or is missing). The single-thread
+    * probe alone passed the r18 82.3-vs-109.6 s same-day swing clean;
+    * the N-thread probe is what sees a host whose cores are shared. */
+  private[graft] def compare(prev: Record, now: Record)
+      : Either[String, Seq[(String, Double)]] = {
+    def show(v: Option[Any]) = v.fold("missing")(_.toString)
+    def probe(name: String, a: Option[Double], b: Option[Double]) =
+      (a, b) match {
+        case (Some(x), Some(y)) if math.max(x, y) / math.min(x, y) >= tolerance =>
+          Some(s"$name differs: ${f3(x)} ms vs ${f3(y)} ms (>= ${tolerance}x)")
+        case (Some(_), Some(_)) => None
+        case _ => Some(s"$name missing: ${show(a)} vs ${show(b)}")
       }
-      CommittedMeta(
-        streaks = b.result(),
-        hostJson = if (host.isObject) Some(host.toString) else None,
-        baselineJson =
-          if (root.path("trend_baseline_host").isObject)
-            Some(root.path("trend_baseline_host").toString)
-          else None,
-        baselineHash = Option(baseline.path("name_hash"))
-          .filter(_.isTextual).map(_.asText()),
-        // the detector's baseline is the QUIETEST load the baseline
-        // block recorded — min over its start/end samples (r15 ADVICE):
-        // load_avg_start samples the 1-min load at process start, so a
-        // run that merely STARTED hot (sbt startup burn, a draining
-        // host — the refreshed r15 record read start 10.54 / end 1.83)
-        // ships quiet numbers but would poison the comparison high,
-        // blinding the load-jump test to every moderately hot rerun
-        // below start+1.0. A -1 "unavailable" sample is excluded rather
-        // than propagated (min(-1, x) would disqualify a record whose
-        // OTHER sample is real); only a record with no non-negative
-        // sample at all yields None (compare disqualified, as before).
-        baselineLoad = {
-          val ls = Seq("load_avg_start", "load_avg_end")
-            .flatMap(f => Option(baseline.path(f))
-              .filter(_.isNumber).map(_.asDouble()))
-            .filter(_ >= 0)
-          if (ls.isEmpty) None else Some(ls.min)
-        },
-        // probe baseline, same quietest-sample discipline as the load:
-        // the FASTEST of the record's start/end probes is its truest
-        // uncontended speed (a record that started on a draining host
-        // probes slow at start and clean at end); non-positive or
-        // missing samples are excluded, and a record with none (any
-        // pre-probe record) yields None — the probe branch of the
-        // detector then stays disarmed while the load branch keeps
-        // working
-        baselineProbe = {
-          val ps = Seq("probe_ms_start", "probe_ms_end")
-            .flatMap(f => Option(baseline.path(f))
-              .filter(_.isNumber).map(_.asDouble()))
-            .filter(_ > 0)
-          if (ps.isEmpty) None else Some(ps.min)
-        },
-        retainedHostByKey = byKey.result())
-    } catch { case scala.util.control.NonFatal(_) => CommittedMeta() }
+    val refusal =
+      (if (prev.nameHash.isEmpty || prev.nameHash != now.nameHash)
+         Some(s"host differs: name_hash ${show(prev.nameHash)} vs ${show(now.nameHash)}")
+       else None)
+        .orElse(
+          if (prev.sessionCpus.isEmpty || prev.sessionCpus != now.sessionCpus)
+            Some(s"session width differs: session_cpus ${show(prev.sessionCpus)} vs ${show(now.sessionCpus)}")
+          else None)
+        .orElse(probe("single-thread probe", prev.probeMs, now.probeMs))
+        .orElse(probe("N-thread probe", prev.probeMtMs, now.probeMtMs))
+    refusal.toLeft(
+      prev.queries.keys.toSeq.sorted.flatMap(k => now.queries.get(k).map(n =>
+        k -> math.max(n.min, 1e-9) / math.max(prev.queries(k).min, 1e-9))))
+  }
+
+  /** One line over accepted ratios: geometric mean, how many keys are
+    * more than [[tolerance]] slower, and the five slowest. */
+  private[graft] def ratioSummary(ratios: Seq[(String, Double)]): String =
+    if (ratios.isEmpty) "no shared keys"
+    else {
+      val geo = math.exp(ratios.map(r => math.log(r._2)).sum / ratios.size)
+      val worst = ratios.sortBy(-_._2).take(5)
+        .map { case (k, r) => s"$k ${f3(r)}x" }.mkString(", ")
+      s"${ratios.size} shared keys, geomean ${f3(geo)}x, " +
+        s"${ratios.count(_._2 > tolerance)} > ${tolerance}x slower; worst: $worst"
+    }
+
+  private[graft] def writeTo(p: String, body: String): Unit =
+    try {
+      val w = new java.io.PrintWriter(p)
+      try w.println(body) finally w.close()
+    } catch { case e: Exception =>
+      // LOUD: a silently failed write leaves an older run's numbers in
+      // place while stdout reports success
+      System.err.println(s"[bench] artifact write failed for $p: $e")
+    }
+
+  /** The landing rule. `rawPath` always gets this run's record. The
+    * landing spot gets it only when no file is there yet or [[compare]]
+    * accepts the file's record against this one; otherwise it is left
+    * byte-identical. Returns the refusal reason, or the ratios (empty
+    * when nothing was there). A record is only ever this run's own —
+    * to re-record on a new host or width, move the old record away. */
+  private[graft] def land(body: String, rawPath: String,
+      landingPath: String): Either[String, Seq[(String, Double)]] = {
+    val verdict =
+      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(landingPath)))
+        Right(Nil)
+      else compare(readCommitted(landingPath), parseRecord(body.getBytes("UTF-8")))
+    writeTo(rawPath, body)
+    verdict.foreach(_ => writeTo(landingPath, body))
+    verdict
+  }
 
   /** Sink for the calibration kernel's result so the JIT cannot
     * dead-code-eliminate the loop being timed. */
   @volatile private[graft] var probeBlackhole: Long = 0L
 
   /** Single-threaded CPU calibration probe (milliseconds for a fixed
-    * deterministic xorshift kernel). The 1-min load average counts only
-    * THIS vm's runnable threads, so co-tenant / hypervisor-steal
-    * contention is invisible to the load-jump rule — the r16 refresh
-    * measured a fully corroborated +19% diffuse slowdown (slower on 87%
-    * of keys, the exact host-noise signature) at load_avg_start 1.4,
-    * BELOW the committed baseline, and nothing fired. The probe
-    * measures what load average cannot: how fast this host actually
-    * executes single-threaded work right now. Best-of-5 after 3
-    * warm-up rounds — the start-of-run probe executes in a cold JVM
-    * and the end-of-run one in a hot JVM, so only compiled-code rounds
-    * are timed to keep the two comparable; min over back-to-back
-    * rounds filters a stray GC/scheduling blip but keeps SUSTAINED
-    * steal fully visible (every round pays it). ~0.2 s total.
+    * deterministic xorshift kernel): how fast this host executes
+    * single-threaded work right now, which the 1-min load average (THIS
+    * vm's runnable threads only) cannot see under co-tenant or
+    * hypervisor steal. Best-of-5 after 3 warm-up rounds, so a cold-JVM
+    * start probe and a hot-JVM end probe time the same compiled code;
+    * the min filters a stray GC blip but keeps SUSTAINED steal visible.
     */
   private[graft] def calibrationProbeMs(): Double = {
     def round(): Double = {
@@ -311,102 +193,60 @@ object Bench {
     (1 to 5).map(_ => round()).min
   }
 
-  /** Is this candidate run a CONTENDED SAME-HOST rerun of the committed
-    * record (r14 judge item 1)? The refuse-to-regress merge's only
-    * quality signal used to be corroboration, and sustained contention
-    * corroborates slow numbers just fine — the r14 driver run (load
-    * 2.35 on the same host as the quiet 95.7 s record) shipped a fully
-    * corroborated 119.3 s record with zero retentions, silently
-    * regressing the trend ~25% with no red anywhere. A candidate is
-    * contended when ALL of:
-    *   - same host as the committed record (name hashes equal — load
-    *     averages are not comparable across machines, and a cross-host
-    *     delta is adjudicated by the host block, not masked here);
-    *   - the environment is measurably hotter, by EITHER signal: its
-    *     start load exceeds the committed record's by a real margin
-    *     (+1.0 absolute, or 2× with a 1.0-absolute floor — a 0.1→0.3
-    *     "doubling" between two quiet runs is noise, not contention),
-    *     OR the single-thread calibration probe runs >= 1.25× slower
-    *     than the record's (co-tenant / hypervisor-steal contention
-    *     slows the host without raising THIS vm's load average). The
-    *     1.25 factor was re-examined in r18 against a proposed 1.18
-    *     tightening and KEPT: the r18 session measured the host's
-    *     quiet-window baseline itself drifting 15.6 → 18.4–18.8 ms
-    *     (1.18×) between days with zero contention signature (load
-    *     0.06–0.8 stable for hours, independent probe steady), so a
-    *     1.18 threshold would flag legitimate day-to-day baseline
-    *     drift as contention and block the streak-resetting refreshes
-    *     the ≤3 retention gate depends on;
-    *   - it is slower on a supermajority (>= 70%) of the keys both
-    *     records carry — a hot host inflates diffusely across the whole
-    *     suite (the documented host-noise signature), while a genuine
-    *     code regression concentrates where the code changed.
-    * When true, the merge retains every TRUSTED committed entry
-    * wholesale (streak-bounded exactly like per-key retention, so
-    * consecutive hot runs still go red at the streak gate rather than
-    * masking a real slowdown forever), and the fresh contended numbers
-    * remain visible in the unmerged target/bench_full.json.
-    *
-    * The committed load compared against is the record's
-    * `trend_baseline_host` when present, else its `host` block: a
-    * record whose entries were retained wholesale by a contended run
-    * carries the HOT carrier's own load in `host` (which honestly
-    * describes the run that wrote the file), and comparing against
-    * that would blind the detector to every consecutive hot run after
-    * the first — the streak bound could never engage. The baseline
-    * threads forward through consecutive contended retentions, and a
-    * run that ships fresh clears it (its own host IS the baseline). */
-  private[graft] def contendedRun(
-      candHash: String, candLoad: Double,
-      commHash: Option[String], commLoad: Option[Double],
-      candidate: Map[String, Rec], committed: Map[String, Rec],
-      candProbe: Double = -1.0, commProbe: Option[Double] = None): Boolean = {
-    val sameHost = commHash.contains(candHash)
-    // getSystemLoadAverage returns -1.0 where the platform can't say; a
-    // negative load on EITHER side disqualifies the comparison (treating
-    // a stored -1 as real would degenerate the +1.0 branch to
-    // candLoad >= 0 and misclassify a genuine global code regression
-    // as contention), same as a missing host block does
-    val loadJump = candLoad >= 0 && commLoad.exists(cl => cl >= 0 &&
-      (candLoad >= cl + 1.0 || (candLoad >= 2 * cl && candLoad >= 1.0)))
-    // calibration-probe jump: the load average only counts THIS vm's
-    // runnable threads, so co-tenant / hypervisor-steal contention
-    // slows every key while the load reads quiet (the r16 shape: +19%
-    // diffuse at load 1.4 vs a 1.8 baseline). A >= 1.25x slowdown of
-    // the fixed single-thread kernel is far outside its quiet jitter
-    // (min-of-5 warm rounds lands within a few percent run-to-run) and
-    // says the host itself is slower right now, whatever the load
-    // claims. Missing/invalid probes on either side disqualify this
-    // branch only — pre-probe committed records keep the load rule.
-    val probeJump = candProbe > 0 &&
-      commProbe.exists(cp => cp > 0 && candProbe >= 1.25 * cp)
-    val shared = candidate.keySet intersect committed.keySet
-    val slower = shared.count(k => candidate(k).min > committed(k).min)
-    sameHost && (loadJump || probeJump) && shared.nonEmpty &&
-      slower.toDouble / shared.size >= 0.7
+  /** The same probe on `threads` threads at once (capped at 32), as the
+    * slowest thread's min-of-5: a host whose cores are shared runs the
+    * single-thread probe at full speed and this one slow. */
+  private[graft] def parallelProbeMs(threads: Int): Double = {
+    val n = math.min(math.max(threads, 1), 32)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    try {
+      val ready = new java.util.concurrent.CountDownLatch(n)
+      val tasks = (1 to n).map(_ => pool.submit(
+        new java.util.concurrent.Callable[Double] {
+          def call(): Double = {
+            ready.countDown(); ready.await(); calibrationProbeMs()
+          }
+        }))
+      tasks.map(_.get()).max
+    } finally pool.shutdownNow()
   }
 
-  /** THIS run's measurement-shape fields the artifact renders verbatim
-    * (pass layout, heal provenance, host block) plus the two host
-    * signals the contended-run detector reads — bundled so the render
-    * and the committed-merge cycle below are top-level, spec-drivable
-    * functions instead of closures inside main. */
+  /** The environment a record was measured in — its `host` block.
+    * `cpus` is the machine's processor count, `session_cpus` the
+    * `SPARK_GRAFT_CPUS` width the session ran at. */
+  private[graft] final case class Host(nameHash: String, cpuModel: String,
+      cpus: Int, sessionCpus: Int, loadStart: Double, loadEnd: Double,
+      probeMsStart: Double, probeMsEnd: Double,
+      probeMtMsStart: Double, probeMtMsEnd: Double) {
+    def json: String =
+      s"""{"name_hash":"$nameHash","cpu_model":"${jsonEscape(cpuModel)}",""" +
+        s""""cpus":$cpus,"session_cpus":$sessionCpus,""" +
+        s""""load_avg_start":${f3(loadStart)},"load_avg_end":${f3(loadEnd)},""" +
+        s""""probe_ms_start":${f3(probeMsStart)},"probe_ms_end":${f3(probeMsEnd)},""" +
+        s""""probe_mt_ms_start":${f3(probeMtMsStart)},"probe_mt_ms_end":${f3(probeMtMsEnd)}}"""
+  }
+
+  /** THIS run's measurement-shape fields the record renders verbatim
+    * (pass layout, heal provenance, host block). */
   private[graft] final case class RunInfo(
       passes: Int, runsPerPass: Int, healPasses: Int,
       healed: Seq[String], healSepSec: Int, pairHealPasses: Int,
-      hostJson: String, hostHash: String, loadStart: Double,
-      probeMs: Double = -1.0)
+      host: Host)
 
   private[graft] def f3(v: Double): String =
     "%.3f".formatLocal(java.util.Locale.ROOT, v)
 
-  /** Render one committed-artifact body (see main for the field-level
-    * rationale comments; the schema is gated by BenchArtifactSpec). */
+  /** Render one run's record, nothing carried over from an earlier one:
+    * {min, median, spread, corrob, windows} per key ordered by min desc
+    * (see [[WindowStats]]); keys with no successful run listed under
+    * `failures`, never as negative times in the map; pass layout, heal
+    * provenance and host block; and the streaming floor — the fixed
+    * micro-batch replay cost (checkpoint and state init per
+    * events_stream_* / events_cdc_stream_* query) that amortizes at
+    * scale, named so a total-reader subtracts it before comparing
+    * totals. BenchArtifactSpec gates the schema. */
   private[graft] def renderFull(info: RunInfo,
-      entries: Seq[(String, Rec)], fails: Seq[String],
-      retained: Seq[String], retainedFail: Seq[String],
-      streaks: Map[String, Int], retainedHosts: Map[String, String],
-      baselineHost: Option[String], contendedFresh: Seq[String]): String = {
+      entries: Seq[(String, Rec)], fails: Seq[String]): String = {
     val qmap = entries.sortBy(-_._2.min)
       .map { case (k, r) =>
         s"\"$k\":{\"min\":${f3(r.min)},\"median\":${f3(r.median)},\"spread\":${f3(r.spread)},\"corrob\":${f3(r.corrob)},\"windows\":${r.windows}}" }
@@ -417,128 +257,19 @@ object Bench {
       s"start is >= ${info.healSepSec}s of wall-clock from the best window's " +
       "start, and the heal loop tops up inter-pass gaps to that floor -- " +
       "corrob<=1.5 certifies the min via two genuinely separated windows"
-    val retentionNote = "retained_* keys carry the PRIOR committed " +
-      "record's entry because this run's was untrusted-and-slower, " +
-      "failed, inverted the headline pair, or the whole run was a " +
-      "contended same-host rerun -- passes/heal/host fields describe " +
-      "THIS run only; retained_entry_hosts groups every retained key " +
-      "under the host block of the run that ACTUALLY measured it, " +
-      "threaded per-key across consecutive retentions (never the " +
-      "intermediate record that merely carried it forward); " +
-      "retention_streaks counts CONSECUTIVE runs a key has been " +
-      s"retained (gated <= $maxRetentionStreak so retention can never " +
-      "permanently mask a persistent disagreement); trend_baseline_host " +
-      "names the quiet environment whose entries a contended retention " +
-      "carried forward (the next run's load-jump baseline), null when " +
-      "this run's own host measured the entries; contended_fresh_keys " +
-      "names keys that shipped THIS hot run's numbers during a " +
-      "contended retention because no trusted committed twin existed -- " +
-      "the record is a quiet/hot SPLICE for exactly those keys, whose " +
-      "environment is this run's own host block, NOT trend_baseline_host"
-    val streaksJson = streaks.toSeq.sortBy(_._1)
-      .map { case (k, n) => s"\"$k\":$n" }.mkString("{", ",", "}")
-    // per-key measurement provenance, grouped by host block so the
-    // common case (every retained key from one prior record) stays
-    // one group; sorted for byte-stable output
-    val retainedHostsJson = retainedHosts.groupBy(_._2).toSeq.sortBy(_._1)
-      .map { case (h, m) =>
-        s"""{"host":$h,"keys":${arr(m.keys.toSeq.sorted)}}""" }
-      .mkString("[", ",", "]")
     val streaming = entries.filter { case (k, _) =>
       k.startsWith("events_stream_") || k.startsWith("events_cdc_stream_") }
     s"""{"queries":$qmap,"failures":${arr(fails)},"passes":${info.passes},"runs_per_pass":${info.runsPerPass},""" +
       s""""heal_passes":${info.healPasses},"healed":${arr(info.healed)},"heal_note":"$healNote","heal_sep_sec":${info.healSepSec},""" +
-      s""""pair_heal_passes":${info.pairHealPasses},""" +
-      s""""retained_from_committed":${arr(retained)},"retained_after_failure":${arr(retainedFail)},"retention_note":"$retentionNote",""" +
-      s""""retention_streaks":$streaksJson,"retained_entry_hosts":$retainedHostsJson,""" +
-      s""""contended_fresh_keys":${arr(contendedFresh)},""" +
-      s""""host":${info.hostJson},"trend_baseline_host":${baselineHost.getOrElse("null")},""" +
+      s""""pair_heal_passes":${info.pairHealPasses},"host":${info.host.json},""" +
       s""""streaming_floor_sec":${f3(streaming.map(_._2.min).sum)},"streaming_floor_keys":${streaming.size},""" +
       s""""streaming_floor_note":"fixed micro-batch replay machinery (checkpoint+state init per query); amortizes at scale -- subtract before comparing totals"}"""
   }
 
-  private[graft] final case class MergeOutcome(
-      committedBody: String, rawBody: String, contended: Boolean,
-      retained: Seq[String], retainedFail: Seq[String],
-      priorBaselineLoad: Option[Double],
-      priorBaselineProbe: Option[Double])
-
-  /** One bench run's full committed-artifact cycle — read the prior
-    * record at `committedPath`, detect a contended same-host rerun
-    * against its trend-baseline host block, refuse-to-regress merge,
-    * thread per-key provenance and streaks, render both bodies. This is
-    * the exact composition main() drives; extracted so an integration
-    * spec can feed consecutive synthetic runs through the REAL cycle
-    * (artifact on disk → meta read → wholesale retention →
-    * trend_baseline_host threading → streak accounting going red at the
-    * gate) instead of trusting the pieces to compose by argument. Pure
-    * except for reading `committedPath`; the caller writes the returned
-    * bodies. */
-  private[graft] def mergeCycle(committedPath: String,
-      candidate: Seq[(String, Option[Rec])], info: RunInfo,
-      enforcePair: Boolean, mergeDisabled: Boolean): MergeOutcome = {
-    val rawEntries = candidate.collect { case (k, Some(r)) => k -> r }
-    val rawFailures = candidate.collect { case (k, None) => k }
-    val priorCommitted =
-      if (mergeDisabled) Map.empty[String, Rec] else readCommitted(committedPath)
-    val priorMeta =
-      if (mergeDisabled) CommittedMeta() else readCommittedMeta(committedPath)
-    // contended-run detection (r14 judge item 1) reads the host block
-    // the artifact writes (the trend baseline, when the record's entries
-    // were themselves retained from a quieter run): same host, a real
-    // load jump over the committed record, slower on a supermajority of
-    // shared keys
-    val contended = !mergeDisabled && contendedRun(info.hostHash,
-      info.loadStart, priorMeta.baselineHash, priorMeta.baselineLoad,
-      rawEntries.toMap, priorCommitted,
-      candProbe = info.probeMs, commProbe = priorMeta.baselineProbe)
-    val (mEntries, mRetained, mRetainedFail, mFailures, mStreaks) =
-      mergeWithCommitted(candidate, priorCommitted, enforcePair = enforcePair,
-        priorStreaks = priorMeta.streaks, contended = contended)
-    // per-key host provenance for every retained entry: the prior
-    // record's own per-key map wins (the entry was already a retention
-    // there — measured even further back); otherwise the prior record
-    // measured it itself and its host block is the truth
-    val retainedHostByKey: Map[String, String] =
-      (mRetained ++ mRetainedFail).iterator.map { k =>
-        k -> priorMeta.retainedHostByKey.getOrElse(k,
-          priorMeta.hostJson.getOrElse("null"))
-      }.toMap
-    // the next run's contended-comparison baseline: a contended
-    // retention carries the PRIOR record's baseline forward (the quiet
-    // environment whose entries the record now holds — itself threaded
-    // if the prior record was already a contended carrier); a run that
-    // ships its own numbers clears it, because its own host block IS
-    // the environment that measured the entries
-    val trendBaselineHost: Option[String] =
-      if (contended) priorMeta.baselineJson.orElse(priorMeta.hostJson)
-      else None
-    // splice visibility (r15 ADVICE): under a contended verdict only
-    // TRUSTED committed entries are retained — by design an untrusted
-    // prior number must not launder itself forward — so keys with no
-    // trusted committed twin ship THIS hot run's numbers. Named
-    // explicitly so trend_baseline_host's provenance claim never
-    // silently overstates which entries the quiet environment measured.
-    val retainedSet = (mRetained ++ mRetainedFail).toSet
-    val contendedFresh =
-      if (contended) mEntries.collect { case (k, _) if !retainedSet(k) => k }
-      else Nil
-    MergeOutcome(
-      committedBody = renderFull(info, mEntries, mFailures, mRetained,
-        mRetainedFail, mStreaks, retainedHostByKey, trendBaselineHost,
-        contendedFresh),
-      rawBody = renderFull(info, rawEntries, rawFailures, Nil, Nil,
-        Map.empty, Map.empty, None, Nil),
-      contended = contended, retained = mRetained,
-      retainedFail = mRetainedFail,
-      priorBaselineLoad = priorMeta.baselineLoad,
-      priorBaselineProbe = priorMeta.baselineProbe)
-  }
-
   /** Minimal JSON string escape for free-text fields (cpu model): a
     * backslash or control character landing verbatim would corrupt the
-    * committed artifact — BenchArtifactSpec then errors on parse AND
-    * the next run's readCommitted silently disables the merge. */
+    * record — BenchArtifactSpec then errors on parse, and the next run's
+    * compare refuses the unreadable record. */
   private[graft] def jsonEscape(s: String): String =
     s.flatMap {
       case '"'           => "\\\""
@@ -561,25 +292,33 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // the SHARED session config (GraftSession): the benchmarked engine
-    // must be configured identically to the verified one
-    // host-load snapshot BEFORE the session spins up its 32 local
-    // threads — the AMBIENT load, paired with an end-of-run snapshot in
-    // the artifact's host block, so a committed record is
-    // self-describing about the environment that produced it (r13
-    // ADVICE: cross-round comparisons silently mixed hosts). Sampling
-    // after GraftSession.build charged the session's own spin-up burn
-    // to the environment (r15's refresh recorded start 10.5 on a box
-    // that was already draining), which both poisoned the next run's
-    // contended baseline high and mislabeled quiet runs as hot.
+    // Integer knobs parse FAIL-FAST, naming the variable, BEFORE any
+    // measurement: a malformed heal cap must not throw after minutes of
+    // completed base-suite measurement.
+    def envInt(name: String, default: Int): Int =
+      sys.env.get(name).map { raw =>
+        try raw.trim.toInt
+        catch { case _: NumberFormatException =>
+          throw new IllegalArgumentException(
+            s"$name must be an integer, got '$raw'")
+        }
+      }.getOrElse(default)
+    // the session width, stamped into the host block as session_cpus:
+    // records from different widths are different experiments
+    val sessionCpus = envInt("SPARK_GRAFT_CPUS", 32)
+    // host-load snapshot BEFORE the session spins up its local threads —
+    // the AMBIENT load, paired with an end-of-run snapshot in the host
+    // block; sampling after GraftSession.build charged the session's own
+    // spin-up burn to the environment.
     val loadStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    // single-thread calibration probe of the AMBIENT host speed, taken
-    // with the load snapshot before any parallel work — the detector's
-    // steal-contention signal (see calibrationProbeMs)
+    // calibration probes of the AMBIENT host speed, taken with the load
+    // snapshot before any parallel work (see calibrationProbeMs)
     val probeStart = calibrationProbeMs()
-    val spark = GraftSession.build(cpus)
+    val probeMtStart = parallelProbeMs(sessionCpus)
+    // the SHARED session config (GraftSession): the benchmarked engine
+    // must be configured identically to the verified one
+    val spark = GraftSession.build(sessionCpus.toString)
     // Scoped, bench-only silence for WindowExec's no-partition warning:
     // every global window in the engine runs AFTER an orderBy().limit(N<=20)
     // TakeOrdered (single partition of <=20 rows by construction — audited
@@ -618,19 +357,6 @@ object Bench {
     // base passes (default 4 = 2 passes × 2); within a pass a key's
     // runs stay back-to-back so run 2 keeps run 1's caches — the
     // materialized-sketch-table semantics the dedup family declares.
-    // All integer knobs parse FAIL-FAST with the env var named, and all
-    // BEFORE any measurement: a bare .toInt on a malformed value (a '3x'
-    // typo, an empty export) threw a bare NumberFormatException — and for
-    // the heal cap, threw AFTER the whole base suite had already run,
-    // discarding minutes of completed measurement (r12 ADVICE).
-    def envInt(name: String, default: Int): Int =
-      sys.env.get(name).map { raw =>
-        try raw.trim.toInt
-        catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"$name must be an integer, got '$raw'")
-        }
-      }.getOrElse(default)
     val passes = math.max(1, envInt("SPARK_GRAFT_BENCH_PASSES", 2))
     val runs = math.max(passes, envInt("SPARK_GRAFT_BENCH_RUNS", 4))
     val healCap = math.max(0, envInt("SPARK_GRAFT_BENCH_HEAL_PASSES", 3))
@@ -643,8 +369,7 @@ object Bench {
     // prunes columns and drops top-level sorts, so the measured work
     // under-states what the oracle path pays. The noop writer evaluates
     // every output row/column (the honest per-query cost) with zero sink
-    // IO. (r3 carried one extra count() pass for r2 comparability; the
-    // noop basis is the baseline now — r3 noop total 49.4 s.)
+    // IO.
     def noopRun(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.mode("overwrite").format("noop").save()
     def timed(body: => Unit): Option[Double] = {
@@ -657,12 +382,9 @@ object Bench {
       // lands at all
       catch { case scala.util.control.NonFatal(_) => None }
     }
-    // lower-median over successful runs: with min alone, a noisy
-    // measurement window (the r5 driver/builder 57-vs-44 s delta) is
-    // indistinguishable from a code regression; {min, median} together
-    // make a noisy record self-diagnosing — median >> min says
-    // environment contention, median ≈ min ≫ last round says real
-    // regression
+    // median over successful runs: {min, median} together make a noisy
+    // record self-diagnosing — median >> min says environment
+    // contention, median ≈ min ≫ last round says real regression
     def median(ts: Seq[Double]): Double = {
       val s = ts.sorted
       if (s.size % 2 == 1) s(s.size / 2)
@@ -716,14 +438,11 @@ object Bench {
     // demonstrably irreducible THIS run and stay visible via corrob).
     // spread (worst/best window) is deliberately NOT the convergence
     // test: healing a polluted early window RAISES spread (history), and
-    // a loop on it would never terminate. Window separation is ENFORCED,
-    // not best-effort (the r12 heal_note caveat, retired per the r12
-    // judge): corrob admits a corroborating window only when its start
-    // sits >= healSepSec of wall-clock from the best window's start, and
-    // the heal loop tops up the gap between passes to that same floor —
-    // so two agreeing windows are genuinely independent even for keys at
-    // the tail of the base suite, whose first heal window used to open
-    // seconds after their pass-2 window closed.
+    // a loop on it would never terminate. corrob admits a corroborating
+    // window only when its start sits >= healSepSec from the best
+    // window's start, and the heal loop tops up the gap between passes
+    // to that same floor, so two agreeing windows are independent even
+    // for keys at the tail of the base suite.
     def spreadOf(name: String): Double = WindowStats.spread(passWins(name))
     def corrobOf(name: String): Double =
       WindowStats.corrob(passWins(name), healSepSec.toDouble)
@@ -793,90 +512,51 @@ object Bench {
             corrobOf(name), passWins(name).size))
         else None)
       }
-    val rawEntries = candidate.collect { case (k, Some(r)) => k -> r }
-    // The driver keeps only the last 2000 chars of output (r1's
-    // full-precision 76-entry line overflowed that and failed to parse),
-    // so the stdout line reports the headline queries + the total over
-    // ALL queries; the full per-query map goes to a local file.
-    val rmap = rawEntries.toMap
-    // stdout line: THIS run's raw mins only (driver parse compatibility
-    // — format unchanged; the stdout record must report what this run
-    // measured, never numbers retained from an earlier session)
+    val entries = candidate.collect { case (k, Some(r)) => k -> r }
+    val failures = candidate.collect { case (k, None) => k }
+    // A consumer that keeps only the last 2000 chars of output still
+    // gets a whole stdout line: it reports the headline queries + the
+    // total over ALL queries; the full per-query map goes to a file.
+    val rmap = entries.toMap
     val qs = Bench.headlineKeys
       .flatMap(k => rmap.get(k).map(v => s"\"$k\":${f3(v.min)}"))
       .mkString("{", ",", "}")
-    // Host fingerprint (r13 ADVICE): committed records regenerated on a
-    // different host dropped the suite total 93.6 -> 73.0 s with no code
-    // change, and nothing in the JSON said so — a trend-reader mixing
-    // rounds silently mixed hosts. name_hash (not the raw hostname — an
-    // opaque stable id is enough to tell "same host" from "different"),
-    // CPU model, core count, and the start/end 1-min load averages make
-    // every record self-describing about its environment.
+    // Host fingerprint: records regenerated on a different host dropped
+    // the suite total 93.6 -> 73.0 s with no code change, and nothing in
+    // the JSON said so. name_hash is an opaque stable id, not the raw
+    // hostname; it, the session width and both probe pairs are what
+    // compare reads.
     val hostNameHash = {
       val name = try java.net.InetAddress.getLocalHost.getHostName
         catch { case scala.util.control.NonFatal(_) => "unknown" }
       java.security.MessageDigest.getInstance("MD5")
         .digest(name.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
     }
-    val hostJson = {
-      val cpuModel = try {
-        val src = scala.io.Source.fromFile("/proc/cpuinfo")
-        try src.getLines()
-          .collectFirst { case l if l.startsWith("model name") =>
-            l.split(":", 2)(1).trim }
-          .getOrElse("unknown")
-        finally src.close()
-      } catch { case scala.util.control.NonFatal(_) => "unknown" }
-      val loadEnd = java.lang.management.ManagementFactory
-        .getOperatingSystemMXBean.getSystemLoadAverage
-      // end-of-run probe: the suite's 32 worker threads are idle by
-      // now, so this samples post-run ambient speed — paired with the
-      // start probe it gives the baseline reader a quietest-sample
-      // choice, exactly like the load pair
-      val probeEnd = calibrationProbeMs()
-      val procs = Runtime.getRuntime.availableProcessors()
-      s"""{"name_hash":"$hostNameHash","cpu_model":"${jsonEscape(cpuModel)}",""" +
-        s""""cpus":$procs,"load_avg_start":${f3(loadStart)},"load_avg_end":${f3(loadEnd)},""" +
-        s""""probe_ms_start":${f3(probeStart)},"probe_ms_end":${f3(probeEnd)}}"""
-    }
-    // committed full map: {min, median, spread, corrob, windows} per
-    // query, ordered by min desc. spread = worst pass-min / best
-    // pass-min: ~1.0 means every measurement window agreed; >>1 means
-    // some window was contended — HISTORY, including windows healing
-    // later proved polluted. corrob = best SEPARATED pass-min / best
-    // pass-min, where a window only counts as separated when its start
-    // sits >= healSepSec from the best window's start: the TRUST
-    // statistic for the committed min itself —
-    // <=1.5 means a second independent window confirmed the min
-    // (pollution only inflates, so two agreeing low windows = clean);
-    // >1.5 after healing means the min is uncorroborated and
-    // irreducible this run. windows = distinct measurement windows with
-    // a sample; both ratios are vacuous below 2 of them (corrob -1).
-    // Queries with NO successful run are segregated into a "failures"
-    // list instead of -1 sentinels in the timing map — a consumer
-    // aggregating or ranking the map must never silently ingest negative
-    // values (r8 ADVICE), and a failure reads as a failure, not a time.
-    // Streaming floor (r11 judge item 3): the events_stream_* /
-    // events_cdc_stream_* replays are real micro-batch machinery —
-    // checkpoint init, sentinel batches, state-store setup — a FIXED
-    // per-query cost that amortizes at scale instead of growing with
-    // data. Named in the artifact so a total-reader subtracts it before
-    // comparing totals across surface changes.
-    val info = RunInfo(passes, runsPerPass, healPasses, healedKeys.toSeq,
-      healSepSec, pairHealPasses, hostJson, hostNameHash, loadStart,
-      probeMs = probeStart)
-    // The full per-query map is a committed artifact (BENCH_full.json in
-    // the repo root) so every query's round-over-round trend is auditable
-    // — the stdout line only survives truncated to its last 2000 chars.
-    // A SPARK_GRAFT_BENCH_ONLY subset must never clobber the committed
-    // full-run artifact: with the filter active, the default landing spot
-    // stays in target/ unless the caller names a path explicitly. The
-    // committed landing spot is also SF-AWARE: each committed trend file
-    // holds one scale's numbers (BENCH_full.json = sf0.1,
-    // BENCH_full_sf001.json = sf0.001), so a full run at any other
-    // corpus — or a smoke run at the small scale — must land in target/
-    // rather than silently rewriting a committed artifact with numbers
-    // from a different data scale.
+    val cpuModel = try {
+      val src = scala.io.Source.fromFile("/proc/cpuinfo")
+      try src.getLines()
+        .collectFirst { case l if l.startsWith("model name") =>
+          l.split(":", 2)(1).trim }
+        .getOrElse("unknown")
+      finally src.close()
+    } catch { case scala.util.control.NonFatal(_) => "unknown" }
+    val loadEnd = java.lang.management.ManagementFactory
+      .getOperatingSystemMXBean.getSystemLoadAverage
+    // end-of-run probes: the suite's worker threads are idle by now, so
+    // these sample post-run ambient speed — paired with the start probes
+    // they give compare a quietest-sample choice
+    val host = Host(hostNameHash, cpuModel,
+      Runtime.getRuntime.availableProcessors(), sessionCpus, loadStart,
+      loadEnd, probeStart, calibrationProbeMs(), probeMtStart,
+      parallelProbeMs(sessionCpus))
+    val body = renderFull(RunInfo(passes, runsPerPass, healPasses,
+      healedKeys.toSeq, healSepSec, pairHealPasses, host), entries, failures)
+    // The full per-query map is a committed artifact so every query's
+    // trend is auditable — the stdout line only survives truncated to its
+    // last 2000 chars. The default landing spot is SF-AWARE (each
+    // committed file holds one scale's numbers), and a
+    // SPARK_GRAFT_BENCH_ONLY subset or another corpus lands in target/
+    // unless the caller names a path.
     val sfBase = new java.io.File(sfDir).getName
     val fullDefault =
       if (only.nonEmpty) "target/bench_only.json"
@@ -885,51 +565,20 @@ object Bench {
         case "sf0.001" => "BENCH_full_sf001.json"
         case b         => s"target/bench_full_$b.json"
       }
-    val committedPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", fullDefault)
-    // Merge against the prior committed record at the landing spot
-    // (refuse-to-regress, see mergeWithCommitted) — the raw candidate
-    // always lands unmerged in target/bench_full.json for diagnosis.
-    // SPARK_GRAFT_BENCH_FRESH (any value) disables the merge, e.g. after
-    // a code change that legitimately re-times a key both ways; a
-    // BENCH_ONLY subset never merges (its landing spot is scratch).
-    val mergeDisabled =
-      sys.env.contains("SPARK_GRAFT_BENCH_FRESH") || only.nonEmpty
-    // the whole committed-artifact cycle (read prior → contended-run
-    // detection → refuse-to-regress merge → render) is one extracted,
-    // spec-driven function — see mergeCycle
-    val outcome = mergeCycle(committedPath, candidate, info,
-      enforcePair = pairApplies, mergeDisabled = mergeDisabled)
-    if (outcome.contended)
-      // name BOTH signals: a steal-contended verdict fires on the probe
-      // with the load reading quiet, and a load-only message would send
-      // the reader chasing the wrong number
-      System.err.println(f"[bench] CONTENDED same-host run (load_avg_start " +
-        f"$loadStart%.2f vs committed ${outcome.priorBaselineLoad.getOrElse(-1.0)}%.2f; " +
-        f"probe_ms $probeStart%.1f vs committed " +
-        f"${outcome.priorBaselineProbe.getOrElse(-1.0)}%.1f); " +
-        "retaining the committed record wholesale — fresh numbers stay in " +
-        "target/bench_full.json")
-    if (!outcome.contended &&
-        (outcome.retained.nonEmpty || outcome.retainedFail.nonEmpty))
-      System.err.println("[bench] retained prior committed entries for: " +
-        (outcome.retained ++ outcome.retainedFail).mkString(", "))
-    def writeTo(p: String, body: String): Unit =
-      try {
-        val w = new java.io.PrintWriter(p)
-        try w.println(body) finally w.close()
-      } catch { case e: Exception =>
-        // LOUD: a silently failed write leaves the PREVIOUS round's
-        // numbers in the committed artifact while stdout reports
-        // success — a trend-reader would ingest stale timings as
-        // this code's (the stale-artifact failure the sf-aware
-        // landing spot exists to prevent)
-        System.err.println(s"[bench] artifact write failed for $p: $e")
-      }
-    writeTo("target/bench_full.json", outcome.rawBody)
-    writeTo(committedPath, outcome.committedBody)
-    // totals over SUCCESSFUL queries only — and over THIS run's raw
-    // numbers, like the rest of the stdout line
-    val total = rawEntries.map(_._2.min).sum
+    val landingPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", fullDefault)
+    land(body, "target/bench_full.json", landingPath) match {
+      case Left(reason) =>
+        System.err.println(s"[bench] $landingPath kept, not comparable: " +
+          s"$reason; this run's record is in target/bench_full.json (to " +
+          "re-record, move the old record away)")
+      case Right(Nil) =>
+        System.err.println(s"[bench] landed at $landingPath")
+      case Right(ratios) =>
+        System.err.println(s"[bench] landed at $landingPath: " +
+          ratioSummary(ratios))
+    }
+    // totals over SUCCESSFUL queries only
+    val total = entries.map(_._2.min).sum
     // "runs" reports the ACTUAL base samples per key (passes ×
     // runs-per-pass), not the raw env request — ceil-division can round
     // the request up, and a trend-reader normalizing by runs must not

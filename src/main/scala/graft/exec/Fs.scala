@@ -57,21 +57,32 @@ object Fs {
     * disk-backed /tmp charges to every replay. A deployment whose
     * checkpoints must survive the machine sets SPARK_GRAFT_SCRATCH (or
     * uses the real pipeline entrypoints, which take explicit checkpoint
-    * locations). Resolved once per JVM.
+    * locations). Resolved once per JVM; `/dev/shm` counts only with at
+    * least [[MinShmBytes]] usable (see [[chooseScratch]]).
     */
   lazy val scratchBase: java.nio.file.Path = {
-    val base = sys.env.get("SPARK_GRAFT_SCRATCH")
-      .map(java.nio.file.Paths.get(_))
-      .orElse {
-        val shm = java.nio.file.Paths.get("/dev/shm")
-        if (java.nio.file.Files.isDirectory(shm) &&
-            java.nio.file.Files.isWritable(shm)) Some(shm) else None
-      }
-      .getOrElse(java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir", "/tmp")))
+    val base = chooseScratch(sys.env.get("SPARK_GRAFT_SCRATCH"),
+      java.nio.file.Paths.get("/dev/shm"), MinShmBytes)
     java.nio.file.Files.createDirectories(base)
     base
   }
+
+  /** The usable space `/dev/shm` must have before scratch prefers it:
+    * Docker's default `--shm-size` of 64 MB fills mid-replay, long
+    * before a disk-backed tmpdir would. */
+  private val MinShmBytes: Long = 1L << 30
+
+  /** [[scratchBase]]'s choice: `explicit` when set, else `shm` when it is
+    * a writable directory with at least `minUsable` bytes usable, else
+    * `java.io.tmpdir`. */
+  private[graft] def chooseScratch(explicit: Option[String],
+      shm: java.nio.file.Path, minUsable: Long): java.nio.file.Path =
+    explicit.map(java.nio.file.Paths.get(_))
+      .orElse(Some(shm).filter(d => java.nio.file.Files.isDirectory(d) &&
+        java.nio.file.Files.isWritable(d) &&
+        d.toFile.getUsableSpace >= minUsable))
+      .getOrElse(java.nio.file.Paths.get(
+        System.getProperty("java.io.tmpdir", "/tmp")))
 
   /** A fresh throwaway scratch directory under [[scratchBase]] —
     * drop-in for `Files.createTempDirectory(prefix)` at the replay
