@@ -57,7 +57,8 @@ object Bench {
     * A field the block lacks is None. */
   private[graft] final case class Record(queries: Map[String, Rec],
       nameHash: Option[String] = None, sessionCpus: Option[Int] = None,
-      probeMs: Option[Double] = None, probeMtMs: Option[Double] = None)
+      probeMs: Option[Double] = None, probeMtMs: Option[Double] = None,
+      cpus: Option[Int] = None, cpuModel: Option[String] = None)
 
   /** Read a record; a missing or unreadable file parses as empty. */
   private[graft] def readCommitted(path: String): Record =
@@ -92,16 +93,21 @@ object Bench {
       Record(b.result(),
         nameHash = Some(host.path("name_hash")).filter(_.isTextual).map(_.asText()),
         sessionCpus = Some(host.path("session_cpus")).filter(_.isInt).map(_.asInt()),
-        probeMs = quietest("probe_ms"), probeMtMs = quietest("probe_mt_ms"))
+        probeMs = quietest("probe_ms"), probeMtMs = quietest("probe_mt_ms"),
+        cpus = Some(host.path("cpus")).filter(_.isInt).map(_.asInt()),
+        cpuModel = Some(host.path("cpu_model")).filter(_.isTextual).map(_.asText()))
     } catch { case scala.util.control.NonFatal(_) => Record(Map.empty) }
 
   /** Are `prev` and `now` measurements of the same environment? If so,
     * the per-key `now.min / prev.min` ratios over the keys both carry;
-    * if not, the reason. Refused when the hosts differ, the session
-    * widths differ (or either record lacks one), or either probe pair
-    * differs by [[tolerance]] or more (or is missing). The single-thread
-    * probe alone passed the r18 82.3-vs-109.6 s same-day swing clean;
-    * the N-thread probe is what sees a host whose cores are shared. */
+    * if not, the reason. Refused when the hosts differ (`name_hash`,
+    * which both records must carry), the session widths differ (or
+    * either record lacks one), the machines differ (`cpus` or
+    * `cpu_model`: a container's hostname hash collides across machines),
+    * or either probe pair differs by [[tolerance]] or more (or is
+    * missing). The single-thread probe alone passed the r18
+    * 82.3-vs-109.6 s same-day swing clean; the N-thread probe is what
+    * sees a host whose cores are shared. */
   private[graft] def compare(prev: Record, now: Record)
       : Either[String, Seq[(String, Double)]] = {
     def show(v: Option[Any]) = v.fold("missing")(_.toString)
@@ -119,6 +125,14 @@ object Bench {
         .orElse(
           if (prev.sessionCpus.isEmpty || prev.sessionCpus != now.sessionCpus)
             Some(s"session width differs: session_cpus ${show(prev.sessionCpus)} vs ${show(now.sessionCpus)}")
+          else None)
+        .orElse(
+          if (prev.cpus != now.cpus)
+            Some(s"machine differs: cpus ${show(prev.cpus)} vs ${show(now.cpus)}")
+          else None)
+        .orElse(
+          if (prev.cpuModel != now.cpuModel)
+            Some(s"machine differs: cpu_model ${show(prev.cpuModel)} vs ${show(now.cpuModel)}")
           else None)
         .orElse(probe("single-thread probe", prev.probeMs, now.probeMs))
         .orElse(probe("N-thread probe", prev.probeMtMs, now.probeMtMs))

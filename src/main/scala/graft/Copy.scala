@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.exec.{Pipeline, Scans, Sinks}
+import graft.exec.{Dest, Pipeline, Scans, Sinks}
 import graft.meta.Catalog
 import graft.model._
 import graft.plan.{Analyzer, PlanConfig}
@@ -52,12 +52,12 @@ object Copy {
   /** Run a full copy and return the process exit code (testable seam —
     * `main` wraps it in `sys.exit`).
     *
-    * `destDir` selects the sink kind: a filesystem path lands parquet
-    * tables; a `jdbc:` URL lands batched partition-parallel INSERTs into
-    * the live database (the reference's actual destination shape), with
-    * reconciliation counting the destination table and `sync-identity`
-    * reseeding the real generator via `ALTER TABLE … RESTART WITH`
-    * ([[Sinks.reseedIdentityJdbc]]) instead of the sidecar.
+    * `destDir` names the destination ([[Dest.of]]): a filesystem path
+    * lands parquet tables; a `jdbc:` URL lands batched partition-parallel
+    * INSERTs into the live database (the reference's actual destination
+    * shape). The run never branches on the kind: every table loads
+    * through [[Pipeline.load]], reconciles through [[Dest.rows]] and
+    * syncs identity through [[Dest.syncIdentity]].
     *
     * `destMeta` overrides the destination-side [[TableMeta]] per table
     * (the analog of collecting the destination catalog,
@@ -109,17 +109,12 @@ object Copy {
       syncIdentity: Boolean = false,
       /** reseed executor (testable seam, defaults to the real sidecar
         * write): the spec injects a faulty reseed to prove the read-back
-        * verify catches it, the reference's error branch. FILE-SINK ONLY:
-        * a `jdbc:` destination always reseeds the live generator via
-        * [[Sinks.reseedIdentityJdbc]] (its failure branch is exercised
-        * against a real generator-less Derby table in CopySpec). */
+        * verify catches it, the reference's error branch. FILE-SINK ONLY
+        * ([[Dest.Files]]): a `jdbc:` destination always reseeds the live
+        * generator (its failure branch is exercised against a real
+        * generator-less Derby table in CopySpec). */
       reseedIdentity: (SparkSession, String, String, Long) => Unit =
         Sinks.reseedIdentity): Int = {
-    // Sink-kind switch: a `jdbc:` destination runs the copy, the
-    // reconciliation count, and the identity sync against the LIVE
-    // database (the reference's actual destination shape) instead of the
-    // parquet file sink. Everything source-side — analysis, safe-check
-    // footprints, timeouts — is sink-agnostic and shared.
     // normalize + validate the safe-check mode HERE, not just in the
     // config loader: a direct caller passing the config surface's
     // "read-only" spelling (or any typo) would otherwise silently run
@@ -127,13 +122,7 @@ object Copy {
     // exists to catch. IllegalArgumentException maps to exit 1 in main.
     // SHARED normalizer with the loader, so the mode list cannot fork.
     val safeCheckMode = CopyConfig.normalizeSafeCheck(safeCheck)
-    val jdbcDest = destDir.startsWith("jdbc:")
-    def jdbcProps: java.util.Properties = {
-      val p = new java.util.Properties()
-      if (destDir.startsWith("jdbc:derby:"))
-        p.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-      p
-    }
+    val dest = Dest.of(spark, destDir, reseedIdentity)
     val tables = Pipeline.expandTableList(patterns)
     // an empty expansion (e.g. a typo'd wildcard matching nothing) must
     // NOT fall through to a vacuous success: every later phase iterates
@@ -152,7 +141,8 @@ object Copy {
     // Analysis phase: collect + analyze every table BEFORE any copy. The
     // first non-success in LIST order aborts the whole run with its code
     // (or its exception), exactly as the serial loop decided — never
-    // whichever table happened to finish first.
+    // whichever table happened to finish first. Its work items are what
+    // the copy phase loads: no table is checked or analyzed twice.
     val analysis = inOrder(tables, width) { t =>
       scala.util.Try {
         if (!Catalog.declared.contains(t) || !Pipeline.safetyCheck(spark, sfDir, t))
@@ -161,27 +151,27 @@ object Copy {
           val src = Catalog.collect(spark, sfDir, t)
           val dst = destMeta.getOrElse(t, Pipeline.cleanDest(src))
           Analyzer.analyze(src, dst, conf) match {
-            case _: AnalysisOutcome.Success => Right((src, dst))
-            case failure                    => Left(analysisExitCode(failure))
+            case AnalysisOutcome.Success(items) => Right((src, dst, items))
+            case failure                        => Left(analysisExitCode(failure))
           }
         }
       }
     }
-    val analyzed: Seq[(TableMeta, TableMeta)] = analysis.map {
-      case scala.util.Success(Right(pair)) => pair
-      case scala.util.Success(Left(code))  => return code
-      case scala.util.Failure(e)           => throw e
+    val analyzed: Seq[(TableMeta, TableMeta, Seq[WorkItem])] = analysis.map {
+      case scala.util.Success(Right(table)) => table
+      case scala.util.Success(Left(code))   => return code
+      case scala.util.Failure(e)            => throw e
     }
     // loads that share a destination run one after another, as one queue
     // item: two concurrent writers would race on the same table
-    val byDest: Seq[Seq[(TableMeta, TableMeta)]] =
+    val byDest: Seq[Seq[(TableMeta, TableMeta, Seq[WorkItem])]] =
       analyzed.map(_._2.name).distinct.map(d => analyzed.filter(_._2.name == d))
 
     // safe-check "readonly": footprint snapshot BEFORE the first slice
     // reads — stability is re-verified after the copy phase.
     val preFootprint: Seq[(String, Map[String, (Long, Long)])] =
       if (safeCheckMode == "readonly")
-        inOrder(analyzed, width) { case (src, _) =>
+        inOrder(analyzed, width) { case (src, _, _) =>
           src.name -> Pipeline.sourceFootprint(spark, sfDir, src.name)
         }
       else Nil
@@ -189,25 +179,11 @@ object Copy {
     // Copy phase: per-table errors don't stop the other tables (the
     // reference's worker pool drains the whole queue; errored items are
     // counted, `SmartBulkCopy.cs:246-250`).
-    val erroredTasks = inOrder(byDest, width)(_.count { case (src, dst) =>
+    val erroredTasks = inOrder(byDest, width)(_.count { case (src, dst, items) =>
       try {
         withCommandTimeout(spark, src.name, commandTimeoutSec) {
-          if (jdbcDest)
-            Pipeline.copyTableJdbc(spark, sfDir, destDir, jdbcProps, src, dst,
-              conf, truncateDest = truncateTables,
-              retryMaxAttempts = retryMaxAttempts,
-              retryDelayIncrementMs = retryDelayIncrementMs)
-          else
-            // reconcile = false: this orchestrated path runs its own
-            // CheckResults phase over ALL tables below — the reference's
-            // single reconciliation point — so copyTable's per-table
-            // count pair would re-list every destination's footers (and
-            // re-scan a stats-less source) for a result nobody reads
-            Pipeline.copyTable(spark, sfDir, destDir, src, dst, conf,
-              truncateDest = truncateTables,
-              retryMaxAttempts = retryMaxAttempts,
-              retryDelayIncrementMs = retryDelayIncrementMs,
-              reconcile = false)
+          Pipeline.load(dest, Pipeline.copyFrame(spark, sfDir, items), dst,
+            conf.batchSize, truncateTables, retryMaxAttempts, retryDelayIncrementMs)
           postCopyHook(src.name)
         }
         false
@@ -246,13 +222,8 @@ object Copy {
     //     copy would silently pass the final rowcount gate on the
     //     stale analysis-phase number. (Catalog.collect itself keeps no
     //     memo: each run's analysis reads the footers as they are then.)
-    val reconciled = inOrder(analyzed, width) { case (src, dst) =>
-      val destRows =
-        // one-scalar COUNT(*) (Sinks.jdbcRowCount): spark.read.jdbc's
-        // V1 relation has no aggregate pushdown, so counting through it
-        // streams O(rows) over one connection per reconciled table
-        if (jdbcDest) Sinks.jdbcRowCount(destDir, dst.name, jdbcProps)
-        else Sinks.committedRowCount(spark, s"$destDir/${dst.name}.parquet")
+    val reconciled = inOrder(analyzed, width) { case (src, dst, _) =>
+      val destRows = dest.rows(dst.name)
       val srcRows =
         if (safeCheckMode != "none" && src.rowCount > 0L) src.rowCount
         else Scans.table(spark, sfDir, src.name).count()
@@ -269,26 +240,12 @@ object Copy {
     // the reference reads it); only an id the statistics cannot answer
     // exactly for is scanned.
     if (syncIdentity) {
-      val synced = inOrder(byDest, width)(_.forall { case (src, dst) =>
+      val synced = inOrder(byDest, width)(_.forall { case (src, dst, _) =>
         Catalog.identityColumns.get(src.name).forall { idCol =>
           val ic = Sinks.footerIdentityCurrent(
             spark, s"$sfDir/${src.name}.parquet", idCol).getOrElse(
             Sinks.identityCurrent(Scans.table(spark, sfDir, src.name), idCol))
-          if (jdbcDest) {
-            // live generator: RESTART WITH sets the NEXT value, so the
-            // sequence continues after the source's IDENT_CURRENT; a
-            // destination without the generator (or any reseed failure)
-            // is the reference's unverifiable-reseed branch → 2
-            try {
-              Sinks.reseedIdentityJdbc(destDir, dst.name, idCol, ic + 1, jdbcProps)
-              Sinks.identitySeedJdbc(destDir, dst.name, idCol, jdbcProps)
-                .contains(ic + 1)
-            } catch { case _: java.sql.SQLException => false }
-          } else {
-            val dest = s"$destDir/${dst.name}.parquet"
-            reseedIdentity(spark, dest, idCol, ic)
-            Sinks.identitySeed(spark, dest).contains((idCol, ic))
-          }
+          dest.syncIdentity(dst.name, idCol, ic)
         }
       })
       if (synced.contains(false)) return 2

@@ -1,6 +1,6 @@
 package graft.exec
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model._
 import graft.plan.{Analyzer, PlanConfig}
@@ -19,6 +19,11 @@ import graft.meta.Catalog
   * task retries replace the per-item retry loop. Across tables the same
   * holds: [[graft.Copy.run]] submits every table's job at once from
   * `tasks` driver threads, and the scheduler interleaves their tasks.
+  *
+  * Every copy lands through ONE guarded routine, [[load]], into a
+  * [[Dest]] — the reference's single `SqlBulkCopy` under one retry loop
+  * (`SmartBulkCopy.cs:440-607`). Only `Dest` knows whether the
+  * destination is a parquet directory or a live JDBC database.
   */
 object Pipeline {
 
@@ -224,11 +229,11 @@ object Pipeline {
         .forall(f => !segments(f.getPath).exists(_.startsWith(s"$pcol=")))
     } catch { case _: Exception => false }
 
+    val item = items.head
+    lazy val base = Scans.project(
+      Scans.table(spark, sfDir, item.table.name), item.table.excludedColumns)
     if (completeLogicalSet) {
-      val item = items.head
       val SliceSpec.Logical(keys, n, _) = item.slice: @unchecked
-      val base = Scans.project(
-        Scans.table(spark, sfDir, item.table.name), item.table.excludedColumns)
       val key =
         if (keys.nonEmpty) abs(Scans.sliceKeyPortable(keys))
         else Scans.sliceKeyHash(base)
@@ -240,23 +245,9 @@ object Pipeline {
       // every row (exhaustiveness is the reference's slice contract,
       // and a pre-filter here used to co-sign the union path's silent
       // NULL-row drop instead of fixing it).
-      // EXACT ordinal→partition placement through the plain hash
-      // shuffle (see ordinalHashReps): one task per whole slice. A raw
-      // repartition(n, ordinal) collides (murmur3 mod n leaves ~1/3 of
-      // the n tasks empty while one carries 2-3 whole slices), and
-      // repartitionByRange fixes the balance only by re-executing the
-      // scan subtree for its boundary sampling — a SECOND full source
-      // read at 100 TB. The rep lookup costs one array literal probe
-      // per row, stays inside codegen, and shuffles once.
-      val ord = pmod(key, lit(n.toLong))
-      val fanned = base
-        .repartition(n, element_at(lit(ordinalHashReps(n)), (ord + 1).cast("int")))
-      Scans.orderedWithinPartitions(fanned, item.orderHint)
+      fanOut(base, n, pmod(key, lit(n.toLong)), item.orderHint)
     } else if (completePhysicalCol.exists(unpartitionedOn)) {
-      val item = items.head
       val SliceSpec.Physical(pcol, _) = item.slice: @unchecked
-      val base = Scans.project(
-        Scans.table(spark, sfDir, item.table.name), item.table.excludedColumns)
       // Keep the union of the slice predicates as a filter BEFORE the
       // fan-out so the two code paths stay semantically identical: rows
       // outside the declared 1..N partition ranges (or with a NULL
@@ -270,17 +261,27 @@ object Pipeline {
       // predicate stays a pushable column-vs-literal compare
       val lo = lit(s"${Scans.DefaultEpochYear + 1}-01-01").cast(pdt)
       val hi = lit(s"${Scans.DefaultEpochYear + items.size + 1}-01-01").cast(pdt)
-      // exact ordinal→partition placement, same reasoning as the
-      // logical fan-out above; partitionNumber is 1-based, which IS
-      // element_at's indexing, so ordinal i lands on reps(i-1) and in
-      // partition i-1
-      val fanned = base.filter(col(pcol) >= lo && col(pcol) < hi)
-        .repartition(items.size,
-          element_at(lit(ordinalHashReps(items.size)),
-            partitionNumber(col(pcol)).cast("int")))
-      Scans.orderedWithinPartitions(fanned, item.orderHint)
+      // partitionNumber is 1-based; the fan-out takes 0-based ordinals
+      fanOut(base.filter(col(pcol) >= lo && col(pcol) < hi), items.size,
+        partitionNumber(col(pcol)) - 1, item.orderHint)
     } else items.map(Scans.forWorkItem(spark, sfDir, _)).reduce(_ unionAll _)
   }
+
+  /** The one-scan fan-out: `base` shuffled so that 0-based slice ordinal
+    * `ord` (in `0 until n`) lands in shuffle partition `ord`, one task per
+    * whole slice, each ordered on `orderHint`. EXACT placement through
+    * the plain hash shuffle (see [[ordinalHashReps]]): a raw
+    * `repartition(n, ord)` collides (murmur3 mod n leaves ~1/3 of the n
+    * tasks empty while one carries 2-3 whole slices), and
+    * `repartitionByRange` fixes the balance only by re-executing the scan
+    * subtree for its boundary sampling — a SECOND full source read at
+    * 100 TB. The rep lookup (`element_at` is 1-based) costs one array
+    * literal probe per row, stays inside codegen, and shuffles once. */
+  private def fanOut(
+      base: DataFrame, n: Int, ord: Column, orderHint: Seq[SortKey]): DataFrame =
+    Scans.orderedWithinPartitions(
+      base.repartition(n, element_at(lit(ordinalHashReps(n)), (ord + 1).cast("int"))),
+      orderHint)
 
   /** Synthetic physical-partition function over the testdata: ship-year
     * ordinal (1995→1, …, 2001→7). The analog of the reference's
@@ -321,9 +322,6 @@ object Pipeline {
     }
   }
 
-  /** Copy one table end-to-end: plan → scan slices → bulk insert →
-    * reconcile. `destDir` is the destination "database".
-    */
   /** Destination-side TableMeta: same shape as the source, none of the
     * abort conditions (the reference aborts on destination FKs /
     * secondary indexes / temporal pairing, `TableAnalyzer.cs:39-107`).
@@ -335,15 +333,71 @@ object Pipeline {
     src.copy(storage = storage, foreignKeyCount = 0, secondaryIndexCount = 0,
       history = None)
 
-  /** Committed destination rowcount for the append-retry guard: a
-    * missing destination is a legitimate 0 (first load), but any OTHER
-    * probe failure propagates — mapping it to a sentinel would either
-    * spuriously trip the guard or silently disable it (the conflation
-    * the JDBC twin's -1 used to carry). */
-  private def committedRowsOrAbsent(spark: SparkSession, dest: String): Long =
-    try Sinks.committedRowCount(spark, dest)
-    catch { case _: java.io.FileNotFoundException => 0L }
+  /** Land one table's copy frame `df` as `dst` at `dest` — the one load
+    * every copy takes, the reference's `SqlBulkCopy` under one retry loop
+    * (`SmartBulkCopy.cs:440-607`). Against a clustered-columnstore
+    * destination the insert batch is forced to >= 102400 rows, so loads
+    * compress straight into columnstore segments (`:511-516`).
+    *
+    * `truncate` replaces the destination on every attempt, so it retries
+    * blindly. Append does not: the JDBC writer commits per partition, and
+    * a file commit protocol that commits per task (v2, common on object
+    * stores) — or an error after job commit — leaves committed part
+    * files behind, so a failed attempt may have landed some rows, and
+    * re-running it would load them twice. Every attempt therefore
+    * requires the destination to still hold its pre-load row count, and
+    * a partial attempt fails loudly (exit 3) instead of double-loading.
+    * An absent destination counts as 0 ([[Dest.rowsOrZero]]): Spark's
+    * JDBC writer creates an absent table before its job runs, so an
+    * attempt that committed nothing leaves an empty table, not a partial
+    * append. The pre-load probe runs before the first attempt's retry
+    * loop, so it has its own. (The reference's retry is always safe: its
+    * bulk insert is one transaction per table.)
+    */
+  def load(
+      dest: Dest,
+      df: DataFrame,
+      dst: TableMeta,
+      batchRows: Int,
+      truncate: Boolean,
+      retryMaxAttempts: Int,
+      retryDelayIncrementMs: Long): Unit = {
+    val batch =
+      if (dst.storage == Storage.ClusteredColumnstore) math.max(batchRows, 102400)
+      else batchRows
+    def retried[T](body: => T): T =
+      Retry.withRetry(maxAttempts = retryMaxAttempts, delayMs = retryDelayIncrementMs)(body)
+    def write(): Unit = dest.write(df, dst.name, overwrite = truncate, batch)
+    if (truncate) retried(write())
+    else {
+      val preRows = retried(dest.rowsOrZero(dst.name))
+      retried {
+        val nowRows = dest.rowsOrZero(dst.name)
+        if (nowRows != preRows)
+          throw new IllegalStateException(
+            s"${dst.name}: partial append detected (rows $preRows -> $nowRows); " +
+              "append-mode load is not safely retryable")
+        write()
+      }
+    }
+  }
 
+  /** Safety check + analysis of one table — the work items a standalone
+    * copy entry point loads ([[graft.Copy.run]] runs both in its own
+    * analysis phase). */
+  private def planned(
+      spark: SparkSession, sfDir: String, src: TableMeta, dst: TableMeta,
+      conf: PlanConfig): Seq[WorkItem] = {
+    require(safetyCheck(spark, sfDir, src.name), s"safety check failed for ${src.name}")
+    Analyzer.analyze(src, dst, conf) match {
+      case AnalysisOutcome.Success(is) => is
+      case other => throw new IllegalStateException(s"${src.name}: $other")
+    }
+  }
+
+  /** Copy one table end-to-end: plan → scan slices → bulk insert →
+    * reconcile. `destDir` is the destination "database" ([[Dest.of]]).
+    */
   def copyTable(
       spark: SparkSession,
       sfDir: String,
@@ -351,11 +405,6 @@ object Pipeline {
       src: TableMeta,
       dst: TableMeta,
       conf: PlanConfig = PlanConfig(),
-      /** >0 emits a live throughput sample every interval while the load
-        * runs (reference monitor loop, `SmartBulkCopy.cs:665-766`).
-        */
-      reportEveryMs: Long = 0L,
-      onReport: CopyMonitor.Sample => Unit = _ => (),
       /** `truncate-tables` (reference `SmartBulkCopy.cs:391-396`,
         * default false there): ON truncates the destination first; OFF
         * appends, and any leftover rows from a previous load surface as
@@ -368,79 +417,27 @@ object Pipeline {
         * the per-attempt delay increment. */
       retryMaxAttempts: Int = 5,
       retryDelayIncrementMs: Long = 0L,
-      /** false skips the per-table reconciliation count pair: the
-        * orchestrated path ([[graft.Copy.run]]) runs its own
-        * CheckResults phase over ALL tables afterwards (reference
-        * `SmartBulkCopy.cs:216-245`), and paying the counts here too
-        * doubled the reconciliation IO per table — a second full
-        * footer listing (files × RTT against an object store) and,
-        * for a stats-less source, a second full source scan. With
-        * reconcile=false the returned counts are -1 sentinels and
-        * `ok` is vacuously true — a caller that opts out must not
-        * read them. */
+      /** false skips the per-table reconciliation count pair, for a
+        * caller that reconciles every table afterwards itself (reference
+        * `SmartBulkCopy.cs:216-245`). The returned counts are then -1
+        * sentinels and `ok` is vacuously true — a caller that opts out
+        * must not read them. */
       reconcile: Boolean = true): CopyResult = {
-    require(safetyCheck(spark, sfDir, src.name), s"safety check failed for ${src.name}")
-    val items = Analyzer.analyze(src, dst, conf) match {
-      case AnalysisOutcome.Success(is) => is
-      case other => throw new IllegalStateException(s"${src.name}: $other")
-    }
-    val df = copyFrame(spark, sfDir, items)
-    val dest = s"$destDir/${dst.name}.parquet"
-    def attempt(): Unit =
-      // no orderHint: copyFrame's every branch already ends
-      // ordered-within-partitions on the item's hint
-      Sinks.bulkInsert(df, dest,
-        overwrite = truncateDest,
-        columnstoreDest = dst.storage == Storage.ClusteredColumnstore,
-        batchSizeRows = conf.batchSize)
-    def load(): Unit =
-      if (truncateDest)
-        // overwrite is retry-idempotent: every attempt replaces the
-        // destination wholesale
-        Retry.withRetry(
-          maxAttempts = retryMaxAttempts, delayMs = retryDelayIncrementMs)(
-          attempt())
-      else {
-        // Append is NOT blindly retryable for the file sink either: a
-        // commit protocol that commits per task (v2, common on object
-        // stores) — or a transient error thrown after job commit — can
-        // leave committed part files behind, and re-running the append
-        // would land the dataset again. Same guard as the JDBC twin:
-        // every attempt requires the destination to still hold its
-        // pre-load committed count; a partial attempt fails loudly
-        // (copy-phase error, exit 3) instead of silently double-loading.
-        // The PRE-load probe retries under the same policy as the
-        // attempts: it runs before the first attempt's withRetry, so
-        // without its own wrapper a momentary destination blip at
-        // probe time would propagate unretried and fail the table.
-        val preRows = Retry.withRetry(
-          maxAttempts = retryMaxAttempts, delayMs = retryDelayIncrementMs)(
-          committedRowsOrAbsent(spark, dest))
-        Retry.withRetry(
-          maxAttempts = retryMaxAttempts, delayMs = retryDelayIncrementMs) {
-          val nowRows = committedRowsOrAbsent(spark, dest)
-          if (nowRows != preRows)
-            throw new IllegalStateException(
-              s"${dst.name}: partial append detected (rows $preRows -> " +
-                s"$nowRows); append-mode file load is not safely retryable")
-          attempt()
-        }
-      }
-    // only pay the listener attach/settle when live reporting is on
-    if (reportEveryMs > 0) CopyMonitor.monitored(spark, reportEveryMs, onReport)(load())
-    else load()
+    val items = planned(spark, sfDir, src, dst, conf)
+    val dest = Dest.of(spark, destDir)
+    load(dest, copyFrame(spark, sfDir, items), dst, conf.batchSize, truncateDest,
+      retryMaxAttempts, retryDelayIncrementMs)
     // Reconciliation mirrors the reference's metadata-view check
     // (sys.dm_db_partition_stats on both ends, SmartBulkCopy.cs:302-313):
     // source side reuses the count collected under the immutability
-    // gate; destination side reads the COMMITTED parquet footers — the
-    // task-commit metadata, fresh after every load, no data pages read.
+    // gate; destination side reads the committed state — no data pages.
     val (s, d, ok) =
-      if (!reconcile) (-1L, -1L, true) // orchestrator reconciles later
+      if (!reconcile) (-1L, -1L, true) // the caller reconciles later
       else {
         val srcRows =
           if (src.rowCount > 0L) src.rowCount
           else Scans.table(spark, sfDir, src.name).count()
-        val dstRows = Sinks.committedRowCount(spark, dest)
+        val dstRows = dest.rows(dst.name)
         (srcRows, dstRows, srcRows == dstRows)
       }
     val kind = items.head.slice match {
@@ -451,19 +448,8 @@ object Pipeline {
     CopyResult(src.name, items.size, kind, s, d, ok)
   }
 
-  /** The copy phase against a LIVE JDBC destination — the reference's
-    * actual runtime shape (`SqlBulkCopy` into a SQL database,
-    * `SmartBulkCopy.cs:440-561`): the same analyzed plan and single-scan
-    * copy frame as [[copyTable]], landed through Spark's JDBC writer,
-    * where each partition opens its own connection and streams batched
-    * INSERTs — the engine's partition-parallel bulk-insert analog. The
-    * destination table is expected to exist (the reference never creates
-    * destination tables); `truncateDest` maps to Spark's
-    * overwrite+truncate, which issues `TRUNCATE TABLE` — not DROP — so
-    * destination DDL, identity generators included, survives the load
-    * (`SmartBulkCopy.cs:391-396`). Reconciliation and identity sync stay
-    * in the orchestrator ([[graft.Copy.run]]), same as the file sink.
-    */
+  /** [[copyTable]] into a live JDBC database at `url`, without the
+    * reconciliation count (the caller reconciles). */
   def copyTableJdbc(
       spark: SparkSession,
       sfDir: String,
@@ -474,77 +460,7 @@ object Pipeline {
       conf: PlanConfig = PlanConfig(),
       truncateDest: Boolean = true,
       retryMaxAttempts: Int = 5,
-      retryDelayIncrementMs: Long = 0L): Unit = {
-    require(safetyCheck(spark, sfDir, src.name), s"safety check failed for ${src.name}")
-    val items = Analyzer.analyze(src, dst, conf) match {
-      case AnalysisOutcome.Success(is) => is
-      case other => throw new IllegalStateException(s"${src.name}: $other")
-    }
-    // copyFrame's every branch already ends ordered-within-partitions on
-    // the item's hint — sorting here again would double the sort work if
-    // the optimizer's redundant-sort elimination ever missed the pair
-    val ordered = copyFrame(spark, sfDir, items)
-    // Columnstore batch floor (`SmartBulkCopy.cs:511-516`): the
-    // reference FORCES the insert batch to >= 102400 rows against a
-    // clustered-columnstore destination so bulk loads compress straight
-    // into columnstore segments instead of trickling through the
-    // deltastore — and the live-SQL path here is exactly the runtime
-    // shape that rule was written for (the parquet twin applies the
-    // same floor in Sinks.bulkInsert).
-    val batchSize =
-      if (dst.storage == Storage.ClusteredColumnstore)
-        math.max(conf.batchSize, 102400)
-      else conf.batchSize
-    if (truncateDest)
-      // overwrite+truncate is retry-idempotent: every attempt re-truncates
-      // before inserting, so a partial failure leaves nothing behind
-      Retry.withRetry(
-        maxAttempts = retryMaxAttempts, delayMs = retryDelayIncrementMs) {
-        ordered.write.option("batchsize", batchSize)
-          .mode(SaveMode.Overwrite).option("truncate", true)
-          .jdbc(url, dst.name, props)
-      }
-    else {
-      // Append mode is NOT blindly retryable: each Spark partition commits
-      // its own transaction, so a failed attempt may have landed a subset
-      // of partitions, and re-running the append would duplicate them —
-      // rows reconciliation can't distinguish from real data. Guard every
-      // attempt on the destination still holding its pre-load count; a
-      // partial attempt fails the guard loudly (-> copy-phase error, exit
-      // 3) instead of silently double-loading. (The reference's retry is
-      // safe because its bulk insert is one transaction per table,
-      // `SmartBulkCopy.cs:440-561`; per-partition JDBC commits trade that
-      // for parallelism, so the guard restores the safety.)
-      // None = destination table absent (a legitimate first load). A
-      // probe CONNECTION failure propagates instead of hiding behind a
-      // sentinel: the old catch-all -1 either spuriously tripped the
-      // guard on a momentary blip (-1 vs recovered count → a misleading
-      // permanent 'partial append' failure) or, with both probes
-      // failing, vacuously passed it and re-enabled the double-load.
-      // Inside the retry a thrown probe classifies via isTransient like
-      // any other attempt error; the PRE-load probe runs before the
-      // first attempt, so it carries its own withRetry (same policy) —
-      // a momentary connection failure before attempt 1 retries exactly
-      // like one during it.
-      // one-scalar COUNT(*) probe on ONE connection
-      // (Sinks.jdbcRowCountIfExists), never spark.read.jdbc(...).count():
-      // the V1 JDBC relation has no aggregate pushdown, so that "count"
-      // streams O(rows) through one connection — per probe, per attempt
-      def probe(): Option[Long] =
-        Sinks.jdbcRowCountIfExists(url, dst.name, props)
-      val preRows = Retry.withRetry(
-        maxAttempts = retryMaxAttempts, delayMs = retryDelayIncrementMs)(
-        probe())
-      Retry.withRetry(
-        maxAttempts = retryMaxAttempts, delayMs = retryDelayIncrementMs) {
-        val nowRows = probe()
-        if (nowRows != preRows)
-          throw new IllegalStateException(
-            s"${dst.name}: partial append detected (rows $preRows -> $nowRows); " +
-              "append-mode JDBC load is not safely retryable")
-        ordered.write.option("batchsize", batchSize)
-          .mode(SaveMode.Append).jdbc(url, dst.name, props)
-      }
-    }
-  }
+      retryDelayIncrementMs: Long = 0L): Unit =
+    load(Dest.Jdbc(url, props), copyFrame(spark, sfDir, planned(spark, sfDir, src, dst, conf)),
+      dst, conf.batchSize, truncateDest, retryMaxAttempts, retryDelayIncrementMs)
 }

@@ -3,7 +3,6 @@ package graft.exec
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
-import graft.model.SortKey
 
 /** Sink builders — the Spark realization of the reference's destination
   * side: `TRUNCATE TABLE` prep (`SmartBulkCopy.cs:391-396`), transactional
@@ -28,32 +27,19 @@ object Sinks {
   }
 
   /** Transactional batch insert — reference `SmartBulkCopy.cs:440-561`.
-    * `batchSizeRows` maps the reference's insert batch (default 100000,
-    * forced ≥102400 for columnstore destinations, `SmartBulkCopy.cs:511-516`)
-    * to parquet row-group sizing via files.maxRecordsPerFile-style batching;
-    * ordering maps the reference's ColumnOrderHints
-    * (`SmartBulkCopy.cs:492-509`).
+    * `batchSizeRows` maps the reference's insert batch (default 100000)
+    * to parquet file sizing via `maxRecordsPerFile`; the columnstore
+    * floor is applied once, by the caller's load (`Pipeline.load`).
     */
   def bulkInsert(
       df: DataFrame,
       path: String,
-      orderHint: Seq[SortKey] = Nil,
       overwrite: Boolean = false,
-      columnstoreDest: Boolean = false,
-      batchSizeRows: Int = 100000): Unit = {
-    val batch = if (columnstoreDest) math.max(batchSizeRows, 102400) else batchSizeRows
-    val ordered = Scans.orderedWithinPartitions(df, orderHint)
-    ordered.write
+      batchSizeRows: Int = 100000): Unit =
+    df.write
       .mode(if (overwrite) SaveMode.Overwrite else SaveMode.Append)
-      .option("maxRecordsPerFile", batch.toLong * 10) // keep row groups healthy
+      .option("maxRecordsPerFile", batchSizeRows.toLong * 10) // keep row groups healthy
       .parquet(path)
-  }
-
-  // (A dual-full-scan rowcountCheck(src, dst) helper existed here and
-  // was removed: the committed-footer reconciliation below is the live
-  // path — reference `SmartBulkCopy.cs:296-339` recounts via the
-  // metadata view, not a table scan — and an unused near-twin invites
-  // callers to pick the expensive one.)
 
   /** Committed destination row count from the parquet FOOTERS — the
     * analog of the reference's reconciliation source
@@ -107,17 +93,6 @@ object Sinks {
       } finally pool.shutdown()
     }
 
-  /** The COMMITTED parquet data files under a destination root, via the
-    * Hadoop `FileSystem` of the path (works identically on local disk,
-    * HDFS and object stores — never `java.io.File`). Only committed files
-    * are returned: any path segment starting with `_` or `.` below the
-    * root is skipped — task-attempt output under a leftover `_temporary`
-    * dir (crashed prior writer) and commit-protocol markers are exactly
-    * what `spark.read.parquet` itself ignores; listing them would corrupt
-    * reconciliation on a subsequent append, and compaction would rewrite
-    * uncommitted rows. Shared by [[committedRowCount]] and the
-    * maintenance ops (`pipeline_compact`).
-    */
   /** Segment-wise hidden-ness below `root`: any `_`/`.`-prefixed path
     * segment under the root marks the file uncommitted (commit-protocol
     * markers, `_temporary` staging) — a part file nested under a
@@ -155,6 +130,17 @@ object Sinks {
       f: org.apache.hadoop.fs.FileStatus): Boolean =
     f.isFile && f.getPath.getName.endsWith(".parquet") && !isHidden(f.getPath)
 
+  /** The COMMITTED parquet data files under a destination root, via the
+    * Hadoop `FileSystem` of the path (works identically on local disk,
+    * HDFS and object stores — never `java.io.File`). Only committed files
+    * are returned: any path segment starting with `_` or `.` below the
+    * root is skipped — task-attempt output under a leftover `_temporary`
+    * dir (crashed prior writer) and commit-protocol markers are exactly
+    * what `spark.read.parquet` itself ignores; listing them would corrupt
+    * reconciliation on a subsequent append, and compaction would rewrite
+    * uncommitted rows. Shared by [[committedRowCount]] and the
+    * maintenance ops (`pipeline_compact`).
+    */
   def committedFiles(
       spark: SparkSession,
       path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
@@ -446,7 +432,7 @@ object Sinks {
   }
 
   /** Existence-guarded rowcount on ONE connection — the append-retry
-    * guard's probe (`Pipeline.copyTableJdbc`). None = table absent (a
+    * guard's probe ([[Dest.Jdbc]]). None = table absent (a
     * legitimate first load). Folding exists + count into a single
     * connection matters because the guard probes once pre-load PLUS
     * once per retry attempt: the split form paid two connections per
@@ -651,5 +637,84 @@ object Sinks {
         .readTree(new String(buf, "UTF-8"))
       Some((node.get("column").asText(), node.get("seed").asLong()))
     }
+  }
+}
+
+/** A copy's destination — the ONE place on the copy path that knows the
+  * sink kind: a directory of parquet tables, or a live JDBC database
+  * loaded through Spark's JDBC writer (each partition streams batched
+  * INSERTs on its own connection, the reference's `SqlBulkCopy` shape).
+  * `Pipeline.load` writes through it; `graft.Copy.run` reconciles and
+  * syncs identity through it.
+  */
+sealed trait Dest {
+  /** Land `df` as `table`: replace its contents, or append to them. */
+  def write(df: DataFrame, table: String, overwrite: Boolean, batchRows: Int): Unit
+  /** Committed rows, for reconciliation; an absent table fails loudly. */
+  def rows(table: String): Long
+  /** Committed rows, for the append guard: an absent table is 0 (a first
+    * load). Any other probe failure propagates — a sentinel would either
+    * spuriously trip the guard or silently disable it. */
+  def rowsOrZero(table: String): Long
+  /** Reseed `table`'s identity to the source's `IDENT_CURRENT` `ic`, then
+    * read it back (`SmartBulkCopy.cs:341-389`): false when the reseed is
+    * not observable on the destination. */
+  def syncIdentity(table: String, idCol: String, ic: Long): Boolean
+}
+
+object Dest {
+
+  /** A `jdbc:` URL is a live database, anything else a directory.
+    * `reseed` is the file sink's identity writer (a test seam). */
+  def of(
+      spark: SparkSession,
+      dest: String,
+      reseed: (SparkSession, String, String, Long) => Unit = Sinks.reseedIdentity): Dest =
+    if (dest.startsWith("jdbc:")) {
+      val props = new java.util.Properties()
+      if (dest.startsWith("jdbc:derby:"))
+        props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+      Jdbc(dest, props)
+    } else Files(spark, dest, reseed)
+
+  /** `<dir>/<table>.parquet` roots, counted from the committed footers. */
+  final case class Files(
+      spark: SparkSession,
+      dir: String,
+      reseed: (SparkSession, String, String, Long) => Unit) extends Dest {
+    private def path(table: String) = s"$dir/$table.parquet"
+    def write(df: DataFrame, table: String, overwrite: Boolean, batchRows: Int): Unit =
+      Sinks.bulkInsert(df, path(table), overwrite = overwrite, batchSizeRows = batchRows)
+    def rows(table: String): Long = Sinks.committedRowCount(spark, path(table))
+    def rowsOrZero(table: String): Long =
+      try rows(table) catch { case _: java.io.FileNotFoundException => 0L }
+    def syncIdentity(table: String, idCol: String, ic: Long): Boolean = {
+      reseed(spark, path(table), idCol, ic)
+      Sinks.identitySeed(spark, path(table)).contains((idCol, ic))
+    }
+  }
+
+  /** A live database. Spark's writer creates an absent table on the
+    * driver before its job runs; overwrite issues `TRUNCATE TABLE`, not
+    * DROP, so destination DDL and identity generators survive the load
+    * (`SmartBulkCopy.cs:391-396`). Counts are one-scalar `COUNT(*)`
+    * probes: `spark.read.jdbc` has no aggregate pushdown, so counting
+    * through it streams every row over one connection. */
+  final case class Jdbc(url: String, props: java.util.Properties) extends Dest {
+    def write(df: DataFrame, table: String, overwrite: Boolean, batchRows: Int): Unit = {
+      val w = df.write.option("batchsize", batchRows)
+      if (overwrite) w.mode(SaveMode.Overwrite).option("truncate", true).jdbc(url, table, props)
+      else w.mode(SaveMode.Append).jdbc(url, table, props)
+    }
+    def rows(table: String): Long = Sinks.jdbcRowCount(url, table, props)
+    def rowsOrZero(table: String): Long =
+      Sinks.jdbcRowCountIfExists(url, table, props).getOrElse(0L)
+    // RESTART WITH sets the NEXT value: the sequence continues after the
+    // source's IDENT_CURRENT; a table without a generator throws
+    def syncIdentity(table: String, idCol: String, ic: Long): Boolean =
+      try {
+        Sinks.reseedIdentityJdbc(url, table, idCol, ic + 1, props)
+        Sinks.identitySeedJdbc(url, table, idCol, props).contains(ic + 1)
+      } catch { case _: java.sql.SQLException => false }
   }
 }

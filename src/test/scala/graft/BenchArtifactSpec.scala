@@ -105,9 +105,10 @@ class BenchArtifactSpec extends AnyFunSuite {
   }
 
   /** A three-key record from host 686c821a at `width` threads. */
-  private def render(width: Int, probe: Double = 18.0) = {
+  private def render(width: Int, probe: Double = 18.0,
+      cpuModel: String = "Xeon \"test\"", cpus: Int = 32) = {
     import Bench.Rec
-    val host = Bench.Host("686c821a", "Xeon \"test\"", 32, width, 0.3, 0.4,
+    val host = Bench.Host("686c821a", cpuModel, cpus, width, 0.3, 0.4,
       probe, probe + 0.2, 19.0, 19.5)
     Bench.renderFull(Bench.RunInfo(2, 2, 1, Seq("b"), 10, 0, host),
       Seq("a" -> Rec(1.0, 1.05, 1.2, 1.1, 2),
@@ -207,6 +208,15 @@ class BenchArtifactSpec extends AnyFunSuite {
       assert(narrow.left.exists(_.contains("session_cpus")), narrow)
       assert(bytes(landing) == prior)
       assert(new String(bytes(raw).toArray, "UTF-8").contains("\"session_cpus\":8"))
+      // the same name_hash on another machine (a container's hostname
+      // hash collides across hosts): another cpu_model or cpus is refused
+      val model = Bench.land(render(32, cpuModel = "EPYC 7B13"), raw.toString,
+        landing.toString)
+      assert(model.left.exists(_.contains("cpu_model")), model)
+      assert(bytes(landing) == prior)
+      val cores = Bench.land(render(32, cpus = 4), raw.toString, landing.toString)
+      assert(cores.left.exists(_.contains("cpus 32 vs 4")), cores)
+      assert(bytes(landing) == prior)
       // a record without session_cpus (today's committed ones) is refused
       java.nio.file.Files.copy(java.nio.file.Paths.get("BENCH_full_sf001.json"),
         landing, java.nio.file.StandardCopyOption.REPLACE_EXISTING)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.exec.{Pipeline, Retry, Scans}
+import graft.exec.{Dest, DerbyEnv, Pipeline, Retry, Scans}
 import graft.meta.Catalog
 import graft.model._
 import graft.plan.{PartitionStrategy, PlanConfig}
@@ -395,15 +395,6 @@ class PipelineSpec extends SparkSpecBase {
     assert(mon.samples.nonEmpty, "no periodic sample observed during the copy")
     assert(mon.samples.last.elapsedMs > 0)
     assert(mon.recordsWritten.sum() == 8)
-    // and the pipeline API surfaces the same live reporting end-to-end
-    val seen = new java.util.concurrent.atomic.AtomicInteger(0)
-    val src = Catalog.collect(spark, sfDir, "lineitem")
-    val dst2 = src.copy(foreignKeyCount = 0, secondaryIndexCount = 0, history = None)
-    val r = Pipeline.copyTable(spark, sfDir, destDir, src, dst2,
-      PlanConfig(batchSize = 1000), reportEveryMs = 20,
-      onReport = _ => { seen.incrementAndGet(); () })
-    assert(r.ok)
-    assert(seen.get() >= 1, "no live report during copyTable")
     // and the one-shot (non-reporting) path still collects nothing
     val (_, quiet) = CopyMonitor.monitored(spark) {
       spark.range(4).count()
@@ -911,4 +902,109 @@ class PipelineSpec extends SparkSpecBase {
     assert(Sinks.committedFiles(spark, compacted).size < before.size)
     assert(Sinks.committedRowCount(spark, compacted) == src.count())
   }
+
+  private def derbyProps = {
+    val p = new java.util.Properties()
+    p.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+    p
+  }
+
+  /** A scratch Derby database holding no tables, removed afterwards. */
+  private def withScratchDb(name: String)(body: String => Unit): Unit = {
+    val dbRoot = DerbyEnv.scratchDbRoot(s"graft_${name}_db")
+    val dbPath = s"$dbRoot/$name"
+    try body(s"jdbc:derby:$dbPath;create=true")
+    finally {
+      AppendFault.armed.set(false)
+      DerbyEnv.shutdownAndDelete(dbPath, dbRoot)
+    }
+  }
+
+  private val retryT = TableMeta("APP", "retry_t", Storage.Heap)
+
+  private def appendLoad(dest: Dest, df: org.apache.spark.sql.DataFrame): Unit =
+    Pipeline.load(dest, df, retryT, batchRows = 10, truncate = false,
+      retryMaxAttempts = 3, retryDelayIncrementMs = 0L)
+
+  /** Append ids 0..39 to an absent `dest` through one partition whose
+    * first attempt throws the transient failure before writing a row,
+    * and return the ids `readBack` then finds there, sorted. */
+  private def appendAfterFailedAttempt(
+      dest: Dest, readBack: () => org.apache.spark.sql.DataFrame): Seq[Long] = {
+    import spark.implicits._
+    assert(dest.rowsOrZero(retryT.name) == 0L)
+    AppendFault.armed.set(true)
+    try appendLoad(dest, spark.range(0, 40, 1, 1).as[Long]
+      .map(x => AppendFault.failOnce(x)).toDF("id"))
+    finally assert(!AppendFault.armed.getAndSet(false), "the injected failure never fired")
+    assert(dest.rows(retryT.name) == 40L)
+    readBack().as[Long].collect().sorted.toSeq
+  }
+
+  test("jdbc append: a retried attempt that committed nothing lands the rows exactly once") {
+    // Spark's JDBC writer creates the absent table on the driver before
+    // its job runs; the failed attempt leaves it empty, and the retry's
+    // guard must read that as "nothing landed", not as a partial append
+    assert(Retry.isTransient(AppendFault.transient()))
+    withScratchDb("retrydb") { url =>
+      val ids = appendAfterFailedAttempt(Dest.of(spark, url),
+        () => spark.read.jdbc(url, retryT.name, derbyProps))
+      assert(ids == (0L until 40L), "rows lost or doubled by the retry")
+    }
+  }
+
+  test("jdbc append: a retry after a partition committed fails the guard, never doubles") {
+    import spark.implicits._
+    withScratchDb("partialdb") { url =>
+      val dest = Dest.of(spark, url)
+      val table = retryT.name
+      val props = derbyProps
+      AppendFault.armed.set(true)
+      // partition 0 (ids 0..19) commits; partition 1 throws once it has
+      val df = spark.range(0, 40, 1, 2).as[Long]
+        .mapPartitions(it => AppendFault.failAfterCommit(url, table, props, it))
+        .toDF("id")
+      val e = intercept[IllegalStateException](appendLoad(dest, df))
+      assert(e.getMessage.contains("partial append detected"), e.getMessage)
+      assert(e.getMessage.contains("rows 0 -> 20"), e.getMessage)
+      val ids = spark.read.jdbc(url, table, props).as[Long].collect().sorted.toSeq
+      assert(ids == (0L until 20L), "the table must hold attempt 1's commit only")
+    }
+  }
+
+  test("file append: a retried attempt that committed nothing lands the rows exactly once") {
+    val d = destDir
+    val ids = appendAfterFailedAttempt(Dest.of(spark, d),
+      () => spark.read.parquet(s"$d/${retryT.name}.parquet"))
+    assert(ids == (0L until 40L), "rows lost or doubled by the retry")
+  }
+}
+
+/** JVM-static fault switch for the append-retry specs: local-mode tasks
+  * run in the spec's JVM, so a task sees the flag the spec armed, and
+  * the first task to fire it disarms it for the retry. */
+object AppendFault {
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  def transient(): Exception =
+    new java.sql.SQLTransientConnectionException("injected transient failure")
+
+  /** `x`, or the transient failure the first time it is called armed. */
+  def failOnce(x: Long): Long =
+    if (armed.getAndSet(false)) throw transient() else x
+
+  /** Partition 1 of an armed attempt waits until `table` at `url` holds
+    * committed rows (another partition's transaction), then throws the
+    * transient failure; every other partition passes through. */
+  def failAfterCommit(url: String, table: String, props: java.util.Properties,
+      rows: Iterator[Long]): Iterator[Long] =
+    if (org.apache.spark.TaskContext.getPartitionId() != 1 || !armed.getAndSet(false))
+      rows
+    else {
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      def committed = graft.exec.Sinks.jdbcRowCountIfExists(url, table, props)
+        .exists(_ > 0L)
+      while (!committed && System.nanoTime() < deadline) Thread.sleep(50)
+      throw transient()
+    }
 }
