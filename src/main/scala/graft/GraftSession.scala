@@ -25,11 +25,12 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      // our TypedImperativeAggregates (simhash_votes) hold one small
-      // fixed-size long[64] buffer per group: let ObjectHashAggregateExec
-      // keep hashing far past its 128-group default before the sort-based
-      // fallback (64k groups x ~600B buffers ~ 40MB/partition, and the
-      // fallback remains the graceful path beyond that)
+      // object-buffer aggregates (grouped collect_list/collect_set,
+      // percentile_approx) run in ObjectHashAggregateExec: let it keep
+      // hashing far past its 128-group default before the sort-based
+      // fallback (64k small per-group buffers stay tens of MB per
+      // partition, and the fallback remains the graceful path beyond
+      // that)
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 65536)
       .config("spark.sql.warehouse.dir", scratchWarehouse)
       .config("spark.ui.enabled", "false")

@@ -4,17 +4,22 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
-import graft.functions.{BloomBitsAgg, BloomMightContain, CosineSim, HashVectorize, MinShingleMd5, MinhashSigs, RewriteDotProduct, ShingleMd5s, SimhashText, SimhashVotes, TokenEntropy}
+import graft.functions.{BloomBitsAgg, BloomMightContain, CosineSim, HashVectorize, MinShingleMd5, MinhashSigs, RewriteDotProduct, ShingleMd5s, SimhashText, TokenEntropy}
 
 /** Engine extension point — install with
   * `.config("spark.sql.extensions", "graft.GraftSparkExtensions")` (done
-  * by `graft.Verify`, `graft.Bench`, and the test base). Registers the
-  * engine's native Catalyst expressions in the session function registry
-  * (so they resolve from SQL text and `call_function` alike) and the
+  * by [[GraftSession]] and the test base). Registers the engine's native
+  * Catalyst expressions in the session function registry (so they
+  * resolve from SQL text and `call_function` alike) and the
   * [[RewriteDotProduct]] optimizer rule that fuses the public
   * `aggregate(zip_with(...))` dot-product and squared-difference idioms
   * into the native [[graft.functions.DotProduct]] /
   * [[graft.functions.SquaredL2]] loops.
+  *
+  * The extension is a precondition of every declared key that calls a
+  * native: those keys have no built-in fallback. On a session built
+  * without it, such a key fails at analysis with Spark's
+  * `UNRESOLVED_ROUTINE` error naming the missing function.
   */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -73,13 +78,6 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
     // aggregate functions registered here are wrapped in an
     // AggregateExpression by the analyzer's function resolution, same as
     // Spark's own registry-built aggregates
-    ext.injectFunction((
-      new FunctionIdentifier("simhash_votes"),
-      new ExpressionInfo(classOf[SimhashVotes].getName, "simhash_votes"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "simhash_votes expects exactly 2 arguments")
-        SimhashVotes(args.head, args(1))
-      }))
     ext.injectFunction((
       new FunctionIdentifier("bloom_bits_agg"),
       new ExpressionInfo(classOf[BloomBitsAgg].getName, "bloom_bits_agg"),

@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native cosine similarity over two numeric-array embedding columns
-  * (`array<float|double>`, elements widened to double like the composed
-  * fallback).
+  * (`array<float|double>`, elements widened to double like the built-in
+  * composition).
   *
   * The composable form (`aggregate(zip_with(a, b, …))`, see
   * [[graft.ops.SimilarityQueries.cosine]]) materializes a zipped array
@@ -26,11 +26,10 @@ case class CosineSim(left: Expression, right: Expression)
     extends BinaryExpression {
 
   // array<float|double> per side, like the ArrayPairFold scaffold: the
-  // composed fallback (zip_with lambda) widens any numeric element to
-  // double, so a float-only gate here would make behavior flip with
-  // extension REGISTRATION — a query over a double-array column (e.g.
-  // a VectorMean centroid) succeeding on an extension-less session and
-  // AnalysisException-ing on a registered one.
+  // built-in composition (zip_with lambda) widens any numeric element
+  // to double, so a float-only gate here would reject inputs the
+  // composition accepts — a double-array column (e.g. a trained
+  // k-means centroid) would fail analysis instead of scoring.
   override def checkInputDataTypes(): TypeCheckResult = {
     def ok(e: Expression) = e.dataType match {
       case ArrayType(FloatType | DoubleType, _) => true

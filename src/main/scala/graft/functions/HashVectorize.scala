@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[ShingleMd5]] shape).
   *
   * Contract is value-identical to the engine's HOF composition that fed
-  * `text_hashing_vectorize` (see `TextQueries`):
+  * `text_hashing_vectorize`, kept as the reference in ExtensionsSpec:
   *
   * {{{ tk  = filter(split(lower(text), '[^a-z0-9]+'), t -> t != '')
   *     st  = array_sort(transform(tk,

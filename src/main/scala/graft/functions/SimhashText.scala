@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Contract is bit-identical to the engine's composed pipeline
   *
   * {{{ explode(filter(split(lower(text), '[^a-z0-9]+'), t -> t != ''))
-  *     → md5(tok) → simhash_votes(h1, h2) → per-digit majority hex }}}
+  *     → md5(tok) → 64 per-bit vote sums → per-digit majority hex }}}
   *
   * replicated detail by detail:
   *  - lowering is the built-in `lower()`'s exact CollationSupport path
@@ -25,8 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    over the lowered bytes are exactly the regex split's non-empty
   *    tokens;
   *  - votes: hex digit d (1-based) of a token's md5, bit k, votes
-  *    `+1/−1` on signature bit `4·(d−1)+k` — precisely
-  *    [[SimhashVotes]]'s `(h >>> (4·(8−d)+k)) & 1` mapping;
+  *    `+1/−1` on signature bit `4·(d−1)+k` — the DuckDB oracle's
+  *    digit-wise `sum(CASE …)` columns (`TextQueries.simhashSumsDuck`);
   *  - signature digit d = Σₖ (votes(4·(d−1)+k) > 0) · 2ᵏ, hex-encoded
   *    in digit order — the `simhashAssemble` form;
   *  - a document with NO tokens yields NULL (the explode pipeline drops

@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (the [[ShingleMd5]] shape).
   *
   * Contract is bit-identical to the engine's HOF composition that fed
-  * `text_entropy_filter` (see `TextQueries`):
+  * `text_entropy_filter`, kept as the reference in ExtensionsSpec:
   *
   * {{{ tk = filter(split(lower(text), '[^a-z0-9]+'), t -> t != '')
   *     st = array_sort(tk)

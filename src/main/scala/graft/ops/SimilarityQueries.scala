@@ -31,15 +31,6 @@ object SimilarityQueries {
     dot(a, b) / sqrt(dot(a, a)) / sqrt(dot(b, b))
   }
 
-  /** The hot-path form: the native fused-loop Catalyst expression
-    * ([[graft.functions.CosineSim]], registered by
-    * [[graft.GraftSparkExtensions]]) when the session has it; identical
-    * math via the built-in composition otherwise.
-    */
-  def cosineFast(s: SparkSession)(a: Column, b: Column): Column =
-    if (s.catalog.functionExists("cosine_sim")) call_function("cosine_sim", a, b)
-    else cosine(a, b)
-
   /** Deterministic pseudo-random hyperplanes for sign-LSH: weight of
     * plane p, dimension d is derived from md5(p:d) — reproducible in any
     * engine, no RNG state. Values in [-1, 1).
@@ -114,8 +105,8 @@ object SimilarityQueries {
     * wins, then max(-cid) = smaller cid on 6-dp-rounded ties — same
     * contract as the oracle). No Exchange touches the corpus.
     */
-  private def ivfAssign(s: SparkSession, emb: DataFrame): DataFrame =
-    ivfAssignWith(s, emb, emb)
+  private def ivfAssign(emb: DataFrame): DataFrame =
+    ivfAssignWith(emb, emb)
 
   /** The determinism-critical best-centroid argmax, ONE definition for
     * every coarse-quantizer call site (IVF assignment, the kmeans
@@ -125,18 +116,13 @@ object SimilarityQueries {
     * oracle states, which must not fork per call site (same rationale
     * as the shared PQ encode blocks).
     */
-  private def bestCentroid(s: SparkSession, codebook: Column): Column =
+  private def bestCentroid(codebook: Column): Column =
     array_max(transform(codebook, c =>
       struct(
-        round(cosineFast(s)(col("embedding"), c.getField("cv")), 6).as("cs"),
+        round(call_function("cosine_sim", col("embedding"), c.getField("cv")), 6).as("cs"),
         (-c.getField("cid")).as("neg_cid"),
         c.getField("cid").as("cid"))))
 
-  /** Cell-assign the rows of `batch` against the codebook drawn from
-    * `codebookSrc` — the two differ exactly in the incremental-ingest
-    * path, where a new day's vectors are assigned under the EXISTING
-    * (frozen) codebook so they land in the established cell layout.
-    */
   /** Read a persisted cell layout by its KNOWN schema — the assignment
     * plan's own output schema, derived without running a job — instead
     * of parquet footer inference. A layout staged from an empty corpus
@@ -168,17 +154,21 @@ object SimilarityQueries {
     val emb = Scans.table(s, dir, "embeddings")
     val schema = cellLayoutSchemas.getOrElseUpdate(
       (dir, emb.schema.catalogString),
-      ivfAssign(s, emb).schema)
+      ivfAssign(emb).schema)
     s.read.schema(schema).parquet(path)
   }
 
-  private def ivfAssignWith(s: SparkSession, batch: DataFrame,
-      codebookSrc: DataFrame): DataFrame = {
+  /** Cell-assign the rows of `batch` against the codebook drawn from
+    * `codebookSrc` — the two differ exactly in the incremental-ingest
+    * path, where a new day's vectors are assigned under the EXISTING
+    * (frozen) codebook so they land in the established cell layout.
+    */
+  private def ivfAssignWith(batch: DataFrame, codebookSrc: DataFrame): DataFrame = {
     val codebook = ivfCentroids(codebookSrc)
       .agg(collect_list(struct(col("cid"), col("cv"))).as("codebook"))
     batch.crossJoin(broadcast(codebook))
       .select(col("vec_id"), col("embedding"),
-        bestCentroid(s, col("codebook")).as("best"))
+        bestCentroid(col("codebook")).as("best"))
       .select(col("vec_id"), col("embedding"),
         col("best.cid").as("cell"),
         // centroid affinity rides along: the sorted-neighborhood bound
@@ -278,7 +268,7 @@ object SimilarityQueries {
     * join key (never the O(c²) cell cross product).
     */
   private def candidatePairs(s: SparkSession, dir: String): DataFrame =
-    candidatePairsFrom(s, Scans.table(s, dir, "embeddings")
+    candidatePairsFrom(Scans.table(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding")))
 
   /** Same, over an explicit `(vec_id, embedding)` corpus frame —
@@ -287,15 +277,15 @@ object SimilarityQueries {
     * the ≤ 2·c·H per-cell pair bound against the REAL pipeline, not a
     * re-implementation of it.
     */
-  private[graft] def candidatePairsFrom(s: SparkSession, emb: DataFrame): DataFrame = {
-    val blocks = snmBlocks(ivfAssign(s, emb)
+  private[graft] def candidatePairsFrom(emb: DataFrame): DataFrame = {
+    val blocks = snmBlocks(ivfAssign(emb)
       .select(col("cell"), col("vec_id"), col("embedding"), col("cell_cs")))
     blocks.as("x")
       .join(blocks.as("y"),
         col("x.cell") === col("y.cell") && col("x.block") === col("y.block") &&
           col("x.vec_id") =!= col("y.vec_id"))
       .select(col("x.vec_id").as("src_id"), col("y.vec_id").as("nbr_id"),
-        round(cosineFast(s)(col("x.embedding"), col("y.embedding")), 4)
+        round(call_function("cosine_sim", col("x.embedding"), col("y.embedding")), 4)
           .as("cos_sim"))
       // a pair adjacent enough to share BOTH overlapping blocks arrives
       // twice — candidate-proportional distinct before ranking
@@ -312,25 +302,24 @@ object SimilarityQueries {
   }
 
   /** The nprobe=4 cells nearest the query vector: (probe). */
-  private def ivfProbes(s: SparkSession, emb: DataFrame): DataFrame = {
+  private def ivfProbes(emb: DataFrame): DataFrame = {
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     ivfCentroids(emb).crossJoin(broadcast(q))
-      .select(col("cid"), round(cosineFast(s)(col("cv"), col("qv")), 6).as("cs"))
+      .select(col("cid"), round(call_function("cosine_sim", col("cv"), col("qv")), 6).as("cs"))
       .orderBy(col("cs").desc, col("cid"))
       .limit(4)
       .select(col("cid").as("probe"))
   }
 
   /** Exact cosine top-10 within the probed candidate set. */
-  private def ivfSearch(s: SparkSession, emb: DataFrame,
-      candidates: DataFrame): DataFrame = {
+  private def ivfSearch(emb: DataFrame, candidates: DataFrame): DataFrame = {
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    top10Ranked(candidates.join(broadcast(ivfProbes(s, emb)),
+    top10Ranked(candidates.join(broadcast(ivfProbes(emb)),
         col("cell") === col("probe"))
       .filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
-        round(cosineFast(s)(col("embedding"), col("qv")), 4).as("cos_sim")))
+        round(call_function("cosine_sim", col("embedding"), col("qv")), 4).as("cos_sim")))
   }
 
   /** Shared oracle for the two IVF variants (identical results: the
@@ -486,12 +475,12 @@ object SimilarityQueries {
     * append = the new batch assigned under the FROZEN codebook, appended
     * into the same partitioned root. */
   def writeIncBase(s: SparkSession, dir: String, path: String): Unit =
-    ivfAssign(s, Scans.table(s, dir, "embeddings").filter(!ivfIncIsNewBatch))
+    ivfAssign(Scans.table(s, dir, "embeddings").filter(!ivfIncIsNewBatch))
       .write.mode("overwrite").partitionBy("cell").parquet(path)
 
   def appendIncBatch(s: SparkSession, dir: String, path: String): Unit = {
     val emb = Scans.table(s, dir, "embeddings")
-    ivfAssignWith(s, emb.filter(ivfIncIsNewBatch), emb)
+    ivfAssignWith(emb.filter(ivfIncIsNewBatch), emb)
       .write.mode("append").partitionBy("cell").parquet(path)
   }
 
@@ -581,7 +570,7 @@ object SimilarityQueries {
     * (same shape as sim_ivf_write_layout's). Individually driveable so
     * the specs can snapshot the file tree around the retrain step. */
   def writeOptBase(s: SparkSession, dir: String, path: String): Unit =
-    ivfAssign(s, Scans.table(s, dir, "embeddings"))
+    ivfAssign(Scans.table(s, dir, "embeddings"))
       .write.mode("overwrite").partitionBy("cell").parquet(path)
 
   /** Read the layout's cell census, and if imbalance > τ split the
@@ -807,7 +796,7 @@ object SimilarityQueries {
           col("embedding").as("cv"))).as("seeds"))
       val reassigned = members.crossJoin(broadcast(seedsRow))
         .select(col("vec_id"), col("embedding"), col("cell_cs"),
-          bestCentroid(s, col("seeds")).as("best"),
+          bestCentroid(col("seeds")).as("best"),
           array_min(transform(col("seeds"), x => x.getField("cid"))).as("s0"))
         .select(col("vec_id"), col("embedding"), col("cell_cs"),
           when(col("best.cid") === col("s0"), lit(hot))
@@ -877,7 +866,7 @@ object SimilarityQueries {
       val scored = emb.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(q))
         .select(col("vec_id"),
-          round(cosineFast(s)(col("embedding"), col("qv")), 4).as("cos_sim"))
+          round(call_function("cosine_sim", col("embedding"), col("qv")), 4).as("cos_sim"))
       top10Ranked(scored)
     },
 
@@ -902,7 +891,7 @@ object SimilarityQueries {
         |FROM cs""".stripMargin) { (s, dir) =>
       val emb = Scans.table(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
-      ivfAssign(s, emb)
+      ivfAssign(emb)
         .groupBy(col("cell")).agg(count(lit(1)).as("n"))
         .agg(count(lit(1)).cast("long").as("n_cells"),
           sum(col("n")).cast("long").as("n_vectors"),
@@ -1030,7 +1019,7 @@ object SimilarityQueries {
       val scored = emb.filter(col("vec_id") =!= 0 && col("label") === 3)
         .crossJoin(broadcast(q))
         .select(col("vec_id"),
-          round(cosineFast(s)(col("embedding"), col("qv")), 4).as("cos_sim"))
+          round(call_function("cosine_sim", col("embedding"), col("qv")), 4).as("cos_sim"))
       top10Ranked(scored)
     },
 
@@ -1076,8 +1065,8 @@ object SimilarityQueries {
       // would double the vector IO at scale for no reason
       val scored = emb.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
         .select(col("vec_id"),
-          round(cosineFast(s)(col("embedding"), col("qv")), 4).as("cos_full"),
-          round(cosineFast(s)(expr("slice(embedding, 1, 16)"),
+          round(call_function("cosine_sim", col("embedding"), col("qv")), 4).as("cos_full"),
+          round(call_function("cosine_sim", expr("slice(embedding, 1, 16)"),
             expr("slice(qv, 1, 16)")), 4).as("cos_trunc"))
         .localCheckpoint(true)
       val fullTop = top10Ranked(scored
@@ -1105,7 +1094,7 @@ object SimilarityQueries {
         .select(col("vec_id"), col("embedding"))
       emb.as("a").join(emb.as("b"), col("b.vec_id") === col("a.vec_id") + 1)
         .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-          round(cosineFast(s)(col("a.embedding"), col("b.embedding")), 4).as("cos_sim"))
+          round(call_function("cosine_sim", col("a.embedding"), col("b.embedding")), 4).as("cos_sim"))
         .withColumn("is_near_dup", col("cos_sim") >= 0.95)
         .orderBy(col("vec_a"))
     },
@@ -1162,14 +1151,14 @@ object SimilarityQueries {
         |GROUP BY av.cell ORDER BY cell""".stripMargin) { (s, dir) =>
       val emb = Scans.table(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
-      val assigned = ivfAssign(s, emb)
+      val assigned = ivfAssign(emb)
       val blocks = snmBlocks(assigned
         .select(col("cell"), col("vec_id"), col("embedding"), col("cell_cs")))
       val dups = blocks.as("x")
         .join(blocks.as("y"),
           col("x.cell") === col("y.cell") && col("x.block") === col("y.block") &&
             col("x.vec_id") < col("y.vec_id"))
-        .filter(round(cosineFast(s)(col("x.embedding"), col("y.embedding")), 4)
+        .filter(round(call_function("cosine_sim", col("x.embedding"), col("y.embedding")), 4)
           >= 0.35)
         .select(col("y.vec_id").as("vec_id")).distinct()
         .withColumn("is_dup", lit(true))
@@ -1503,7 +1492,7 @@ object SimilarityQueries {
         |WHERE rank <= 20 ORDER BY rank""".stripMargin) { (s, dir) =>
       val emb = Scans.table(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
-      ivfAssign(s, emb)
+      ivfAssign(emb)
         .select(col("vec_id"), col("cell"),
           round(lit(1.0) - col("cell_cs"), 6).as("ood_score"))
         .orderBy(col("ood_score").desc, col("vec_id")).limit(20)
@@ -1566,7 +1555,7 @@ object SimilarityQueries {
         |ORDER BY mem.cell""".stripMargin) { (s, dir) =>
       val emb = Scans.table(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
-      val lab = ivfAssign(s, emb).select(col("vec_id"), col("cell"))
+      val lab = ivfAssign(emb).select(col("vec_id"), col("cell"))
         .localCheckpoint(true) // read by the two edge-labeling joins,
                                // the degree join and the member rollup
       val eu = knnEdges(s, dir, 3)
@@ -1751,7 +1740,7 @@ object SimilarityQueries {
       emb.filter(col("vec_id") >= 5)
         .crossJoin(broadcast(queries))
         .select(col("q_id"), col("vec_id"),
-          round(cosineFast(s)(col("embedding"), col("qv")), 4).as("cos_sim"))
+          round(call_function("cosine_sim", col("embedding"), col("qv")), 4).as("cos_sim"))
         .filter(col("cos_sim") >= 0.25)
         .orderBy(col("q_id"), col("cos_sim").desc, col("vec_id"))
     },
@@ -1824,7 +1813,7 @@ object SimilarityQueries {
       top10Ranked(emb.join(broadcast(q), col("bucket") === col("probe"))
         .filter(col("vec_id") =!= 0)
         .select(col("vec_id"),
-          round(cosineFast(s)(col("embedding"), col("qv")), 4).as("cos_sim")))
+          round(call_function("cosine_sim", col("embedding"), col("qv")), 4).as("cos_sim")))
     },
 
     // ------------------------------------------------------------------
@@ -1842,7 +1831,7 @@ object SimilarityQueries {
     // ------------------------------------------------------------------
     QueryDef("sim_ivf_topk", ivfTopkSql) { (s, dir) =>
       val emb = Scans.table(s, dir, "embeddings")
-      ivfSearch(s, emb, ivfAssign(s, emb))
+      ivfSearch(emb, ivfAssign(emb))
     },
 
     // ------------------------------------------------------------------
@@ -1902,9 +1891,9 @@ object SimilarityQueries {
       val exact = top10Ranked(
         emb.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
           .select(col("vec_id"),
-            round(cosineFast(s)(col("embedding"), col("qv")), 4).as("cos_sim")))
+            round(call_function("cosine_sim", col("embedding"), col("qv")), 4).as("cos_sim")))
         .select(col("vec_id"))
-      val approx = ivfSearch(s, emb, ivfAssign(s, emb)).select(col("vec_id"))
+      val approx = ivfSearch(emb, ivfAssign(emb)).select(col("vec_id"))
       exact.join(approx, "vec_id")
         .agg(count(lit(1)).cast("long").as("n_matched"))
         .select(lit(10L).as("k"), col("n_matched"),
@@ -1928,11 +1917,11 @@ object SimilarityQueries {
             emb.schema.catalogString)(
           PersistedState.writeWithFallback(s, PersistedState.IvfLayoutDirKey,
             ivfLayoutPath(s, dir), dir, "ivf_layout") { p =>
-            ivfAssign(s, emb)
+            ivfAssign(emb)
               .write.mode("overwrite").partitionBy("cell").parquet(p)
           })
       }
-      ivfSearch(s, emb, readCellLayout(s, dir, layout))
+      ivfSearch(emb, readCellLayout(s, dir, layout))
     },
 
     // ------------------------------------------------------------------
@@ -1949,7 +1938,7 @@ object SimilarityQueries {
     // ------------------------------------------------------------------
     QueryDef("sim_ivf_incremental", ivfTopkSql) { (s, dir) =>
       val emb = Scans.table(s, dir, "embeddings")
-      ivfSearch(s, emb, readCellLayout(s, dir, stagedIncLayout(s, dir)))
+      ivfSearch(emb, readCellLayout(s, dir, stagedIncLayout(s, dir)))
     },
 
     // ------------------------------------------------------------------
@@ -2042,7 +2031,7 @@ object SimilarityQueries {
         .select(
           when(col("a.label") === col("b.label"), "same").otherwise("diff")
             .as("pair_kind"),
-          cosineFast(s)(col("a.embedding"), col("b.embedding")).as("cs"))
+          call_function("cosine_sim", col("a.embedding"), col("b.embedding")).as("cs"))
         .groupBy(col("pair_kind"))
         .agg(count(lit(1)).as("n_pairs"), round(avg(col("cs")), 4).as("mean_cos"))
         .orderBy(col("pair_kind"))
@@ -2089,7 +2078,7 @@ object SimilarityQueries {
           lshBucket(col("embedding"), planes).as("bucket"))
       val scored = corpus.join(broadcast(queries), "bucket")
         .select(col("q_id"), col("vec_id"),
-          round(cosineFast(s)(col("embedding"), col("qv")), 4).as("cos_sim"))
+          round(call_function("cosine_sim", col("embedding"), col("qv")), 4).as("cos_sim"))
       val w = Window.partitionBy(col("q_id"))
         .orderBy(col("cos_sim").desc, col("vec_id"))
       scored.withColumn("rank", row_number().over(w).cast("long"))
@@ -2140,7 +2129,7 @@ object SimilarityQueries {
         .agg(collect_list(struct(col("cid"), col("cv"))).as("codebook"))
       val assigned = emb.crossJoin(broadcast(codebook))
         .select(col("vec_id"), col("embedding"),
-          bestCentroid(s, col("codebook")).getField("cid").as("cell"))
+          bestCentroid(col("codebook")).getField("cid").as("cell"))
       val d = assigned.select(col("cell"), posexplode(col("embedding")))
         .select(col("cell"), col("pos").as("dim"),
           col("col").cast("double").as("x"))
@@ -2516,10 +2505,10 @@ object SimilarityQueries {
   /** One Lloyd's assignment pass against a driver-held codebook,
     * embedded as plan literals: a pure Project over the corpus scan —
     * no Exchange touches the corpus (plan-locked in PlanQualitySpec).
-    * Returns (vec_id, embedding, cell, cs). Uses the generic double
-    * cosine composition, not the float-typed native expression: trained
-    * centroids are double vectors and must not round-trip through
-    * float.
+    * Returns (vec_id, embedding, cell, cs). Scores with the built-in
+    * [[cosine]] composition over the double-typed trained centroids;
+    * the native `cosine_sim` accepts double arrays too and is bit-equal
+    * to it (ExtensionsSpec), so either form elects the same cells.
     */
   def kmeansAssign(emb: DataFrame, codebook: Seq[(Long, Seq[Double])]): DataFrame = {
     // An empty codebook (seeding from an empty corpus) has no nearest

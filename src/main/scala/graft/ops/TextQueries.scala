@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.exec.Scans
 
@@ -37,40 +37,19 @@ object TextQueries {
   private def fpIndexLock(path: String): Object =
     fpIndexLocks.computeIfAbsent(path, _ => new Object)
 
-  /** doc_id → winnowing fingerprint (min shingle md5) — the unit the
-    * incremental-dedup index stores; same definition as text_fingerprint
-    * so index lookups and per-doc fingerprints can never drift.
-    */
-  /** Preferred path: the native fused expression
-    * ([[graft.functions.MinShingleMd5]], registered by
-    * [[graft.GraftSparkExtensions]]) — one codegen'd loop per row.
-    * Sessions without the extension fall back to the equivalent built-in
-    * composition (equivalence property-tested in ExtensionsSpec):
-    * lower(text) hoisted below the transform — HOF lambdas evaluate
-    * interpreted with no cross-invocation CSE, so an in-lambda
-    * lower(text) would re-lowercase the document once PER SHINGLE. The
-    * sequence bound stays on the RAW text length — lowercasing is not
-    * length-preserving in Unicode (İ → i̇), and the cross-engine contract
-    * (the DuckDB twin) derives shingle starts from the raw length.
-    */
   /** Append the fingerprint column `fp` to a frame carrying `text` —
     * the ONE definition of the winnowing-lite fingerprint (min md5
-    * over 8-char shingles at stride 4 of the lowered text, raw-char
-    * start bound): the persisted incremental-dedup index AND the
-    * declared text_fingerprint output both derive from here, so the
-    * two cannot drift. Native fused loop when registered; the HOF
-    * fallback hoists the lowering into its own projection (no
-    * cross-invocation CSE in interpreted HOFs).
+    * over 8-char shingles at stride 4 of the lowered text; shingle
+    * starts bounded by the RAW text length, because lowercasing is not
+    * length-preserving in Unicode (İ → i̇) and the DuckDB twin derives
+    * starts from the raw length): the persisted incremental-dedup index
+    * AND the declared text_fingerprint output both derive from here, so
+    * the two cannot drift. One codegen'd loop per row — the native
+    * [[graft.functions.MinShingleMd5]]; ExtensionsSpec pins it
+    * bit-equal to the built-in composition.
     */
   def withFingerprint(df: DataFrame): DataFrame =
-    if (df.sparkSession.catalog.functionExists("min_shingle_md5"))
-      df.withColumn("fp", call_function("min_shingle_md5", col("text")))
-    else
-      df.withColumn("_fp_len", length(col("text")))
-        .withColumn("_fp_lt", lower(col("text")))
-        .withColumn("fp", array_min(expr(
-          "transform(sequence(1, greatest(_fp_len - 7, 1), 4), i -> md5(substring(_fp_lt, i, 8)))")))
-        .drop("_fp_len", "_fp_lt")
+    df.withColumn("fp", call_function("min_shingle_md5", col("text")))
 
   def fingerprintFrame(docs: DataFrame): DataFrame =
     withFingerprint(docs.select(col("doc_id"), col("text")))
@@ -286,24 +265,13 @@ object TextQueries {
     val docs = Scans.table(s, dir, "documents").repartition(col("doc_id"))
     // Fused row-local path (r7): `minhash_sigs(text)` computes tokenize →
     // shingle → md5 → fold → 8 affine minima in one codegen'd kernel call
-    // (bit-identical to the HOF composition below — spec-pinned); the
-    // interpreted transform lambdas re-paid expression-tree dispatch per
-    // shingle and never entered whole-stage codegen.
-    if (s.catalog.functionExists("minhash_sigs"))
-      docs.select(col("doc_id"), call_function("minhash_sigs", col("text")).as("mh"))
-        .select(col("doc_id") +:
-          (0 until 8).map(i => element_at(col("mh"), i + 1).as(s"sig_$i")): _*)
-    else
-      docs
-        .select(col("doc_id"), expr(toksSpark).as("tk"))
-        .select(col("doc_id"),
-          expr("""transform(sequence(1, greatest(size(tk) - 2, 1), 2),
-                 |  i -> pmod(cast(conv(substring(md5(concat_ws(' ', try_element_at(tk, i), try_element_at(tk, i+1), try_element_at(tk, i+2))), 1, 15), 16, 10) AS BIGINT), 1000000007L))"""
-            .stripMargin).as("hs"))
-        .select(col("doc_id") +:
-          (0 until 8).map(i =>
-            expr(s"array_min(transform(hs, h -> (h * ${2 * i + 1}L + ${i}L) % 1000000007L))")
-              .as(s"sig_$i")): _*)
+    // (bit-identical to the HOF composition — spec-pinned in
+    // ExtensionsSpec); interpreted transform lambdas re-pay
+    // expression-tree dispatch per shingle and never enter whole-stage
+    // codegen.
+    docs.select(col("doc_id"), call_function("minhash_sigs", col("text")).as("mh"))
+      .select(col("doc_id") +:
+        (0 until 8).map(i => element_at(col("mh"), i + 1).as(s"sig_$i")): _*)
   }
 
   /** LSH band buckets → distinct candidate pairs: 4 bands × 2 signature
@@ -469,25 +437,12 @@ object TextQueries {
        |           ON a.band = b.band AND a.k1 = b.k1 AND a.k2 = b.k2
        |          AND a.doc_id < b.doc_id)""".stripMargin
 
-  /** 64-bit SimHash from token md5s: bit b (= 4·(d−1)+k: bit k of hex
-    * digit d) votes +1/−1 per token; the signature bit is sign(sum).
-    * Generated column-wise so both engines run the same arithmetic.
+  /** The DuckDB oracle's 64-bit SimHash vote sums from token md5s
+    * (`th`): bit b (= 4·(d−1)+k: bit k of hex digit d) votes +1/−1 per
+    * token, one `s_b` column per bit; the signature bit is sign(sum)
+    * ([[simhashAssemble]]). The native `simhash64` folds the same votes
+    * per document ([[graft.functions.SimhashTextKernel]]).
     */
-  /** Spark evaluates the same bits from two 32-bit integer folds of the
-    * digest (h1 = hex digits 1-8, h2 = digits 9-16) computed ONCE per
-    * token, so the 64 vote sums are shift/mask arithmetic instead of 64
-    * string-slice→conv calls per token (~10× less per-row work; the
-    * DuckDB oracle keeps the digit-wise form — identical values).
-    * Digit d sits at nibble 8−d of its half (per-half offsets, NOT a
-    * mod): bit b = 4(d−1)+k ⇒ shiftright(h1, 4*(8−d)+k) & 1 for d ≤ 8,
-    * shiftright(h2, 4*(16−d)+k) & 1 for d ≥ 9.
-    */
-  private def simhashSumsSpark: Seq[Column] = (0 until 64).map { b =>
-    val d = b / 4 + 1; val k = b % 4
-    val (h, shift) = if (d <= 8) ("h1", 4 * (8 - d) + k) else ("h2", 4 * (16 - d) + k)
-    expr(s"sum(CASE WHEN (shiftright($h, $shift) & 1L) = 1 THEN 1 ELSE -1 END)")
-      .as(s"s_$b")
-  }
   private def simhashSumsDuck: String = (0 until 64).map { b =>
     val d = b / 4 + 1; val k = b % 4
     s"sum(CASE WHEN (((strpos('0123456789abcdef', substr(th, $d, 1)) - 1) >> $k) & 1) = 1 THEN 1 ELSE -1 END) AS s_$b"
@@ -696,8 +651,7 @@ object TextQueries {
     // tokens looping), high entropy is lexical diversity — a standard
     // pretraining quality signal next to the ratio heuristics. The
     // Spark side is fully ROW-LOCAL (one fused `token_entropy` native
-    // call per doc — `functions/TokenEntropy.scala`; value-identical
-    // HOF fallback for unregistered sessions — no explode, no
+    // call per doc — `functions/TokenEntropy.scala` — no explode, no
     // token-grain shuffle; at 100 TB this runs embarrassingly parallel
     // over the scan like the other gates);
     // the oracle states the same entropy as grouped SQL. Both compute
@@ -722,8 +676,8 @@ object TextQueries {
          |SELECT doc_id, n_tokens, word_entropy,
          |       (n_tokens >= 5 AND word_entropy >= 2.0) AS passes
          |FROM ent ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      // The profile (one fused token_entropy call per doc, HOF sort +
-      // run-length fallback — entropyProfile) feeds a `passes` COLUMN,
+      // The profile (one fused token_entropy call per doc —
+      // entropyProfile) feeds a `passes` COLUMN,
       // not a filter on the computed entropy: predicate pushdown
       // substitutes aliases into a pushed filter with no cost guard, so
       // `WHERE word_entropy >= 2` re-runs the whole profile tree inside
@@ -732,7 +686,7 @@ object TextQueries {
       // alphanumeric char ⇔ the tokenizer yields ≥ 1 token — exactly
       // the oracle's domain), which pushes into the parquet scan for
       // free.
-      entropyProfile(s,
+      entropyProfile(
         Scans.table(s, dir, "documents")
           .filter(lower(col("text")).rlike("[a-z0-9]"))) // tokenizer-exact domain: toks nonempty iff
         // LOWER(text) has [a-z0-9] (a raw-text ASCII class would drop
@@ -876,19 +830,10 @@ object TextQueries {
          |  FROM stats) r
          |WHERE rank <= 20 ORDER BY rank""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
-      // per-doc shingle digests: the native fused kernel when registered
-      // (one codegen'd pass: tokenize → 8-token shingle → md5 hex), else
-      // the bit-identical HOF composition. sequence(1, 0) is DESCENDING
-      // [1, 0], not empty — the CASE guards short docs in the fallback
-      // (the kernel returns an empty array itself).
-      val hsCol =
-        if (s.catalog.functionExists("shingle_md5s"))
-          call_function("shingle_md5s", col("text"))
-        else expr(
-          s"""CASE WHEN size($toksSpark) >= 8
-             |  THEN transform(sequence(1, size($toksSpark) - 7),
-             |         i -> md5(array_join(slice($toksSpark, i, 8), ' ')))
-             |  ELSE cast(array() AS array<string>) END""".stripMargin)
+      // per-doc shingle digests: the native fused kernel (one codegen'd
+      // pass: tokenize → 8-token shingle → md5 hex; empty for a doc
+      // under 8 tokens)
+      val hsCol = call_function("shingle_md5s", col("text"))
       // spread BEFORE the digest kernel: both passes run the fused
       // tokenize→shingle→md5 kernel over every document, and the local
       // single-row-group scan would serialize that on one core
@@ -1422,35 +1367,11 @@ object TextQueries {
       // token-less document (the explode pipeline drops those rows —
       // same output set). Bit-equivalence against the composed pipeline
       // is spec-pinned (ExtensionsSpec); DuckDB oracle unchanged.
-      if (s.catalog.functionExists("simhash64"))
-        Scans.table(s, dir, "documents")
-          .select(col("doc_id"),
-            call_function("simhash64", col("text")).as("simhash64"))
-          .filter(col("simhash64").isNotNull)
-          .orderBy(col("doc_id"))
-      else {
-        // composed fallback for unregistered sessions: explode + narrow
-        // vote-vector aggregate (or 64 sum(CASE) columns without it)
-        val halves = Scans.table(s, dir, "documents")
-          .repartition(col("doc_id")) // full-width digest work (see minhashSigs)
-          .select(col("doc_id"), explode(expr(toksSpark)).as("tok"))
-          .select(col("doc_id"), md5(col("tok")).as("th"))
-          .select(col("doc_id"),
-            expr("cast(conv(substring(th, 1, 8), 16, 10) AS BIGINT)").as("h1"),
-            expr("cast(conv(substring(th, 9, 8), 16, 10) AS BIGINT)").as("h2"))
-        val votes =
-          if (s.catalog.functionExists("simhash_votes"))
-            halves.groupBy(col("doc_id"))
-              .agg(call_function("simhash_votes", col("h1"), col("h2")).as("sv"))
-              .select(col("doc_id") +:
-                (0 until 64).map(b => element_at(col("sv"), b + 1).as(s"s_$b")): _*)
-          else
-            halves.groupBy(col("doc_id"))
-              .agg(simhashSumsSpark.head, simhashSumsSpark.tail: _*)
-        votes.select(col("doc_id"),
-            expr(simhashAssemble(b => s"CASE WHEN s_$b > 0 THEN 1 ELSE 0 END")).as("simhash64"))
-          .orderBy(col("doc_id"))
-      }
+      Scans.table(s, dir, "documents")
+        .select(col("doc_id"),
+          call_function("simhash64", col("text")).as("simhash64"))
+        .filter(col("simhash64").isNotNull)
+        .orderBy(col("doc_id"))
     },
 
     // ------------------------------------------------------------------
@@ -2170,13 +2091,11 @@ object TextQueries {
     // one fused `hash_vectorize64(text)` native call per document
     // (tokenize → md5 → 64-bucket histogram → profile in one codegen'd
     // pass, `functions/HashVectorize.scala` — the minhash_sigs/simhash64
-    // treatment applied to this family's kernel), falling back to the
-    // equivalent HOF tree (hash + sort + run-length, the entropy gate's
-    // counting kernel) on a session without the extension. No explode,
-    // no token-grain shuffle; at 100 TB this rides the corpus scan like
+    // treatment applied to this family's kernel). No explode, no
+    // token-grain shuffle; at 100 TB this rides the corpus scan like
     // the other gates. The oracle states the same vector as grouped
     // SQL. Integer counts make norm and argmax engine-exact; the
-    // native≡HOF equivalence is spec-pinned (QueriesSpec) and the
+    // native≡HOF equivalence is spec-pinned (ExtensionsSpec) and the
     // native kernel's interpreted≡codegen parity in
     // CodegenConsistencySpec.
     // ------------------------------------------------------------------
@@ -2200,7 +2119,7 @@ object TextQueries {
          |SELECT a.doc_id, a.n_tokens, a.nnz, a.l2_norm, t.top_dim, t.top_count
          |FROM agg a JOIN top t ON t.doc_id = a.doc_id
          |ORDER BY a.doc_id""".stripMargin) { (s, dir) =>
-      hashVectorizeProfile(s,
+      hashVectorizeProfile(
         Scans.table(s, dir, "documents")
           // same scan-pushable domain as the entropy gate: a doc hashes
           // to ≥ 1 dimension iff its text has an alphanumeric character
@@ -2212,89 +2131,24 @@ object TextQueries {
     })
 
   /** The hashing-trick feature profile of `docs` (doc_id, text):
-    * {n_tokens, nnz, l2_norm, top_dim, top_count} per document —
-    * the fused native `hash_vectorize64` where the session has the
-    * extension, the value-identical HOF tree otherwise (the
-    * registered/unregistered split `minhashSigs` uses). `forceHof`
-    * is the equivalence spec's seam — it pins native ≡ HOF on the
-    * same session, not just on sessions that happen to differ.
-    * Input rows must be in the tokenizer's nonempty domain (the
-    * HOF run-length kernel indexes into the dim array). */
-  private[graft] def hashVectorizeProfile(
-      s: SparkSession, docs: DataFrame, forceHof: Boolean = false): DataFrame =
-    if (!forceHof && s.catalog.functionExists("hash_vectorize64"))
-      docs.select(col("doc_id"),
-          call_function("hash_vectorize64", col("text")).as("v"))
-        .select(col("doc_id"), col("v.n_tokens").as("n_tokens"),
-          col("v.nnz").as("nnz"), col("v.l2_norm").as("l2_norm"),
-          col("v.top_dim").as("top_dim"), col("v.top_count").as("top_count"))
-    else docs
-      .select(col("doc_id"), expr(
-        s"""array_sort(transform($toksSpark,
-           |  t -> cast(conv(substring(md5(t), 1, 7), 16, 10) AS bigint) % 64))"""
-          .stripMargin).as("st"))
-      // run boundaries → per-dim counts + the dim at each run start
-      // (the entropy gate's sort + run-length kernel, reused on the
-      // hashed-dimension array)
-      .select(col("doc_id"), expr("size(st)").cast("long").as("n_tokens"),
-        col("st"),
-        expr("""filter(sequence(1, greatest(size(st), 1)),
-               |  i -> i = 1 OR element_at(st, i) != element_at(st, i - 1))"""
-          .stripMargin).as("b"))
-      .select(col("doc_id"), col("n_tokens"),
-        expr("size(b)").cast("long").as("nnz"),
-        expr("""zip_with(b,
-               |  concat(slice(b, 2, size(b) - 1),
-               |         array(CAST(n_tokens + 1 AS INT))),
-               |  (lo, hi) -> hi - lo)""".stripMargin).as("counts"),
-        expr("transform(b, i -> element_at(st, i))").as("dims"))
-      .select(col("doc_id"), col("n_tokens"), col("nnz"),
-        round(sqrt(expr(
-          "aggregate(counts, 0.0D, (acc, c) -> acc + CAST(c AS DOUBLE) * c)")),
-          4).as("l2_norm"),
-        expr("""array_max(zip_with(counts, dims,
-               |  (c, d) -> struct(c AS c, -d AS negd, d AS dim)))"""
-          .stripMargin).as("top"))
-      .select(col("doc_id"), col("n_tokens"), col("nnz"), col("l2_norm"),
-        col("top.dim").as("top_dim"),
-        col("top.c").cast("long").as("top_count"))
+    * {n_tokens, nnz, l2_norm, top_dim, top_count} per document from one
+    * fused native `hash_vectorize64` call. A token-less document is the
+    * zero vector with no argmax; the declared key filters those out to
+    * match the oracle's domain. */
+  private[graft] def hashVectorizeProfile(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+        call_function("hash_vectorize64", col("text")).as("v"))
+      .select(col("doc_id"), col("v.n_tokens").as("n_tokens"),
+        col("v.nnz").as("nnz"), col("v.l2_norm").as("l2_norm"),
+        col("v.top_dim").as("top_dim"), col("v.top_count").as("top_count"))
 
   /** The word-entropy profile of `docs` (doc_id, text): {n_tokens,
-    * word_entropy} per document — the fused native `token_entropy`
-    * where the session has the extension, the value-identical HOF tree
-    * otherwise (the registered/unregistered split `minhashSigs` uses).
-    * `forceHof` is the equivalence spec's seam — it pins native ≡ HOF
-    * on the same session. Input rows must be in the tokenizer's
-    * nonempty domain (the HOF run-length kernel indexes into the
-    * sorted-token array).
-    *
-    * HOF path notes (moved with the tree from the query body): token
-    * counts go by SORT + RUN-LENGTH, not per-distinct rescans — an
-    * array_distinct×filter formulation is O(u·T) string compares per
-    * document and measured 6 s at sf0.1. greatest() keeps the boundary
-    * sequence ascending on token-less docs (sequence(1,0) would
-    * DESCEND through index 0); the i=1 disjunct short-circuits, so
-    * element_at never sees index 0. */
-  private[graft] def entropyProfile(
-      s: SparkSession, docs: DataFrame, forceHof: Boolean = false): DataFrame =
-    if (!forceHof && s.catalog.functionExists("token_entropy"))
-      docs.select(col("doc_id"),
-          call_function("token_entropy", col("text")).as("e"))
-        .select(col("doc_id"), col("e.n_tokens").as("n_tokens"),
-          col("e.word_entropy").as("word_entropy"))
-    else docs
-      .select(col("doc_id"), expr(s"array_sort($toksSpark)").as("st"))
-      .select(col("doc_id"), expr("size(st)").cast("long").as("n_tokens"),
-        expr("""filter(sequence(1, greatest(size(st), 1)),
-               |  i -> i = 1 OR element_at(st, i) != element_at(st, i - 1))"""
-          .stripMargin).as("b"))
-      .select(col("doc_id"), col("n_tokens"),
-        expr("""round(log2(n_tokens) -
-               |  aggregate(
-               |    zip_with(b,
-               |      concat(slice(b, 2, size(b) - 1),
-               |             array(CAST(n_tokens + 1 AS INT))),
-               |      (lo, hi) -> hi - lo),
-               |    0.0D, (acc, c) -> acc + c * log2(c)) / n_tokens,
-               |  4)""".stripMargin).as("word_entropy"))
+    * word_entropy} per document from one fused native `token_entropy`
+    * call. A token-less document has 0 tokens and NULL entropy; the
+    * declared key filters those out to match the oracle's domain. */
+  private[graft] def entropyProfile(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+        call_function("token_entropy", col("text")).as("e"))
+      .select(col("doc_id"), col("e.n_tokens").as("n_tokens"),
+        col("e.word_entropy").as("word_entropy"))
 }

@@ -11,6 +11,10 @@ class ExtensionsSpec extends SparkSpecBase {
 
   private def run(name: String) = SparkEntry.queries(name)(spark, sfDir)
 
+  /** The engine's tokenizer as SQL text — the tokens every text native
+    * and its HOF reference share. */
+  private val toks = "filter(split(lower(text), '[^a-z0-9]+'), t -> t != '')"
+
   test("dedup_exact keeps one representative per distinct text") {
     val docs = Scans.table(spark, sfDir, "documents")
     val distinctTexts = docs.select(col("text")).distinct().count()
@@ -281,47 +285,50 @@ class ExtensionsSpec extends SparkSpecBase {
       s"residual interpreted HOF in text_fingerprint:\n${plan.take(2000)}")
   }
 
-  test("native simhash_votes agrees with the 64-column sum(CASE) aggregate") {
-    assert(spark.catalog.functionExists("simhash_votes"))
-    val halves = Scans.table(spark, sfDir, "documents")
-      .select(col("doc_id"),
-        explode(expr("filter(split(lower(text), '[^a-z0-9]+'), t -> t != '')")).as("tok"))
-      .select(col("doc_id"), md5(col("tok")).as("th"))
-      .select(col("doc_id"),
-        expr("cast(conv(substring(th, 1, 8), 16, 10) AS BIGINT)").as("h1"),
-        expr("cast(conv(substring(th, 9, 8), 16, 10) AS BIGINT)").as("h2"))
-    val native = halves.groupBy(col("doc_id"))
-      .agg(call_function("simhash_votes", col("h1"), col("h2")).as("sv"))
-    // the column form, reassembled into the same array shape
-    val columns = (0 until 64).map { b =>
-      val d = b / 4 + 1; val k = b % 4
-      val (h, shift) = if (d <= 8) ("h1", 4 * (8 - d) + k) else ("h2", 4 * (16 - d) + k)
-      expr(s"sum(CASE WHEN (shiftright($h, $shift) & 1L) = 1 THEN 1 ELSE -1 END)").as(s"s_$b")
+  test("every registered native is executed by the declared key that owns it") {
+    // the extension is a precondition of these keys (no built-in
+    // fallback), so each native it registers must have a key that runs
+    // it — a registered native no key reaches is dead production code
+    val owners = Map(
+      "cosine_sim" -> "sim_brute_force_topk",
+      "minhash_sigs" -> "dedup_minhash_lsh",
+      "min_shingle_md5" -> "text_fingerprint",
+      "shingle_md5s" -> "text_boilerplate_ngrams",
+      "simhash64" -> "dedup_simhash",
+      "hash_vectorize64" -> "text_hashing_vectorize",
+      "token_entropy" -> "text_entropy_filter",
+      "bloom_bits_agg" -> "join_bloom_prefilter",
+      "bloom_might_contain" -> "join_bloom_prefilter")
+    val registered = spark.catalog.listFunctions().collect()
+      .filter(f => Option(f.className).exists(_.startsWith("graft.functions.")))
+      .map(_.name).toSet
+    assert(registered == owners.keySet,
+      s"registered natives ${registered.toSeq.sorted} != owned natives " +
+        owners.keys.toSeq.sorted)
+    // every plan a key executes, the driver-side collects inside its
+    // body included (bloom_bits_agg runs as one before the probe)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.optimizedPlan.treeString + qe.executedPlan.treeString)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
-    val viaColumns = halves.groupBy(col("doc_id"))
-      .agg(columns.head, columns.tail: _*)
-      .select(col("doc_id"),
-        array((0 until 64).map(b => col(s"s_$b")): _*).as("sv"))
-    assert(native.exceptAll(viaColumns).count() == 0 &&
-      viaColumns.exceptAll(native).count() == 0)
-  }
-
-  test("simhash_votes over zero rows is NULL, like the sum(CASE) columns") {
-    // a GLOBAL aggregate over an empty input: sum over zero rows is
-    // NULL, so the fused form must eval NULL too — an all-zero vote
-    // vector would assemble a spurious all-zeros signature where the
-    // composed path assembles none
-    val empty = spark.range(0)
-      .selectExpr("id AS h1", "id AS h2").filter("h1 < 0")
-    val fusedRow = empty
-      .agg(call_function("simhash_votes", col("h1"), col("h2")).as("sv"))
-      .collect()(0)
-    assert(fusedRow.isNullAt(0),
-      s"simhash_votes over zero rows returned ${fusedRow.get(0)}, not NULL")
-    val columnRow = empty
-      .agg(expr("sum(CASE WHEN (shiftright(h1, 0) & 1L) = 1 THEN 1 ELSE -1 END)"))
-      .collect()(0)
-    assert(columnRow.isNullAt(0)) // the contract being mirrored
+    def drain(): Unit = assert(org.apache.spark.GraftSparkInternals
+      .drainListenerBus(spark.sparkContext, 60000L), "listener bus did not drain")
+    spark.listenerManager.register(listener)
+    try owners.groupMap(_._2)(_._1).foreach { case (key, natives) =>
+      drain()
+      plans.clear()
+      run(key).collect()
+      drain()
+      val executed = plans.toArray.mkString("\n")
+      // a call, not an alias: dedup_simhash's output column is named
+      // simhash64 too
+      val missing = natives.filterNot(fn => executed.contains(s"$fn("))
+      assert(missing.isEmpty, s"$key executed no plan calling ${missing.mkString(", ")}")
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("bloom_might_contain refuses malformed blobs loudly") {
@@ -385,14 +392,23 @@ class ExtensionsSpec extends SparkSpecBase {
       .select(col("doc_id"),
         expr("cast(conv(substring(th, 1, 8), 16, 10) AS BIGINT)").as("h1"),
         expr("cast(conv(substring(th, 9, 8), 16, 10) AS BIGINT)").as("h2"))
+    // the 64 vote sums as sum(CASE) columns over the two 32-bit digest
+    // halves (h1 = hex digits 1-8, h2 = 9-16): digit d sits at nibble
+    // 8−d of its half, so bit b = 4(d−1)+k is shiftright(h1, 4(8−d)+k)
+    // & 1 for d ≤ 8 and shiftright(h2, 4(16−d)+k) & 1 for d ≥ 9
+    val votes = (0 until 64).map { b =>
+      val d = b / 4 + 1; val k = b % 4
+      val (h, shift) = if (d <= 8) ("h1", 4 * (8 - d) + k) else ("h2", 4 * (16 - d) + k)
+      expr(s"sum(CASE WHEN (shiftright($h, $shift) & 1L) = 1 THEN 1 ELSE -1 END)").as(s"s_$b")
+    }
     val assemble = (1 to 16).map { d =>
       val v = (0 until 4)
-        .map(k => s"(CASE WHEN element_at(sv, ${4 * (d - 1) + k + 1}) > 0 THEN 1 ELSE 0 END) * ${1 << k}")
+        .map(k => s"(CASE WHEN s_${4 * (d - 1) + k} > 0 THEN 1 ELSE 0 END) * ${1 << k}")
         .mkString(" + ")
       s"substring('0123456789abcdef', ($v) + 1, 1)"
     }.mkString("concat(", ", ", ")")
     val composed = halves.groupBy(col("doc_id"))
-      .agg(call_function("simhash_votes", col("h1"), col("h2")).as("sv"))
+      .agg(votes.head, votes.tail: _*)
       .select(col("doc_id"), expr(assemble).as("sig"))
     assert(fused.exceptAll(composed).count() == 0 &&
       composed.exceptAll(fused).count() == 0)
@@ -471,12 +487,41 @@ class ExtensionsSpec extends SparkSpecBase {
 
   test("fused hash_vectorize64 equals the HOF composition on the corpus + edges") {
     assert(spark.catalog.functionExists("hash_vectorize64"))
-    // the profile helper's forceHof seam drives BOTH paths through the
-    // exact production code on the same session
     def native(df: org.apache.spark.sql.DataFrame) =
-      graft.ops.TextQueries.hashVectorizeProfile(spark, df)
-    def hof(df: org.apache.spark.sql.DataFrame) =
-      graft.ops.TextQueries.hashVectorizeProfile(spark, df, forceHof = true)
+      graft.ops.TextQueries.hashVectorizeProfile(df)
+    // the reference: the same profile as a built-in HOF tree — hash
+    // every token to a dim, sort, then run-length count (the entropy
+    // reference's counting kernel on the hashed-dimension array); only
+    // defined on the tokenizer's nonempty domain, because the
+    // run-length kernel indexes into the dim array
+    def hof(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("doc_id"), expr(
+        s"""array_sort(transform($toks,
+           |  t -> cast(conv(substring(md5(t), 1, 7), 16, 10) AS bigint) % 64))"""
+          .stripMargin).as("st"))
+      // run boundaries → per-dim counts + the dim at each run start
+      .select(col("doc_id"), expr("size(st)").cast("long").as("n_tokens"),
+        col("st"),
+        expr("""filter(sequence(1, greatest(size(st), 1)),
+               |  i -> i = 1 OR element_at(st, i) != element_at(st, i - 1))"""
+          .stripMargin).as("b"))
+      .select(col("doc_id"), col("n_tokens"),
+        expr("size(b)").cast("long").as("nnz"),
+        expr("""zip_with(b,
+               |  concat(slice(b, 2, size(b) - 1),
+               |         array(CAST(n_tokens + 1 AS INT))),
+               |  (lo, hi) -> hi - lo)""".stripMargin).as("counts"),
+        expr("transform(b, i -> element_at(st, i))").as("dims"))
+      .select(col("doc_id"), col("n_tokens"), col("nnz"),
+        round(sqrt(expr(
+          "aggregate(counts, 0.0D, (acc, c) -> acc + CAST(c AS DOUBLE) * c)")),
+          4).as("l2_norm"),
+        expr("""array_max(zip_with(counts, dims,
+               |  (c, d) -> struct(c AS c, -d AS negd, d AS dim)))"""
+          .stripMargin).as("top"))
+      .select(col("doc_id"), col("n_tokens"), col("nnz"), col("l2_norm"),
+        col("top.dim").as("top_dim"),
+        col("top.c").cast("long").as("top_count"))
     // both paths are only defined on the tokenizer's nonempty domain
     // (the query's filter) — compare there
     val corpus = Scans.table(spark, sfDir, "documents")
@@ -515,9 +560,30 @@ class ExtensionsSpec extends SparkSpecBase {
   test("fused token_entropy equals the HOF composition on the corpus + edges") {
     assert(spark.catalog.functionExists("token_entropy"))
     def native(df: org.apache.spark.sql.DataFrame) =
-      graft.ops.TextQueries.entropyProfile(spark, df)
-    def hof(df: org.apache.spark.sql.DataFrame) =
-      graft.ops.TextQueries.entropyProfile(spark, df, forceHof = true)
+      graft.ops.TextQueries.entropyProfile(df)
+    // the reference: the same profile as a built-in HOF tree. Token
+    // counts go by SORT + RUN-LENGTH, not per-distinct rescans (an
+    // array_distinct×filter formulation is O(u·T) string compares per
+    // document). greatest() keeps the boundary sequence ascending on
+    // token-less docs (sequence(1,0) would DESCEND through index 0);
+    // the i=1 disjunct short-circuits, so element_at never sees index
+    // 0. Only defined on the tokenizer's nonempty domain, because the
+    // run-length kernel indexes into the sorted-token array.
+    def hof(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("doc_id"), expr(s"array_sort($toks)").as("st"))
+      .select(col("doc_id"), expr("size(st)").cast("long").as("n_tokens"),
+        expr("""filter(sequence(1, greatest(size(st), 1)),
+               |  i -> i = 1 OR element_at(st, i) != element_at(st, i - 1))"""
+          .stripMargin).as("b"))
+      .select(col("doc_id"), col("n_tokens"),
+        expr("""round(log2(n_tokens) -
+               |  aggregate(
+               |    zip_with(b,
+               |      concat(slice(b, 2, size(b) - 1),
+               |             array(CAST(n_tokens + 1 AS INT))),
+               |      (lo, hi) -> hi - lo),
+               |    0.0D, (acc, c) -> acc + c * log2(c)) / n_tokens,
+               |  4)""".stripMargin).as("word_entropy"))
     // both paths are only defined on the tokenizer's nonempty domain
     val corpus = Scans.table(spark, sfDir, "documents")
       .filter(lower(col("text")).rlike("[a-z0-9]"))
@@ -554,31 +620,6 @@ class ExtensionsSpec extends SparkSpecBase {
       "text_entropy_filter not using the fused expression")
     assert(!p.contains("array_sort") && !p.contains("Generate"),
       s"expected the fused row-local plan:\n${p.take(2000)}")
-  }
-
-  test("simhash_votes matches the sum(CASE) null semantics on null halves") {
-    import spark.implicits._
-    // a null half must vote −1 on each of its 32 bits, exactly like the
-    // CASE form's null-predicate ELSE branch — pinned so the native and
-    // column paths can never silently diverge if the non-null input
-    // contract weakens
-    val rows = Seq[(Long, Option[Long], Option[Long])](
-      (1L, Some(0xffffffffL), None), (1L, None, Some(0L)),
-      (2L, None, None), (3L, Some(0x12345678L), Some(0x9abcdef0L)))
-      .toDF("doc_id", "h1", "h2")
-    val native = rows.groupBy(col("doc_id"))
-      .agg(call_function("simhash_votes", col("h1"), col("h2")).as("sv"))
-    val columns = (0 until 64).map { b =>
-      val d = b / 4 + 1; val k = b % 4
-      val (h, shift) = if (d <= 8) ("h1", 4 * (8 - d) + k) else ("h2", 4 * (16 - d) + k)
-      expr(s"sum(CASE WHEN (shiftright($h, $shift) & 1L) = 1 THEN 1 ELSE -1 END)").as(s"s_$b")
-    }
-    val viaColumns = rows.groupBy(col("doc_id"))
-      .agg(columns.head, columns.tail: _*)
-      .select(col("doc_id"),
-        array((0 until 64).map(b => col(s"s_$b")): _*).as("sv"))
-    assert(native.exceptAll(viaColumns).count() == 0 &&
-      viaColumns.exceptAll(native).count() == 0)
   }
 
   test("lossless image decode derives dims and features from real decoded pixels") {
@@ -680,10 +721,9 @@ class ExtensionsSpec extends SparkSpecBase {
   }
 
   test("cosine_sim accepts double arrays like the composed fallback") {
-    // registration symmetry: the zip_with/aggregate composition widens
-    // any numeric element to double, so the native must too — otherwise
-    // the same query succeeds on an extension-less session and
-    // AnalysisExceptions on a registered one
+    // the zip_with/aggregate composition widens any numeric element to
+    // double, so the native must too — otherwise a query over a
+    // double-array column fails analysis where the composition scores
     import spark.implicits._
     val df = Seq((Array(1.0, 2.0, 3.0), Array(1f, 2f, 3f)))
       .toDF("d", "f")
@@ -694,31 +734,6 @@ class ExtensionsSpec extends SparkSpecBase {
     assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
     assert(math.abs(r.getDouble(1) - 1.0) < 1e-12)
     assert(math.abs(r.getDouble(2) - 1.0) < 1e-12)
-  }
-
-  test("VectorMean finishes an all-null group as NULL, not an empty vector") {
-    // the posexplode centroid twin produces no row for such a group;
-    // an empty array would be indistinguishable from the legitimate
-    // mean of zero-length vectors (count > 0)
-    import graft.functions.VectorMean
-    assert(VectorMean.finish(VectorMean.zero) == null)
-    val zeroDim = VectorMean.reduce(VectorMean.zero, Array.empty[Float])
-    assert(VectorMean.finish(zeroDim) != null &&
-      VectorMean.finish(zeroDim).isEmpty,
-      "a real 0-dim mean stays an empty array, distinct from NULL")
-  }
-
-  test("VectorMean rejects ragged dimensions loudly instead of truncating") {
-    // partition/merge order is nondeterministic, so silently truncating
-    // a mismatched vector would make the output dimension (and the
-    // means) vary run to run — a mean over mixed dims has no answer
-    import graft.functions.VectorMean
-    val b2 = VectorMean.reduce(VectorMean.zero, Array(1f, 2f))
-    intercept[IllegalArgumentException] {
-      VectorMean.reduce(b2, Array(1f, 2f, 3f))
-    }
-    val b3 = VectorMean.reduce(VectorMean.zero, Array(1f, 2f, 3f))
-    intercept[IllegalArgumentException] { VectorMean.merge(b2, b3) }
   }
 
   test("quality-score ratios stay BIGINT on documents past the INT cliff") {
@@ -739,48 +754,6 @@ class ExtensionsSpec extends SparkSpecBase {
       .toMap
     assert(row("allpunct")._1 == 1.0)
     assert(row("allstop")._2 == 1.0)
-  }
-
-  test("VectorMean treats a zero-length vector as ragged in EVERY order") {
-    // a 0-dim vector's buffer is (empty sums, n>0) — if the empty sums
-    // array doubled as the 'uninitialized' sentinel, an empty-FIRST
-    // partition would re-initialize on the next real vector and
-    // silently fold the empty into the count (order-dependent skew),
-    // while empty-LAST aborted; both orders must abort identically
-    import graft.functions.VectorMean
-    val emptyFirst = VectorMean.reduce(VectorMean.zero, Array.empty[Float])
-    intercept[IllegalArgumentException] {
-      VectorMean.reduce(emptyFirst, Array(1f, 2f))
-    }
-    val real = VectorMean.reduce(VectorMean.zero, Array(1f, 2f))
-    intercept[IllegalArgumentException] {
-      VectorMean.reduce(real, Array.empty[Float])
-    }
-    intercept[IllegalArgumentException] { VectorMean.merge(emptyFirst, real) }
-    intercept[IllegalArgumentException] { VectorMean.merge(real, emptyFirst) }
-    // an all-0-dim group is well-defined: its mean is the 0-dim vector
-    val both = VectorMean.merge(emptyFirst,
-      VectorMean.reduce(VectorMean.zero, Array.empty[Float]))
-    assert(both._2 == 2 && VectorMean.finish(both).isEmpty)
-  }
-
-  test("typed VectorMean aggregator agrees with the posexplode centroid") {
-    import org.apache.spark.sql.functions.udaf
-    val vmean = udaf(graft.functions.VectorMean)
-    val viaAgg = Scans.table(spark, sfDir, "embeddings")
-      .groupBy(col("label"))
-      .agg(vmean(col("embedding")).as("centroid"))
-      .select(col("label"), expr("round(centroid[0], 6)").as("dim0"),
-        expr("round(aggregate(centroid, 0D, (a, x) -> a + x * x), 6)").as("sq"))
-    val viaExplode = Scans.table(spark, sfDir, "embeddings")
-      .select(col("label"), posexplode(col("embedding")))
-      .groupBy(col("label"), col("pos"))
-      .agg(avg(col("col").cast("double")).as("m"))
-      .groupBy(col("label"))
-      .agg(round(min(when(col("pos") === 0, col("m"))), 6).as("dim0"),
-        round(sum(col("m") * col("m")), 6).as("sq"))
-    assert(viaAgg.exceptAll(viaExplode).count() == 0 &&
-      viaExplode.exceptAll(viaAgg).count() == 0)
   }
 
   test("sessionization conserves events and durations are non-negative") {

@@ -809,7 +809,7 @@ class QueriesSpec extends SparkSpecBase {
         else 0f))
     }
     val emb = (cents ++ corpus).toDF("vec_id", "embedding")
-    val pairs = graft.ops.SimilarityQueries.candidatePairsFrom(spark, emb)
+    val pairs = graft.ops.SimilarityQueries.candidatePairsFrom(emb)
     val n = cents.size + corpus.size
     val h = graft.ops.SimilarityQueries.snmHalfWindow
     val cnt = pairs.count()

@@ -77,8 +77,8 @@ object SparkSpecBase {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      // same ObjectHashAggregate headroom as Verify/Bench (simhash_votes
-      // holds one small fixed-size buffer per group)
+      // same ObjectHashAggregate headroom as GraftSession (grouped
+      // object-buffer aggregates such as collect_list)
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 65536)
       // per-process like GraftSession: a concurrent Verify/Bench JVM must
       // never share the warehouse the bucketed-table tests rewrite
