@@ -2,11 +2,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE local-session configuration every entry point runs
-  * (Verify, Bench; the spec base mirrors it). A conf added here reaches
+  * (Verify, Bench, the specs). A conf added here reaches
   * both the verified engine and the benchmarked engine at once — the
   * two mains used to carry verbatim copies of this block, and a conf
   * added to one but not the other would silently benchmark a different
-  * engine than the one verified.
+  * engine than the one verified. The spec base builds its session here
+  * too, so the specs run the engine that ships.
+  *
+  * Besides the SQL confs, the session's `file:` filesystem is
+  * [[graft.exec.NioLocalFileSystem]] (`spark.hadoop.fs.file.impl`):
+  * Hadoop's checksummed local filesystem with permission reads and
+  * writes through `java.nio`.
   */
 object GraftSession {
 
@@ -33,6 +39,11 @@ object GraftSession {
       // that)
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 65536)
       .config("spark.sql.warehouse.dir", scratchWarehouse)
+      // local permission reads and writes as system calls, not a forked
+      // `ls -ld`/`chmod` per file (this Hadoop has no libhadoop); the
+      // driver's listings and footers and every executor's writes go
+      // through the session's Hadoop conf, so they all take it
+      .config("spark.hadoop.fs.file.impl", classOf[graft.exec.NioLocalFileSystem].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

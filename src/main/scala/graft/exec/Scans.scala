@@ -75,8 +75,7 @@ object Scans {
           .filter(_.contains("=")).map(_.takeWhile(_ != '=').toLowerCase(java.util.Locale.ROOT))
           .toSet
         first.map { f =>
-          Sinks.footerFold(Seq(f))(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(_, conf))(footer =>
+          Sinks.footerFold(conf, Seq(f))(footer =>
             ParquetFileFormat.readSchemaFromFooter(
               new org.apache.parquet.hadoop.Footer(f.getPath, footer),
               new ParquetToSparkSchemaConverter(sqlConf))).head

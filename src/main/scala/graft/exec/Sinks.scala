@@ -48,18 +48,16 @@ object Sinks {
     * commit protocol, so their row counts ARE the committed state; no
     * data pages are read.
     */
-  def committedRowCount(spark: SparkSession, path: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    footerRowCount(committedFiles(spark, path))(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(_, conf))
-  }
+  def committedRowCount(spark: SparkSession, path: String): Long =
+    footerRowCount(spark.sparkContext.hadoopConfiguration, committedFiles(spark, path))
 
-  /** Sum of the parquet footer row counts of `files` (`open` turns one
-    * into a readable file). Shared by [[committedRowCount]] and the
-    * catalog's source count (`Catalog.collect`). */
-  def footerRowCount[F](files: Seq[F])(
-      open: F => org.apache.parquet.io.InputFile): Long =
-    footerFold(files)(open)(_.getBlocks.asScala.map(_.getRowCount).sum).sum
+  /** Sum of the parquet footer row counts of `files`. Shared by
+    * [[committedRowCount]] and the catalog's source count
+    * (`Catalog.collect`). */
+  def footerRowCount(
+      conf: org.apache.hadoop.conf.Configuration,
+      files: Seq[org.apache.hadoop.fs.FileStatus]): Long =
+    footerFold(conf, files)(_.getBlocks.asScala.map(_.getRowCount).sum).sum
 
   /** Map `f` over the parquet footers of `files` on the driver, results
     * in file order — the ONE footer reader behind every metadata answer
@@ -68,9 +66,12 @@ object Sinks {
     * and no Spark job runs. Footer reads are independent metadata GETs,
     * fanned out on a bounded pool so the latency stays ~constant in file
     * count against an object store (a serial loop would cost files × RTT
-    * on the driver). */
-  def footerFold[F, A](files: Seq[F])(
-      open: F => org.apache.parquet.io.InputFile)(
+    * on the driver). Each file opens with read options taken from `conf`
+    * (the session's Hadoop conf): parquet's default options would build a
+    * fresh Hadoop `Configuration`, re-parsing its XML defaults, per footer. */
+  def footerFold[A](
+      conf: org.apache.hadoop.conf.Configuration,
+      files: Seq[org.apache.hadoop.fs.FileStatus])(
       f: org.apache.parquet.hadoop.metadata.ParquetMetadata => A): Seq[A] =
     if (files.isEmpty) Nil
     else {
@@ -80,7 +81,9 @@ object Sinks {
         val futures = files.map(file =>
           pool.submit(new java.util.concurrent.Callable[A] {
             def call(): A = {
-              val reader = org.apache.parquet.hadoop.ParquetFileReader.open(open(file))
+              val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+                org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf),
+                org.apache.parquet.HadoopReadOptions.builder(conf, file.getPath).build())
               try f(reader.getFooter) finally reader.close()
             }
           }))
@@ -189,12 +192,10 @@ object Sinks {
   def footerIdentityCurrent(
       spark: SparkSession, path: String, idCol: String): Option[Long] =
     try {
-      val conf = spark.sparkContext.hadoopConfiguration
       val files = committedFiles(spark, path)
       if (files.isEmpty) None
       else {
-        val perFile = footerFold(files)(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(_, conf))(
+        val perFile = footerFold(spark.sparkContext.hadoopConfiguration, files)(
           footerMax(_, idCol))
         if (perFile.contains(None)) None
         else Some(perFile.flatten.flatten.maxOption.getOrElse(0L))

@@ -89,11 +89,9 @@ object Catalog {
     * are now.
     */
   def collect(spark: SparkSession, sfDir: String, name: String): TableMeta = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val files = Sinks.committedFiles(spark, s"$sfDir/$name.parquet")
     declared(name).copy(
-      rowCount = Sinks.footerRowCount(files)(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(_, conf)),
+      rowCount = Sinks.footerRowCount(spark.sparkContext.hadoopConfiguration, files),
       sizeBytes = files.map(_.getLen).sum)
   }
 

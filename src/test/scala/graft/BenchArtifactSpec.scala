@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Gates over bench records — the two committed ones (`BENCH_full.json`
-  * at sf0.1, `BENCH_full_sf001.json` at sf0.001) and one rendered by
+/** Gates over bench records — the committed ones (`BENCH_full.json`
+  * at sf0.1, `BENCH_full_sf001.json` at sf0.001, `BENCH_full_c4.json` at
+  * sf0.1 on a 4-wide session) and one rendered by
   * `Bench.renderFull` itself, so the writer cannot drift from the gates
   * — plus the landing rule that decides whether a fresh record may
   * replace a committed one.
@@ -174,6 +175,12 @@ class BenchArtifactSpec extends AnyFunSuite {
   test("both committed records carry a host fingerprint and retention provenance") {
     for (p <- Seq("BENCH_full.json", "BENCH_full_sf001.json"))
       recordGates(p, artifact(p))
+  }
+
+  test("the sf0.1 record at a 4-wide session passes the gates and says its width") {
+    val root = artifact("BENCH_full_c4.json")
+    assert(recordGates("BENCH_full_c4.json", root) >= 100)
+    assert(root.path("host").path("session_cpus").asInt() == 4)
   }
 
   test("a record rendered by renderFull passes the committed-record gates") {

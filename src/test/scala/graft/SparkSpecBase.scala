@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs; mirrors the Verify/Bench session
-  * config (UTC, nanosAsLong for events.ts).
+/** Shared local session for specs: the Verify/Bench session
+  * ([[GraftSession.build]]) at width 4.
   */
 trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -68,34 +68,8 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpecBase {
-  // one session across all suites — sbt runs suites sequentially in one JVM
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      // same ObjectHashAggregate headroom as GraftSession (grouped
-      // object-buffer aggregates such as collect_list)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 65536)
-      // per-process like GraftSession: a concurrent Verify/Bench JVM must
-      // never share the warehouse the bucketed-table tests rewrite
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse_" +
-          java.lang.ProcessHandle.current().pid())
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // testdata is read-only: persisted pipeline state goes to scratch
-    // instead of its production default beside the corpus
-    graft.ops.PersistedState.relocateToScratch(s)
-    // pin derby.system.home before ANY spec can boot the embedded
-    // engine: a spec reaching a raw jdbc:derby: URL (PipelineSpec's
-    // truncate probe) ahead of DerbyEnv would otherwise drop derby.log
-    // into the repo root for the rest of the JVM
-    graft.exec.DerbyEnv.home
-    s
-  }
+  // one session across all suites — sbt runs suites sequentially in one
+  // JVM; built by the entry points' own builder, so the specs run the
+  // confs (and the local filesystem) that ship
+  lazy val session: SparkSession = GraftSession.build("4")
 }
