@@ -219,6 +219,12 @@ object Scans {
   def logicalSlice(df: DataFrame, key: Column, count: Int, index: Int): DataFrame =
     df.filter(pmod(key, lit(count.toLong)) === lit(index.toLong))
 
+  /** Year mapped to partition ordinal 0 by the synthetic RANGE partition
+    * function over the testdata (shared with [[SqlGen.whereClause]] so
+    * the SQL-text and DataFrame paths can never drift apart).
+    */
+  val DefaultEpochYear = 1994
+
   /** Physical-partition scan — `WHERE $partition.pf(col) = n`
     * (`CopyInfo.cs:47-56`) in its RANGE form: the partition function
     * `pf(col) = n` expressed as raw-column bounds
@@ -226,16 +232,7 @@ object Scans {
     * PUSH DOWN to the parquet scan (row-group min/max pruning; partition
     * pruning on a date-partitioned layout) — check `.explain`:
     * `PushedFilters: [GreaterThanOrEqual(l_shipdate,…), LessThan(…)]`.
-    * (An expression-equality form `pf(col) === n` existed and was
-    * removed: it cannot push down, and every caller had already moved
-    * here.)
     */
-  /** Year mapped to partition ordinal 0 by the synthetic RANGE partition
-    * function over the testdata (shared with [[SqlGen.whereClause]] so
-    * the SQL-text and DataFrame paths can never drift apart).
-    */
-  val DefaultEpochYear = 1994
-
   def physicalPartitionRange(df: DataFrame, colName: String, n: Int,
       epochYear: Int = DefaultEpochYear): DataFrame = {
     // Bounds cast to the column's OWN type (TIMESTAMP vs TIMESTAMP_NTZ

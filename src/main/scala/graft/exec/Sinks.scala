@@ -263,88 +263,95 @@ object Sinks {
   }
 
   /** Destination-table existence via connection metadata — the ONE
-    * definition the JDBC append guard and the streaming upsert share.
-    * The name is LIKE-escaped before reaching `getTables` ('_' and '%'
-    * are wildcards in its pattern argument, so an unescaped
-    * "stream_events" also matches "streamXevents"), and the case-folded
-    * spelling is probed too (unquoted identifiers store folded —
-    * Derby/most engines upper). Throws on connection failure: absence
-    * and unreachability are DIFFERENT answers, and hiding the latter
-    * behind a sentinel is how a guard gets spuriously tripped or
-    * silently disabled.
+    * definition the JDBC append guard and the streaming upsert share:
+    * true when [[resolveTable]] finds the name in its schema. Throws on
+    * connection failure: absence and unreachability are DIFFERENT
+    * answers, and hiding the latter behind a sentinel is how a guard
+    * gets spuriously tripped or silently disabled.
     */
   def jdbcTableExists(
-      url: String, table: String, props: java.util.Properties): Boolean = {
-    val conn = java.sql.DriverManager.getConnection(url, props)
-    try jdbcTableExists(conn, table) finally conn.close()
-  }
+      url: String, table: String, props: java.util.Properties): Boolean =
+    withConn(url, props)(jdbcTableExists(_, table))
 
   /** Connection-reusing overload: a caller that already holds the
     * connection (the streaming upsert probes and then DELETEs on one)
     * must not pay a second connection per micro-batch for the probe.
-    *
-    * The probe is scoped to the connection's CURRENT schema (the schema
-    * the subsequent unqualified read/load resolves against): with a null
-    * schema pattern, a same-named table in ANY other schema — another
-    * user's, say — would make the probe answer true while the load's
-    * count resolves a DIFFERENT (or absent) table, turning the append
-    * guard into either a spurious 'table not found' failure or a probe
-    * of the wrong table. Drivers that don't expose a current schema
-    * (null / SQLFeatureNotSupported) fall back to the unscoped search.
-    * Matches are verified by exact CASE-INSENSITIVE name (and schema)
-    * equality on the result rows: case-insensitive because identifier
-    * case is catalog folding, not identity — a table stored as
-    * `Stream_Events` on a case-insensitive engine IS the table an
-    * unqualified `stream_events` load resolves, and an exact-case
-    * filter would turn the probe false for it (silently disabling the
-    * streaming upsert's idempotency DELETE). Wildcards stay tight
-    * either way: `STREAMXEVENTS` never equals `stream_events` under
-    * any case folding, so a driver reporting an empty or multi-char
-    * `getSearchStringEscape` — where LIKE wildcards can't be escaped
-    * at all — still can't produce a false positive via a live '_'/'%'.
+    * The probe stops at the first name pattern that matches. */
+  def jdbcTableExists(conn: java.sql.Connection, table: String): Boolean =
+    resolveTable(conn, table).exists
+
+  /** A destination table name and what the catalog stores for it.
+    * `schema` is the name's qualified part, else the connection's
+    * current schema (null: unscoped); `hits` are the stored
+    * (schema, name) pairs equal to it ignoring case, probed lazily one
+    * name pattern at a time. Case-insensitive because identifier case is
+    * catalog folding, not identity: a table stored as `Stream_Events` on
+    * a case-insensitive engine IS the table an unqualified
+    * `stream_events` load resolves.
     */
-  def jdbcTableExists(conn: java.sql.Connection, table: String): Boolean = {
-    val meta = conn.getMetaData
-    // A SCHEMA-QUALIFIED name ("APP.stream_events") names its own
-    // schema: the probe must scope there, not to the connection's
-    // current schema — the dot is NOT part of any TABLE_NAME, so
-    // passing the full string as the name pattern matches nothing and
-    // the probe answers false for a table the load resolves fine
-    // (silently skipping the streaming upsert's idempotency DELETE on
-    // every replayed batch). Simple two-part split: the engine's names
-    // never carry quoted dots.
+  private final case class Resolved(
+      schema: String, name: String, hits: LazyList[(String, String)]) {
+    def exists: Boolean = hits.nonEmpty
+    def stored: Option[(String, String)] =
+      exactElseUnique(hits) { case (s, n) => n == name && (schema == null || s == schema) }
+    /** The quoted two-part name every statement uses: the stored
+      * spelling, else the literal parts (an absent or ambiguous table
+      * then fails loudly in the database). Quoting each part keeps a
+      * dot or quote in a name from breaking or injecting a statement. */
+    def sql: String = {
+      val (s, n) = stored.getOrElse((schema, name))
+      Option(s).fold("")(quoteIdent(_) + ".") + quoteIdent(n)
+    }
+  }
+
+  /** The exact-case match, else the unique match; None when absent or
+    * ambiguous (two spellings differing only by case) — never a guess.
+    * The one picking rule for a table and for its identity column. */
+  private def exactElseUnique[A](matches: Seq[A])(exact: A => Boolean): Option[A] =
+    matches.find(exact).orElse(
+      if (matches.distinct.size == 1) matches.headOption else None)
+
+  /** The ONE answer to "which stored table does this name mean", behind
+    * existence, COUNT and identity sync — the reference names every
+    * table once, as `[schema].[table]` (`SmartBulkCopy.cs:836`).
+    *   - Scope: a qualified `schema.name` names its schema (simple
+    *     two-part split: the engine's names never carry quoted dots);
+    *     otherwise the connection's current schema, which an unqualified
+    *     load resolves against. A same-named table in another schema
+    *     never answers.
+    *   - Probe: `getTables` with the literal spelling, then both catalog
+    *     folds (unquoted DDL stores upper on Derby/Oracle/DB2, lower on
+    *     PostgreSQL; name patterns are case-sensitive). Each pattern is
+    *     LIKE-escaped ('_' and '%' are wildcards, so a raw
+    *     "stream_events" also matches "streamXevents"). The schema
+    *     pattern stays null: scoping happens in the case-insensitive
+    *     row filter, since a schema pattern in any one fold misses a
+    *     catalog that stored it in another.
+    *   - Match: rows whose name, and schema when one is known, are
+    *     equal ignoring case — which also keeps a live wildcard (an
+    *     unusable escape character) from producing a false match.
+    */
+  private def resolveTable(conn: java.sql.Connection, table: String): Resolved = {
     val dot = table.indexOf('.')
     val (schema, name) =
       if (dot > 0 && dot < table.length - 1)
         (table.substring(0, dot), table.substring(dot + 1))
       else (currentSchemaOrNull(conn), table)
+    val meta = conn.getMetaData
     val escaped = likeEscaper(meta)
-    // Schema scoping happens in the CASE-INSENSITIVE post-filter on
-    // TABLE_SCHEM, with a null (unscoped) schema PATTERN: getTables
-    // patterns are case-sensitive, so a pattern spelled in any one fold
-    // misses a catalog that stored the schema in another ("app" never
-    // pattern-matches APP even though they name the same schema) —
-    // whereas equalsIgnoreCase covers every fold at once. The result
-    // set stays tiny either way: it is bounded by same-NAMED tables
-    // across schemas, and the name pattern is LIKE-escaped tight.
-    def one(n: String): Boolean = {
-      val rs = meta.getTables(null, null, escaped(n), null)
-      try {
-        var found = false
-        while (!found && rs.next())
-          found = n.equalsIgnoreCase(rs.getString("TABLE_NAME")) &&
-            (schema == null || schema.equalsIgnoreCase(rs.getString("TABLE_SCHEM")))
-        found
-      } finally rs.close()
+    def probe(pattern: String): List[(String, String)] = {
+      val rs = meta.getTables(null, null, escaped(pattern), null)
+      try Iterator.continually(rs).takeWhile(_.next())
+        .map(r => (r.getString("TABLE_SCHEM"), r.getString("TABLE_NAME")))
+        .filter { case (s, n) =>
+          name.equalsIgnoreCase(n) && (schema == null || schema.equalsIgnoreCase(s))
+        }.toList
+      finally rs.close()
     }
-    // probe the literal spelling plus BOTH catalog folds of the NAME:
-    // engines fold unquoted DDL to upper (Derby, Oracle, DB2) or to
-    // lower (PostgreSQL), and getTables name patterns are
-    // case-sensitive on both — a miss here silently disables the
-    // append-retry guard downstream
-    Seq(name,
+    val patterns = Seq(name,
       name.toUpperCase(java.util.Locale.ROOT),
-      name.toLowerCase(java.util.Locale.ROOT)).distinct.exists(one)
+      name.toLowerCase(java.util.Locale.ROOT)).distinct
+    Resolved(schema, name, patterns.to(LazyList).flatMap(probe))
   }
 
   /** The connection's current schema, or null where the driver doesn't
@@ -357,14 +364,11 @@ object Sinks {
       case _: AbstractMethodError   => null // pre-JDBC-4.1 driver
     }
 
-  /** LIKE-pattern escaper for `DatabaseMetaData.getTables` arguments:
-    * '_' and '%' are wildcards in BOTH the schema and table pattern
-    * slots, so any identifier passed there raw LIKE-matches sibling
-    * names (`my_schema` matches `myXschema`). Only a single-char
-    * `getSearchStringEscape` is usable in a LIKE pattern; an empty or
-    * multi-char one would corrupt the pattern instead of escaping it —
-    * then wildcards stay live and the caller's exact post-filter on
-    * TABLE_NAME/TABLE_SCHEM is the guard. */
+  /** LIKE-pattern escaper for `DatabaseMetaData.getTables` arguments.
+    * Only a single-char `getSearchStringEscape` is usable in a LIKE
+    * pattern; an empty or multi-char one would corrupt the pattern
+    * instead of escaping it — then wildcards stay live and the
+    * resolver's exact row filter is the guard. */
   private def likeEscaper(
       meta: java.sql.DatabaseMetaData): String => String = {
     val esc = meta.getSearchStringEscape
@@ -375,6 +379,12 @@ object Sinks {
         if (c.toString == esc || c == '_' || c == '%') s"$esc$c"
         else c.toString
       }
+  }
+
+  private def withConn[A](url: String, props: java.util.Properties)(
+      f: java.sql.Connection => A): A = {
+    val conn = java.sql.DriverManager.getConnection(url, props)
+    try f(conn) finally conn.close()
   }
 
   /** Live-database reseed — the literal `DBCC CHECKIDENT('t', RESEED, n)`
@@ -393,18 +403,17 @@ object Sinks {
       // same credential channel as every other JDBC entry point here —
       // a credentialed destination that copies fine must not fail its
       // identity sync because this one call dropped the Properties
-      props: java.util.Properties = new java.util.Properties()): Unit = {
-    val conn = java.sql.DriverManager.getConnection(url, props)
-    try {
-      val target = resolveIdentityTarget(conn, table, idCol).getOrElse(
+      props: java.util.Properties = new java.util.Properties()): Unit =
+    withConn(url, props) { conn =>
+      val t = resolveTable(conn, table)
+      val (column, _) = identityColumn(conn, t, idCol).getOrElse(
         throw new java.sql.SQLException(
           s"identity target $table.$idCol not found in destination catalog"))
       val st = conn.createStatement()
       try st.execute(
-        s"""ALTER TABLE ${quoteIdent(target._1)} ALTER COLUMN ${quoteIdent(target._2)} RESTART WITH $restartWith""")
+        s"ALTER TABLE ${t.sql} ALTER COLUMN ${quoteIdent(column)} RESTART WITH $restartWith")
       finally st.close()
-    } finally conn.close()
-  }
+    }
 
   /** SQL-safe identifier quoting: the stored catalog spelling wrapped in
     * double quotes with embedded quotes doubled — identifiers never reach
@@ -415,175 +424,65 @@ object Sinks {
     "\"" + name.replace("\"", "\"\"") + "\""
 
   /** One-scalar destination rowcount over a plain JDBC connection — the
-    * probe the append-retry guard and the reconciliation counter use.
-    * `spark.read.jdbc(...).count()` is the wrong tool here: the V1 JDBC
-    * relation has no aggregate pushdown, so a "count" streams one value
-    * per row through a single connection — O(rows) transfer per probe,
-    * run once pre-load plus once per retry attempt, minutes against a
-    * big destination. `SELECT COUNT(*)` returns one scalar and lets the
-    * database do what databases do. The identifier resolves through the
-    * stored catalog spelling where available (same case rules as the
-    * identity sync); a table the catalog probe can't resolve counts
-    * under its literal quoted spelling and fails loudly if absent.
+    * reconciliation counter. `spark.read.jdbc(...).count()` is the wrong
+    * tool here: the V1 JDBC relation has no aggregate pushdown, so a
+    * "count" streams one value per row through a single connection.
+    * `SELECT COUNT(*)` returns one scalar. The table is named through
+    * [[resolveTable]]; an absent or ambiguous one fails loudly.
     */
   def jdbcRowCount(
-      url: String, table: String, props: java.util.Properties): Long = {
-    val conn = java.sql.DriverManager.getConnection(url, props)
-    try rowCountOn(conn, table) finally conn.close()
-  }
+      url: String, table: String, props: java.util.Properties): Long =
+    withConn(url, props)(conn => rowCountOn(conn, resolveTable(conn, table)))
 
-  /** Existence-guarded rowcount on ONE connection — the append-retry
-    * guard's probe ([[Dest.Jdbc]]). None = table absent (a
-    * legitimate first load). Folding exists + count into a single
-    * connection matters because the guard probes once pre-load PLUS
-    * once per retry attempt: the split form paid two connections per
-    * probe (the exact cost the connection-reusing jdbcTableExists
-    * overload was created to avoid).
+  /** Existence-guarded rowcount on ONE connection and one resolution —
+    * the append-retry guard's probe ([[Dest.Jdbc]]), run once pre-load
+    * plus once per retry attempt. None = table absent (a legitimate
+    * first load).
     */
   def jdbcRowCountIfExists(
       url: String, table: String,
-      props: java.util.Properties): Option[Long] = {
-    val conn = java.sql.DriverManager.getConnection(url, props)
-    try {
-      if (!jdbcTableExists(conn, table)) None
-      else Some(rowCountOn(conn, table))
-    } finally conn.close()
-  }
+      props: java.util.Properties): Option[Long] =
+    withConn(url, props) { conn =>
+      val t = resolveTable(conn, table)
+      if (t.exists) Some(rowCountOn(conn, t)) else None
+    }
 
-  private def rowCountOn(conn: java.sql.Connection, table: String): Long = {
+  private def rowCountOn(conn: java.sql.Connection, t: Resolved): Long = {
     val st = conn.createStatement()
     try {
-      val rs = st.executeQuery(s"SELECT COUNT(*) FROM ${countIdentifier(conn, table)}")
+      val rs = st.executeQuery(s"SELECT COUNT(*) FROM ${t.sql}")
       try { rs.next(); rs.getLong(1) } finally rs.close()
     } finally st.close()
   }
 
-  /** The SQL identifier the COUNT statement names — the count path's
-    * twin of jdbcTableExists' two-part split. A SCHEMA-QUALIFIED name
-    * ("APP.stream_events") must quote each part SEPARATELY: wrapping the
-    * whole dotted string as one identifier produces
-    * `SELECT COUNT(*) FROM "APP.stream_events"` — a single (absent)
-    * table whose name contains a dot — so the append-retry probe would
-    * report exists=true (the existence overload splits correctly) and
-    * then fail the count, aborting a load whose first-load path worked
-    * fine before the qualified-name support landed. Each part resolves
-    * to its STORED catalog spelling where the catalog can supply one
-    * (same fold rules as the unqualified path); an unresolvable name
-    * counts under its literal quoted parts and fails loudly if absent.
+  /** The stored spelling of identity column `idCol` on the resolved
+    * table, with its generator's next value (`None`: no generator), from
+    * ONE Derby catalog query scoped to the table's schema. The column
+    * matches case-insensitively — unquoted DDL stores it uppercase,
+    * quoted lowercase DDL as written — and is picked by
+    * [[exactElseUnique]]. None too for an unresolved table.
     */
-  private def countIdentifier(conn: java.sql.Connection, table: String): String = {
-    val dot = table.indexOf('.')
-    if (dot > 0 && dot < table.length - 1) {
-      val (schemaPart, namePart) = (table.substring(0, dot), table.substring(dot + 1))
-      val stored =
-        try storedQualifiedName(conn, schemaPart, namePart)
-        catch { case _: java.sql.SQLException => None }
-      val (s, n) = stored.getOrElse((schemaPart, namePart))
-      quoteIdent(s) + "." + quoteIdent(n)
-    } else {
-      val stored =
-        try storedTableName(conn, table) catch { case _: java.sql.SQLException => None }
-      quoteIdent(stored.getOrElse(table))
+  private def identityColumn(conn: java.sql.Connection, t: Resolved,
+      idCol: String): Option[(String, Option[Long])] =
+    t.stored.flatMap { case (schema, name) =>
+      val st = conn.prepareStatement(
+        """SELECT c.COLUMNNAME, c.AUTOINCREMENTVALUE FROM SYS.SYSCOLUMNS c
+          |JOIN SYS.SYSTABLES t ON c.REFERENCEID = t.TABLEID
+          |JOIN SYS.SYSSCHEMAS s ON t.SCHEMAID = s.SCHEMAID
+          |WHERE s.SCHEMANAME = ? AND t.TABLENAME = ?
+          |AND UPPER(c.COLUMNNAME) = UPPER(?)""".stripMargin)
+      try {
+        st.setString(1, schema)
+        st.setString(2, name)
+        st.setString(3, idCol)
+        val rs = st.executeQuery()
+        val cols = Iterator.continually(rs).takeWhile(_.next()).map { r =>
+          val next = r.getLong(2)
+          (r.getString(1), if (r.wasNull()) None else Some(next))
+        }.toList
+        exactElseUnique(cols)(_._1 == idCol)
+      } finally st.close()
     }
-  }
-
-  /** The STORED catalog spellings of a schema-qualified (schema, table)
-    * pair, case-insensitively on BOTH parts — the qualified twin of
-    * [[storedTableName]]. The schema PATTERN slot is left null and the
-    * scope enforced by a case-insensitive post-filter on TABLE_SCHEM
-    * (patterns are case-sensitive, so any one spelling of the schema
-    * would miss a catalog that folded it differently — the same
-    * reasoning as jdbcTableExists); the name pattern is probed across
-    * the literal spelling plus both catalog folds, LIKE-escaped, which
-    * bounds the result set to same-named tables across schemas. An
-    * exact-case match on both parts wins; otherwise a UNIQUE
-    * case-insensitive match; ambiguity resolves to None — the caller
-    * falls back to the literal spelling rather than guess.
-    */
-  private def storedQualifiedName(
-      conn: java.sql.Connection, schema: String,
-      name: String): Option[(String, String)] = {
-    val meta = conn.getMetaData
-    val escaped = likeEscaper(meta)
-    var exact: Option[(String, String)] = None
-    val folded = scala.collection.mutable.LinkedHashSet.empty[(String, String)]
-    val patterns = Seq(name,
-      name.toUpperCase(java.util.Locale.ROOT),
-      name.toLowerCase(java.util.Locale.ROOT)).distinct
-    patterns.foreach { pat =>
-      if (exact.isEmpty) {
-        val rs = meta.getTables(null, null, escaped(pat), null)
-        try while (exact.isEmpty && rs.next()) {
-          val s = rs.getString("TABLE_SCHEM")
-          val n = rs.getString("TABLE_NAME")
-          if (s != null && s.equalsIgnoreCase(schema) && n.equalsIgnoreCase(name)) {
-            if (s == schema && n == name) exact = Some((s, n))
-            else folded += ((s, n))
-          }
-        } finally rs.close()
-      }
-    }
-    exact.orElse(if (folded.size == 1) folded.headOption else None)
-  }
-
-  /** The STORED catalog spelling of a table name in the connection's
-    * current schema (case-insensitive lookup, exact match preferred) —
-    * so quoted statements hit the same table an unqualified Spark load
-    * resolves, whatever the catalog's fold. */
-  private def storedTableName(
-      conn: java.sql.Connection, table: String): Option[String] = {
-    val meta = conn.getMetaData
-    val schema = currentSchemaOrNull(conn)
-    // The schema is LIKE-ESCAPED like every other getTables pattern slot
-    // (a schema containing '_' would otherwise match sibling schemas and
-    // a same-named table there would break the unique-folded-name rule),
-    // and result rows are verified on TABLE_SCHEM besides — escaping
-    // alone can't guard when the driver's escape char is unusable.
-    val escaped = likeEscaper(meta)
-    val rs = meta.getTables(
-      null, if (schema == null) null else escaped(schema), "%", null)
-    try {
-      var exact: Option[String] = None
-      val folded = scala.collection.mutable.Buffer.empty[String]
-      while (rs.next()) {
-        val inSchema = schema == null ||
-          schema.equalsIgnoreCase(rs.getString("TABLE_SCHEM"))
-        if (inSchema) {
-          val n = rs.getString("TABLE_NAME")
-          if (n == table) exact = Some(n)
-          else if (n.equalsIgnoreCase(table)) folded += n
-        }
-      }
-      exact.orElse(if (folded.size == 1) folded.headOption else None)
-    } finally rs.close()
-  }
-
-  /** Resolve the STORED spellings of (table, identity column) from the
-    * destination catalog, case-insensitively on BOTH identifiers — a
-    * destination created with unquoted DDL stores them uppercase, one
-    * created with quoted lowercase DDL stores them as written; the sync
-    * must find the generator either way. An exact-case match wins;
-    * otherwise a UNIQUE case-insensitive match; two columns differing only
-    * by case resolve to None — unverifiable, never a guess.
-    */
-  private def resolveIdentityTarget(
-      conn: java.sql.Connection, table: String, idCol: String): Option[(String, String)] = {
-    val st = conn.prepareStatement(
-      """SELECT t.TABLENAME, c.COLUMNNAME FROM SYS.SYSCOLUMNS c
-        |JOIN SYS.SYSTABLES t ON c.REFERENCEID = t.TABLEID
-        |WHERE UPPER(t.TABLENAME) = UPPER(?) AND UPPER(c.COLUMNNAME) = UPPER(?)""".stripMargin)
-    try {
-      st.setString(1, table)
-      st.setString(2, idCol)
-      val rs = st.executeQuery()
-      val rows = Iterator.continually(rs)
-        .takeWhile(_.next())
-        .map(r => (r.getString(1), r.getString(2)))
-        .toList
-      rows.find { case (t, c) => t == table && c == idCol }
-        .orElse(if (rows.size == 1) rows.headOption else None)
-    } finally st.close()
-  }
 
   /** Read-back of a live destination's identity generator from the Derby
     * catalog (`SYS.SYSCOLUMNS.AUTOINCREMENTVALUE`) — the second
@@ -591,33 +490,12 @@ object Sinks {
     * sink: the reseed must be OBSERVABLE on the destination, never
     * assumed. `None` when the column carries no generator (the
     * destination's `TableHasIdentity = 0` case — and the unverifiable-
-    * reseed failure class when a sync was requested anyway). Identifier
-    * matching is case-insensitive on BOTH table and column (via
-    * [[resolveIdentityTarget]]) so a destination whose identity column was
-    * created unquoted (stored uppercase) still verifies.
+    * reseed failure class when a sync was requested anyway).
     */
   def identitySeedJdbc(url: String, table: String, idCol: String,
-      props: java.util.Properties = new java.util.Properties()): Option[Long] = {
-    val conn = java.sql.DriverManager.getConnection(url, props)
-    try {
-      resolveIdentityTarget(conn, table, idCol).flatMap { case (t, c) =>
-        val st = conn.prepareStatement(
-          """SELECT c.AUTOINCREMENTVALUE FROM SYS.SYSCOLUMNS c
-            |JOIN SYS.SYSTABLES t ON c.REFERENCEID = t.TABLEID
-            |WHERE t.TABLENAME = ? AND c.COLUMNNAME = ?""".stripMargin)
-        try {
-          st.setString(1, t)
-          st.setString(2, c)
-          val rs = st.executeQuery()
-          if (!rs.next()) None
-          else {
-            val v = rs.getLong(1)
-            if (rs.wasNull()) None else Some(v)
-          }
-        } finally st.close()
-      }
-    } finally conn.close()
-  }
+      props: java.util.Properties = new java.util.Properties()): Option[Long] =
+    withConn(url, props)(conn =>
+      identityColumn(conn, resolveTable(conn, table), idCol).flatMap(_._2))
 
   /** Read-back of the destination identity seed — the second
     * `IDENT_CURRENT` probe of the reference's sync
@@ -696,8 +574,12 @@ object Dest {
   }
 
   /** A live database. Spark's writer creates an absent table on the
-    * driver before its job runs; overwrite issues `TRUNCATE TABLE`, not
-    * DROP, so destination DDL and identity generators survive the load
+    * driver before its job runs. That departs from the reference, which
+    * exits at analysis with `DestinationTableDoNotExists` (ordinal 3).
+    * It stays until perfbench's warm-up copy, which relies on the
+    * creation for its Derby table, creates that table itself.
+    * Overwrite issues `TRUNCATE TABLE`, not DROP, so destination DDL
+    * and identity generators survive the load
     * (`SmartBulkCopy.cs:391-396`). Counts are one-scalar `COUNT(*)`
     * probes: `spark.read.jdbc` has no aggregate pushdown, so counting
     * through it streams every row over one connection. */

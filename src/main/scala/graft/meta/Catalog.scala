@@ -104,10 +104,6 @@ object Catalog {
   // 2 = nonclustered (reference `TableInfoCollector.cs:220-368`).
   // ---------------------------------------------------------------------
 
-  /** Raw catalog rows, shared by the Spark DataFrames below and the DuckDB
-    * oracle `VALUES` CTEs ([[valuesCte]]) so both sides of the correctness
-    * gate are generated from one source of truth.
-    */
   /** History-table name → synthesized object_id (100, 101, …): each
     * temporal table points at ITS OWN history table's id — a second
     * declared temporal pair must not alias the first one's history rows.
@@ -116,6 +112,10 @@ object Catalog {
     tableNames.flatMap(n => declared(n).history.map(_.historyTable))
       .distinct.zipWithIndex.map { case (h, k) => h -> (100 + k) }.toMap
 
+  /** Raw catalog rows, shared by the Spark DataFrames below and the DuckDB
+    * oracle `VALUES` CTEs ([[valuesCte]]) so both sides of the correctness
+    * gate are generated from one source of truth.
+    */
   lazy val tableRows: Seq[(Int, String, String, Option[Int], Option[Int])] = {
     tableNames.zipWithIndex.map { case (n, i) =>
       val m = declared(n)

@@ -740,12 +740,20 @@ object SimilarityQueries {
     * the breaker's LIVE lock and admit a third maintainer — the
     * documented two-maintainer TTL overlap must not cascade. Reading
     * then deleting is not atomic, but it confines the hazard to the
-    * already-documented overlap window instead of widening it. */
+    * already-documented overlap window instead of widening it. The
+    * token is read with checksums off: a lock rewritten without its
+    * `.crc` (another tool, a breaker writing plain bytes) is judged by
+    * its content, not refused with a `ChecksumException`. The delete
+    * goes through `fs`, so the `.crc` goes with the lock. */
   private def releaseRetrainLock(
       s: SparkSession, lock: org.apache.hadoop.fs.Path, token: String): Unit =
     try {
       val fs = lock.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val in = fs.open(lock)
+      val raw = fs match {
+        case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+        case other => other
+      }
+      val in = raw.open(lock)
       val buf = new Array[Byte](256)
       val n = try in.read(buf) finally in.close()
       val content = if (n > 0) new String(buf, 0, n, "UTF-8") else ""

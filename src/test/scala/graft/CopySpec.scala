@@ -370,6 +370,68 @@ class CopySpec extends SparkSpecBase {
     } finally c2.close()
   }
 
+  /** A fresh Derby database holding `APP.SUPPLIER` with an identity
+    * generator plus `otherDdl` (a same-named table in another schema). */
+  private def supplierWithTwin(name: String, otherDdl: String): String = {
+    val url = freshDerbyDb(name)
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val st = conn.createStatement()
+      st.execute(
+        """CREATE TABLE supplier (
+          |  "s_suppkey" BIGINT GENERATED BY DEFAULT AS IDENTITY
+          |    (START WITH 1, INCREMENT BY 1),
+          |  "s_name" VARCHAR(128),
+          |  "s_nationkey" INTEGER,
+          |  "s_acctbal" DOUBLE)""".stripMargin)
+      st.execute("CREATE SCHEMA OTHERUSER")
+      st.execute(otherDdl)
+      st.close()
+    } finally conn.close()
+    url
+  }
+
+  /** Copy supplier into `url` with identity sync: exits 0, reseeds the
+    * current schema's table to IDENT_CURRENT + 1, and leaves the
+    * other schema's `otherTable` generator at its start value. */
+  private def assertSyncScopedToCurrentSchema(url: String, otherTable: String): Unit = {
+    assert(Copy.run(spark, sfDir, url, Seq("supplier"),
+      truncateTables = true, syncIdentity = true) == 0)
+    val identCurrent = exec.Sinks.identityCurrent(
+      Scans.table(spark, sfDir, "supplier"), "s_suppkey")
+    assert(exec.Sinks.identitySeedJdbc(url, "supplier", "s_suppkey")
+      .contains(identCurrent + 1))
+    assert(exec.Sinks.identitySeedJdbc(url, otherTable, "s_suppkey").contains(1L),
+      "identity sync reseeded the other schema's table")
+  }
+
+  test("identity sync ignores a same-named table in another schema") {
+    val url = supplierWithTwin("copydest_twin",
+      """CREATE TABLE OTHERUSER.SUPPLIER (
+        |  "s_suppkey" BIGINT GENERATED BY DEFAULT AS IDENTITY
+        |    (START WITH 1, INCREMENT BY 1))""".stripMargin)
+    assertSyncScopedToCurrentSchema(url, "OTHERUSER.SUPPLIER")
+  }
+
+  test("identity sync ignores a quoted-lowercase twin in another schema") {
+    // the twin's spelling equals the caller's exactly; the current
+    // schema's uppercase-stored table is still the one the copy loaded
+    val url = supplierWithTwin("copydest_lctwin",
+      """CREATE TABLE OTHERUSER."supplier" (
+        |  "s_suppkey" BIGINT GENERATED BY DEFAULT AS IDENTITY
+        |    (START WITH 1, INCREMENT BY 1))""".stripMargin)
+    assertSyncScopedToCurrentSchema(url, "OTHERUSER.supplier")
+  }
+
+  test("identity sync resolves a schema-qualified destination name") {
+    val url = supplierWithTwin("copydest_qualified",
+      "CREATE TABLE OTHERUSER.UNRELATED (id INT)")
+    val props = new java.util.Properties()
+    props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+    assert(exec.Dest.Jdbc(url, props).syncIdentity("APP.supplier", "s_suppkey", 4241L))
+    assert(exec.Sinks.identitySeedJdbc(url, "supplier", "s_suppkey").contains(4242L))
+  }
+
   test("jdbc destination without an identity generator fails sync with 2") {
     // reseed against a plain column throws in the database — the
     // reference's unverifiable-reseed branch, never a silent success

@@ -789,6 +789,33 @@ class QueriesSpec extends SparkSpecBase {
     }
   }
 
+  test("sim_cell_retrain: release judges a lock rewritten without its .crc by content") {
+    import graft.ops.SimilarityQueries
+    // a lock rewritten by a tool that does not update the checksum
+    // sidecar still carries our token: release must read it as ours
+    // and delete it (with its .crc), not fail on the stale checksum
+    val root = java.nio.file.Files.createTempDirectory("graft_ivf_nocrc")
+    val layout = root.resolve("layout").toString
+    val lock = java.nio.file.Paths.get(layout, SimilarityQueries.RetrainLockName)
+    try {
+      SimilarityQueries.writeOptBase(spark, sfDir, layout)
+      SimilarityQueries.retrainPostLockHook = () => {
+        val ours = java.nio.file.Files.readAllBytes(lock)
+        java.nio.file.Files.write(lock, ours ++ "rewritten by hand\n".getBytes("UTF-8"))
+        ()
+      }
+      SimilarityQueries.retrainIfSkewed(spark, sfDir, layout)
+      assert(!java.nio.file.Files.exists(lock),
+        "release left our own lock standing after a .crc-less rewrite")
+      assert(!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(layout, s".${SimilarityQueries.RetrainLockName}.crc")),
+        "release left the lock's checksum sidecar behind")
+    } finally {
+      SimilarityQueries.retrainPostLockHook = () => ()
+      deleteTree(root)
+    }
+  }
+
   test("SNM hot-cell bound: pairs stay ≤ 4·H·n when ALL vectors share one cell") {
     // The 100 TB skew claim (≤ 2·c·H unordered pairs per cell, linear
     // in cell size) pinned by construction: a synthetic corpus whose
